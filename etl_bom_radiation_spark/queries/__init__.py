@@ -17,6 +17,7 @@ deterministically.
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -37,14 +38,10 @@ class Query:
     #: temp workspace — streaming (t01/t05/t08) or lifecycle (d01-d04,
     #: n50): seconds of wall-clock + catalog/filesystem mutation per
     #: call. Registry-wide sweeps that only inspect plans (window lint,
-    #: gen_plans) should skip these (ADVICE r3). Orthogonal to the
-    #: oracle: a side-effecting entry WITH an oracle (n50) still gets
-    #: the driver's exact hash check.
+    #: gen_plans) should skip these. Orthogonal to the oracle: a
+    #: side-effecting entry WITH an oracle (n50) still gets the exact
+    #: oracle hash check.
     streaming: bool = False
-    #: dotted module the implementation was registered from — the freshness
-    #: ordering uses its git last-commit time to detect entries modified
-    #: after their last driver check (VERDICT r8 #1).
-    module: str = ""
 
 
 REGISTRY: dict[str, Query] = {}
@@ -77,19 +74,17 @@ def register(name: str, oracle: str | None = None, streaming: bool = False):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
 
+        @functools.wraps(fn)
         def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             return fn(spark, sf_dir)
 
-        pinned.__name__ = fn.__name__
-        pinned.__doc__ = fn.__doc__
         REGISTRY[name] = Query(
             name=name,
             fn=pinned,
             oracle=oracle,
             doc=fn.__doc__ or "",
             streaming=streaming,
-            module=fn.__module__,
         )
         return fn
 
@@ -137,7 +132,7 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     normalized TIMESTAMP ``ts`` as the DataFrame path — and must NOT pass
     through ``load_tables`` first: its eager schema read would throw
     ILLEGAL_PARQUET_TYPE on a TIMESTAMP(NANOS) fixture before load_events
-    gets the chance to set the nanosAsLong conf (code-review r4)."""
+    gets the chance to set the nanosAsLong conf."""
     names = names or TABLES
     for n in names:
         df = (
@@ -148,10 +143,11 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
         df.createOrReplaceTempView(n)
 
 
-# Module import order is also the fallback registry order when no
-# CORRECTNESS artifact exists (fresh checkout): differentiating families
-# (grid decode, LLM pipeline) lead so a finite correctness window always
-# reaches them.
+# Import order is the registry order: ``load_all`` returns the entries
+# grouped by module in this order.  The differentiating families (grid
+# decode, LLM pipeline) lead.  A module that uses ``@register`` is wired
+# in only by being named here (tests/test_registry.py checks none is
+# left out).
 _MODULES = [
     "grid_queries",
     "llm_queries",
@@ -160,9 +156,6 @@ _MODULES = [
     "scalar_funcs",
     "relational",
     "windows_setops",
-    # LAST on purpose: entries new in round 4 must sort behind the 16
-    # never-driver-verified queries above (stable sort keeps module order
-    # within the unverified group — VERDICT r3 #1)
     "lifecycle",
     "chunking",
     "stream_joins",
@@ -202,254 +195,15 @@ _MODULES = [
 ]
 
 
-def _last_verified_round() -> dict[str, int]:
-    """Map query name -> the most recent driver round whose
-    ``CORRECTNESS_r*.json`` holds a green row for it (``hash_match`` true, or
-    the contractual ``no_oracle`` outcome for approximate/streaming ops).
-    Absent names have never been driver-verified.
-
-    The driver's per-round correctness budget covers a finite prefix of the
-    registry (~50 entries), so ordering is a freshness lever: never-verified
-    queries float to the very front, then the stalest-verified ones — the
-    entries whose evidence is the most testdata-regenerations old.  Across
-    rounds this keeps every query's driver row within a bounded age
-    (VERDICT r4 #1: the 50 r2-window entries rotate front in r5).
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    last: dict[str, int] = {}
-    for p in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(p) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True or row.get("err") == "no_oracle":
-                last[name] = max(rnd, last.get(name, 0))
-    return last
-
-
-_GIT_EPOCHS: dict[str, list[float]] | None = None
-
-
-def _git_commit_epochs() -> dict[str, list[float]]:
-    """Map repo-relative path -> epoch seconds of EVERY commit touching it.
-
-    One ``git log --format=%ct --name-only`` over the whole history.
-    Returns ``{}`` on any failure (no git binary, not a checkout) so the
-    ordering degrades to the plain evidence-round sort.
-    """
-    global _GIT_EPOCHS
-    if _GIT_EPOCHS is not None:
-        return _GIT_EPOCHS
-    import os
-    import subprocess
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    epochs: dict[str, list[float]] = {}
-    try:
-        out = subprocess.run(
-            ["git", "-C", root, "log", "--format=%ct", "--name-only"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-        ).stdout
-        current = 0.0
-        for line in out.splitlines():
-            line = line.strip()
-            if not line:
-                continue
-            if line.isdigit():
-                current = float(line)
-            else:
-                epochs.setdefault(line, []).append(current)
-    except (OSError, subprocess.SubprocessError):
-        epochs = {}
-    _GIT_EPOCHS = epochs
-    return epochs
-
-
-def _artifact_epoch(epochs: dict[str, list[float]], rnd: int) -> float | None:
-    """Commit epoch of ``CORRECTNESS_r{rnd}.json`` (latest if re-committed)."""
-    for p in (f"CORRECTNESS_r{rnd:02d}.json", f"CORRECTNESS_r{rnd}.json"):
-        if p in epochs:
-            return max(epochs[p])
-    return None
-
-
-#: dotted module -> repo-relative paths of the module AND its intra-package
-#: import closure (``_module_dep_paths`` fills it lazily; tests may seed it)
-_DEP_CACHE: dict[str, tuple[str, ...]] = {}
-
-
-def _module_dep_paths(module: str) -> tuple[str, ...]:
-    """Repo-relative source paths whose commits invalidate ``module``'s
-    query evidence: the module itself plus the transitive closure of its
-    in-package imports (VERDICT r9 #2 / ADVICE r9: d04/t11/n50 are thin
-    wrappers over ``lsh_index``, n49/n42 over ``banded_lsh`` helpers —
-    a helper-only commit used to promote nothing).
-
-    The scan is static (``ast`` over the module source, so function-level
-    imports count too — the lifecycle entries import their helpers inside
-    the query body) and deliberately EXCLUDES package ``__init__`` files:
-    every registration module does ``from . import register``, so counting
-    the registry file would make each registry-infrastructure commit mark
-    the entire surface urgent and collapse the stalest-first rotation into
-    module order.  The registration module's OWN path is always watched
-    (its git history may outlive the file); unreadable modules just
-    contribute no closure."""
-    if module in _DEP_CACHE:
-        return _DEP_CACHE[module]
-    import ast
-    import os
-
-    root_pkg = __name__.split(".")[0]
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-    def to_path(dotted: str) -> str | None:
-        rel = dotted.replace(".", "/") + ".py"
-        if os.path.exists(os.path.join(repo, rel)):
-            return rel
-        return None  # package __init__ or missing: excluded by design
-
-    # the module's own path is watched even if the file no longer exists
-    # (the pre-closure behavior: git history is the source of truth)
-    out: list[str] = [module.replace(".", "/") + ".py"]
-    seen: set[str] = {module}
-
-    def scan(dotted: str, rel: str) -> None:
-        try:
-            with open(os.path.join(repo, rel)) as f:
-                tree = ast.parse(f.read())
-        except (OSError, SyntaxError):
-            return
-        pkg_parts = dotted.split(".")[:-1]
-        for node in ast.walk(tree):
-            if isinstance(node, ast.ImportFrom):
-                if node.level > 0:
-                    base = pkg_parts[: len(pkg_parts) - (node.level - 1)]
-                    target = base + (node.module.split(".") if node.module else [])
-                elif node.module and node.module.split(".")[0] == root_pkg:
-                    target = node.module.split(".")
-                else:
-                    continue
-                visit(".".join(target))
-                # ``from <pkg> import X`` may import X as a MODULE, not
-                # an attribute (`from . import lsh_index`) — probe each
-                # name under the target; visit() resolves via to_path,
-                # so attribute names simply miss (ADVICE r10: the bare
-                # relative form used to be skipped silently, and a
-                # refactor to it would have dropped the helper from the
-                # urgency closure with no test failing)
-                for alias in node.names:
-                    visit(".".join(target + [alias.name]))
-            elif isinstance(node, ast.Import):
-                for alias in node.names:
-                    if alias.name.split(".")[0] == root_pkg:
-                        visit(alias.name)
-
-    def visit(dotted: str) -> None:
-        if dotted in seen:
-            return
-        seen.add(dotted)
-        rel = to_path(dotted)
-        if rel is None:
-            return
-        out.append(rel)
-        scan(dotted, rel)
-
-    scan(module, out[0])
-    _DEP_CACHE[module] = tuple(out)
-    return _DEP_CACHE[module]
-
-
-def _urgency(q: Query, evid_round: int, latest_round: int) -> float | None:
-    """Non-None when ``q``'s evidence is INVALID: its registration module
-    OR any in-package helper it (transitively) imports was committed in
-    the interval (evidence artifact, latest artifact] — i.e. the code
-    under the driver evidence changed in a PRIOR round (VERDICT r8 #1;
-    helper closure VERDICT r9 #2: a commit touching only ``lsh_index.py``
-    must promote d04/t11/n50, which register from ``lsh_lifecycle`` but
-    are thin wrappers over it).  The value is the most recent in-interval
-    commit epoch across the dependency set, used as a tiebreak
-    (see load_all).
-
-    Commits AFTER the latest artifact (this round's own work) do not
-    promote: their entries are caught by the next round's window, which is
-    within the one-round re-verification rule — and counting them would let
-    in-round edits churn the ordering mid-round.
-    """
-    if evid_round <= 0 or evid_round >= latest_round:
-        return None
-    epochs = _git_commit_epochs()
-    evid_t = _artifact_epoch(epochs, evid_round)
-    latest_t = _artifact_epoch(epochs, latest_round)
-    if evid_t is None or latest_t is None:
-        return None
-    in_interval = [
-        e
-        for path in _module_dep_paths(q.module)
-        for e in epochs.get(path, [])
-        if evid_t < e <= latest_t
-    ]
-    return max(in_interval) if in_interval else None
-
-
 def load_all() -> dict[str, Query]:
-    """Import every query module (side effect: fills REGISTRY) and return it,
-    reordered for the driver's finite (~50-entry) correctness window:
-
-    1. never-driver-verified entries first (module order);
-    2. then by EFFECTIVE staleness: an unmodified entry's evidence round,
-       but an entry whose module was committed after its evidence artifact
-       (``_urgency``) is clamped to at least the three-round staleness
-       boundary — invalid evidence is treated as no fresher than the oldest
-       evidence the budget rule tolerates, so such entries re-enter the
-       window within one round of the modification (VERDICT r8 #1) without
-       starving the plain rotation;
-    3. within a staleness class: unconditional (unmodified) refreshes
-       first, then urgent entries ordered by their TRUE evidence round
-       (stalest first), most-recently-modified first within the same
-       round.  True-evidence-first matters when a broad helper commit
-       marks most of the registry urgent at once (observed r12: the
-       r9-r11 lsh/scale/banded helper commits made ~50 entries urgent):
-       ordering the whole clamped class by modification recency let
-       r10-evidence entries queue-jump r8-evidence ones and pushed part
-       of the stalest block past the driver's 50-entry window — the
-       exact starvation the rotation exists to prevent.  The clamp
-       already guarantees every urgent entry re-enters within a round;
-       within that guarantee, oldest evidence first.
+    """Import every query module (side effect: fills REGISTRY) and return it
+    in registration order: grouped by module in ``_MODULES`` order, unless a
+    caller imported a query module directly before the first call.
 
     Every module named in ``_MODULES`` must exist — a missing or broken
     module raises instead of silently dropping its queries from the
-    correctness run (ADVICE r1: silent tolerance masks wiring bugs).
+    correctness run (silent tolerance masks wiring bugs).
     """
     for m in _MODULES:
         importlib.import_module(f"{__name__}.{m}")
-    last = _last_verified_round()
-    latest_round = max(last.values(), default=0)
-
-    def key(n: str):
-        evid = last.get(n, 0)
-        if evid == 0:
-            return (0, 0, 0, 0.0)
-        urg = _urgency(REGISTRY[n], evid, latest_round)
-        if urg is None:
-            return (evid, 0, 0, 0.0)
-        return (min(evid, max(latest_round - 3, 1)), 1, evid, -urg)
-
-    ordered = sorted(REGISTRY, key=key)  # stable: module order within ties
-    for name in ordered:
-        REGISTRY[name] = REGISTRY.pop(name)
     return REGISTRY

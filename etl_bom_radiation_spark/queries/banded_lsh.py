@@ -221,7 +221,7 @@ def n42_minhash_banded_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PINNED (OPTIMIZATION r17, guide §1.2 step 1): the bucket self-join
     # consumes this frame on BOTH sides, and without the barrier the gate
     # window (Exchange + double Sort + WindowGroupLimit + Window) runs
-    # once per side — 2x in the committed before-plan (plans/r17)
+    # once per side (the unpinned plan ran it 2x)
     gated = gate_buckets(band_frame(sig)).localCheckpoint(eager=False)
     a = gated.select(
         F.col("doc_id").alias("doc_a"),

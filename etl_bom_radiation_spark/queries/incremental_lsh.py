@@ -104,8 +104,8 @@ def shard_verdicts(
     # consumers (the index probe join plus both sides of the in-shard
     # pairing), and without the barrier Catalyst re-derives the whole
     # gate-window subtree — Exchange + double Sort + WindowGroupLimit +
-    # Window over the band frame — once per consumer (3x in the committed
-    # n49 before-plan, plans/r17).  The pin computes the gate once and
+    # Window over the band frame — once per consumer (the unpinned n49
+    # plan ran the gate window 3x).  The pin computes the gate once and
     # lets the identical broadcast builds reuse one exchange.
     inc_gated = F.broadcast(inc_gated.localCheckpoint(eager=False))
     inc_a = inc_gated.select(

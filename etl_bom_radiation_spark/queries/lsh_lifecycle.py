@@ -1,10 +1,9 @@
-"""Persisted-LSH-index lifecycle under driver evidence (VERDICT r8 #4/#5).
+"""Persisted-LSH-index lifecycle under the correctness gate.
 
-``lsh_index`` gained ``update_lsh_index`` this round — the fold that
-admits a probed batch's keepers into the persisted index by append +
-local cap re-gate, no rebuild.  These entries put the full
-build -> probe -> fold -> probe-again workflow under the driver's
-CORRECTNESS record:
+``lsh_index.update_lsh_index`` is the fold that admits a probed batch's
+keepers into the persisted index by append + local cap re-gate, no
+rebuild.  These entries put the full build -> probe -> fold ->
+probe-again workflow under the oracle correctness gate:
 
 * ``d04`` (rows-only lifecycle, d01/d02/d03-style step rows) and
   ``t11`` (rows-only, REAL streaming foreachBatch composition) carry
@@ -15,12 +14,6 @@ CORRECTNESS record:
   post-fold index generation declaratively (a from-scratch re-gate
   over initial + batch-1 keeps) — a hash match certifies
   fold == rebuild across engines, not just across two Spark runs.
-
-Net-new budget: VERDICT r8 #2 caps round 9 at <= 3 net-new entries;
-these are all three (registered in a NEW module so no existing
-module's evidence-freshness is invalidated by this file's commits —
-the ``_urgency`` discipline, queries/__init__); registry lands at the
-165 cap exactly.
 
 Reference parity: no reference analog (the reference's pipeline has no
 dedup); this is the arrival-time maintenance posture SURVEY §2.H's

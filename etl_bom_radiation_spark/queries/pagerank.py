@@ -302,8 +302,8 @@ def n48_authority_weighted_sampling(spark: SparkSession, sf_dir: str) -> DataFra
     # the budget aggregate (via tot) AND the allocation join — without
     # the barrier the whole post-checkpoint tail (wu_final distinct +
     # rank/weight join) re-derives per consumer, and the duplication
-    # compounds through alloc (the committed n48 before-plan repeats a
-    # 46-operator subtree; plans/r17).  Source-sized frame, trivial pin.
+    # compounds through alloc (the unpinned n48 plan repeats a
+    # 46-operator subtree).  Source-sized frame, trivial pin.
     ranks = source_rank_frame(d).localCheckpoint(eager=False)
     # one id/source projection read once: counts + draw share it
     dd = (
@@ -347,7 +347,7 @@ def n48_authority_weighted_sampling(spark: SparkSession, sf_dir: str) -> DataFra
         )
         # PINNED (OPTIMIZATION r17): alloc feeds the per-document draw
         # (broadcast) AND the final result join — unpinned, each consumer
-        # re-ran the rank/count/budget join chain (plans/r17 before/after)
+        # re-ran the rank/count/budget join chain
         .localCheckpoint(eager=False)
     )
     # ONE broadcast probe per document; keep is folded per source on the

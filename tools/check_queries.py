@@ -33,11 +33,9 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_bom_radiation_spark.queries import TABLES  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF", "/root/testdata/sf0.01")
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 
 def duck_connection(sf_dir: str = SF_DIR) -> duckdb.DuckDBPyConnection:
