@@ -25,6 +25,36 @@ Scale design:
 * file moves are Hadoop FS renames (server-side copy+delete in the
   reference, bom.py:16-25); the list of files per batch is small (one
   driver-side loop over file names, never over rows).
+
+Publishing into the sink. The reference only ever appends (bom.py:76).
+Two operations here change what the sink holds, compaction
+(:func:`compact_partitions`) and the exactly-once stream sink
+(:func:`ingest_stream`), and both go through one crash-safe protocol:
+
+1. *stage*: the new files are written complete into a hidden staging dir
+   (a dot-prefixed sibling of the partition for compaction,
+   ``<checkpoint>/staging/<batch_id>`` for the stream);
+2. *commit*: :func:`_write_manifest` writes a manifest listing the staged
+   files to add (paths relative to the sink root) and the sink files the
+   publish retires. It is written under a dot-temp name and renamed in,
+   so it exists only once complete: a crash mid-write must not leave a
+   torn manifest that a replay would take for a commit;
+3. *publish*: :func:`_replay_publish` renames every listed file into its
+   partition dir, then deletes the retired files. New files go in before
+   old ones go out, so a concurrent reader never sees a partition empty
+   or undercounted; it may briefly see both generations of a compaction
+   (duplicate rows), so compact in a read-quiesced window for strict
+   snapshots. Every Hadoop rename/delete boolean is checked: a silently
+   failed rename would strand a file for the staging cleanup to destroy,
+   and a silently failed retire would double-count rows;
+4. the caller removes the staging dir.
+
+Recovery is "manifest present: replay; absent: discard and redo". A crash
+before the manifest exists has published nothing, and the replay is
+idempotent (a source already gone was published, a retired file already
+gone was retired), so a crash anywhere in steps 3-4 ends in the state a
+clean run leaves. The add/retire lists are passed in memory on the happy
+path; only recovery reads a manifest back.
 """
 
 from __future__ import annotations
@@ -36,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .grid.decode import decode_grids, read_grid_files, with_filename_metadata
-from .workspace import Workspace, register_batch_partitions
+from .workspace import Workspace, _fs, register_batch_partitions
 
 PARTITION_COLS = ["year", "month", "day", "hour"]
 
@@ -93,9 +123,7 @@ def _move(spark: SparkSession, src_uri: str, dst_dir: str) -> None:
     be re-ingested next batch (ADVICE r2); instead the destination is
     replaced — S3 copy semantics, matching the reference — and a rename
     that still fails raises."""
-    jvm = spark._jvm
-    src = jvm.org.apache.hadoop.fs.Path(src_uri)
-    fs = src.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, src, jvm = _fs(spark, src_uri)
     dst = jvm.org.apache.hadoop.fs.Path(f"{dst_dir}/{src.getName()}")
     if not fs.rename(src, dst):
         if fs.exists(src) and fs.exists(dst):
@@ -236,9 +264,7 @@ def _split_by_size(
     """FS-listing size guard: (readable file paths, oversized paths).
     Oversized files are never handed to the wholetext reader — their size
     comes from the listing, zero I/O."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(in_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, path, _ = _fs(spark, in_dir)
     readable: list[str] = []
     oversized: set[str] = set()
     if not fs.exists(path):
@@ -358,67 +384,89 @@ def ingest_batch(
     return res
 
 
-#: name of the old-generation manifest inside a compaction temp dir;
-#: underscore-prefixed so Spark ignores it even if the dir is ever scanned
-_COMPACT_MANIFEST = "_OLDFILES"
+#: commit manifest of a publish, inside its staging dir; underscore-prefixed
+#: so Spark never reads it as data
+_MANIFEST = "_PUBLISH"
 
 
-def _compact_tmp(jvm, part_dir):
-    """Hidden sibling temp dir for a partition compaction (dot prefix keeps
-    it out of hive partition discovery)."""
-    return jvm.org.apache.hadoop.fs.Path(
-        part_dir.getParent().toString() + "/." + part_dir.getName() + ".compacting"
+def _staged_data_files(fs, staging) -> list[str]:
+    """Relative paths (partition dirs + file name) of the data files under a
+    staging dir. One entry per FILE per batch — bounded by batch size, the
+    same driver-side bound the classify/move lists already have. Paths are
+    sliced against the FS-qualified root (listStatus returns qualified URIs
+    like ``file:/...`` even when the caller's URI is scheme-less)."""
+    base = fs.makeQualified(staging).toString()
+    rels = []
+    stack = [staging]
+    while stack:
+        for st in fs.listStatus(stack.pop()):
+            name = st.getPath().getName()
+            if st.isDirectory():
+                if not name.startswith((".", "_")):
+                    stack.append(st.getPath())
+            elif not name.startswith(("_", ".")):
+                rels.append(st.getPath().toString()[len(base) + 1 :])
+    return sorted(rels)
+
+
+def _write_manifest(fs, jvm, staging: str, add: list[str], retire: list[str]) -> None:
+    """Commit a publish (step 2 of the module's protocol): one ``+path``
+    line per staged file to add and one ``-path`` line per sink file to
+    retire, written under a dot-temp name and renamed in, so the manifest
+    exists only once it is complete."""
+    final = jvm.org.apache.hadoop.fs.Path(f"{staging}/{_MANIFEST}")
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{staging}/.{_MANIFEST}.tmp")
+    lines = [f"+{r}" for r in add] + [f"-{r}" for r in retire]
+    out = fs.create(tmp, True)
+    out.write(bytearray("\n".join(lines), "utf-8"))
+    out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"publish: could not commit manifest {final}")
+
+
+def _read_manifest(fs, jvm, staging: str) -> tuple[list[str], list[str]] | None:
+    """``(add, retire)`` of the committed manifest in *staging*, or None if
+    the publish was never committed."""
+    p = jvm.org.apache.hadoop.fs.Path(f"{staging}/{_MANIFEST}")
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        lines = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8").splitlines()
+    finally:
+        stream.close()
+    return (
+        [ln[1:] for ln in lines if ln.startswith("+")],
+        [ln[1:] for ln in lines if ln.startswith("-")],
     )
 
 
-def _finish_compaction(fs, jvm, part_dir, tmp) -> bool:
-    """Resume a crashed swap (code-review r3): a temp dir WITH a manifest
-    means the folded output was fully written — delete the manifest's old
-    generation and move any not-yet-renamed new files in (idempotent); a
-    temp dir WITHOUT a manifest means the folded write itself died —
-    discard it and let compaction redo the partition. Returns True if a
-    completed swap was recovered."""
-    manifest = jvm.org.apache.hadoop.fs.Path(f"{tmp.toString()}/{_COMPACT_MANIFEST}")
-    if not fs.exists(manifest):
-        # a manifest-less temp is scratch; a survivor of a failed delete
-        # is retried by the next compaction of this partition
-        fs.delete(tmp, True)  # best-effort: scratch reclamation only
-        return False
-    stream = fs.open(manifest)
-    try:
-        names = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8").splitlines()
-    finally:
-        stream.close()
-    part_uri = part_dir.toString()
-    # SAME order as the original swap in _compact_one — rename the
-    # remaining folded files in FIRST, delete the old generation after —
-    # so the resume, like the swap it replays, never exposes an empty or
-    # undercounted partition to a concurrent reader (the transient state
-    # is both generations visible, i.e. the double-count the crashed run
-    # already left; code-review r11 — the old delete-first replay opened
-    # a reader-visible undercount window the swap's own ordering exists
-    # to prevent).  Booleans checked (ADVICE r10 discipline): a
-    # silently-failed rename would strand a folded file for the
-    # recursive temp delete below to destroy (data loss); a
-    # silently-failed old delete leaves double-counted rows.  Raising
-    # keeps the manifest-marked temp, so the next run resumes again.
-    for s in fs.listStatus(tmp):
-        n = s.getPath().getName()
-        if s.isFile() and not n.startswith(("_", ".")):
-            dst = jvm.org.apache.hadoop.fs.Path(f"{part_uri}/{n}")
-            if not fs.rename(s.getPath(), dst):
-                raise OSError(
-                    f"compaction swap: could not move folded file "
-                    f"{s.getPath()} into {part_uri}"
-                )
-    for name in names:
-        if not name:
+def _replay_publish(
+    fs, jvm, staging: str, sink: str, add: list[str], retire: list[str]
+) -> None:
+    """Publish a committed manifest (step 3 of the module's protocol):
+    rename each staged ``add`` path into ``sink``, then delete each
+    ``retire`` path from it. Idempotent, so recovery is a replay: a source
+    already gone was published by an earlier attempt and a retired file
+    already gone was retired. Staged names are unique, so a rename that
+    returns false onto an existing destination means this very file was
+    published and its leftover source is dropped. The caller removes the
+    staging dir."""
+    path = jvm.org.apache.hadoop.fs.Path
+    for d in sorted({os.path.dirname(rel) for rel in add} - {""}):
+        fs.mkdirs(path(f"{sink}/{d}"))
+    for rel in add:
+        src, dst = path(f"{staging}/{rel}"), path(f"{sink}/{rel}")
+        if not fs.exists(src):
             continue
-        old = jvm.org.apache.hadoop.fs.Path(f"{part_uri}/{name}")
+        if not fs.rename(src, dst):
+            if not fs.exists(dst):
+                raise OSError(f"publish: could not move {src} into {sink}")
+            fs.delete(src, False)  # best-effort: dst holds this file; the source is staging scratch
+    for rel in retire:
+        old = path(f"{sink}/{rel}")
         if fs.exists(old) and not fs.delete(old, False):
-            raise OSError(f"compaction swap: could not delete old file {old}")
-    fs.delete(tmp, True)  # best-effort: content moved out; leftover is scratch
-    return True
+            raise OSError(f"publish: could not retire {old}")
 
 
 def _compact_one(
@@ -429,73 +477,38 @@ def _compact_one(
     max_files_per_partition: int,
     min_files_to_compact: int,
 ) -> bool:
-    """Fold ONE hive partition's small files (see :func:`compact_partitions`
-    for the swap/recovery protocol). Returns True if the partition was
-    compacted (or a crashed swap was recovered)."""
-    tmp = _compact_tmp(jvm, part_dir)
-    if fs.exists(tmp) and _finish_compaction(fs, jvm, part_dir, tmp):
-        return True  # recovered swap IS the compacted generation
-    files = [
-        s.getPath()
+    """Fold ONE hive partition's small files and publish the fold in place
+    of the old generation. Returns True if the partition was compacted (or
+    a crashed compaction was recovered)."""
+    part_uri = part_dir.toString()
+    tmp_uri = f"{part_dir.getParent().toString()}/.{part_dir.getName()}.compacting"
+    tmp = jvm.org.apache.hadoop.fs.Path(tmp_uri)
+    if fs.exists(tmp):
+        committed = _read_manifest(fs, jvm, tmp_uri)
+        if committed is not None:
+            _replay_publish(fs, jvm, tmp_uri, part_uri, *committed)
+        # published, or a fold whose write died before its commit; a
+        # survivor is discarded or replayed again by the next run
+        fs.delete(tmp, True)  # best-effort: the temp holds only scratch now
+        if committed is not None:
+            return True  # the recovered fold IS the compacted generation
+    old = [
+        s.getPath().getName()
         for s in fs.listStatus(part_dir)
         if s.isFile() and not s.getPath().getName().startswith(("_", "."))
     ]
-    if len(files) < min_files_to_compact:
+    if len(old) < min_files_to_compact:
         return False
-    part_uri = part_dir.toString()
     (
         spark.read.parquet(part_uri)
         .coalesce(max_files_per_partition)
         .write.mode("overwrite")
-        .parquet(tmp.toString())
+        .parquet(tmp_uri)
     )
-    # manifest of the old generation goes into the temp dir AFTER the
-    # folded write and BEFORE any rename: its presence marks the swap
-    # as committed, making a crash anywhere in the rename/delete
-    # window repairable by _finish_compaction on the next run.
-    # Written COMPLETE under a dot-temp name, then renamed in
-    # (code-review r11): _finish_compaction trusts the manifest's
-    # EXISTENCE, so a create-then-write crash must not leave a torn
-    # manifest — replaying one as a committed swap would move the folded
-    # generation in while deleting only the listed (possibly zero) old
-    # files, then destroy the temp dir: permanent double-counted rows
-    # with no repair marker left.  The rename makes existence == complete
-    # (the same swap discipline as the data files; a crash before it
-    # leaves a manifest-less temp, which the next run discards).
-    manifest_p = jvm.org.apache.hadoop.fs.Path(
-        f"{tmp.toString()}/{_COMPACT_MANIFEST}"
-    )
-    manifest_tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{tmp.toString()}/.{_COMPACT_MANIFEST}.tmp"
-    )
-    out = fs.create(manifest_tmp, True)
-    out.write(bytearray("\n".join(f.getName() for f in files), "utf-8"))
-    out.close()
-    if not fs.rename(manifest_tmp, manifest_p):
-        raise OSError(
-            f"compaction swap: could not publish manifest {manifest_p}"
-        )
-    # new part-file names are UUID-unique: rename in first, delete the
-    # old generation after — readers never see an empty partition.
-    # Booleans checked (ADVICE r10 discipline): a silently-failed rename
-    # would strand a folded file for the temp-dir delete to destroy
-    # (data loss); a silently-failed old delete leaves double-counted
-    # rows.  Raising here keeps the manifest-marked temp, so the next
-    # run's _finish_compaction resumes the swap idempotently.
-    for s in fs.listStatus(tmp):
-        if s.isFile() and not s.getPath().getName().startswith(("_", ".")):
-            dst = jvm.org.apache.hadoop.fs.Path(
-                part_uri + "/" + s.getPath().getName()
-            )
-            if not fs.rename(s.getPath(), dst):
-                raise OSError(
-                    f"compaction swap: could not move folded file "
-                    f"{s.getPath()} into {part_uri}"
-                )
-    for f in files:
-        if fs.exists(f) and not fs.delete(f, False):
-            raise OSError(f"compaction swap: could not delete old file {f}")
-    fs.delete(tmp, True)  # best-effort: content moved out; leftover is scratch
+    folded = _staged_data_files(fs, tmp)
+    _write_manifest(fs, jvm, tmp_uri, folded, old)
+    _replay_publish(fs, jvm, tmp_uri, part_uri, folded, old)
+    fs.delete(tmp, True)  # best-effort: content published; leftover is scratch
     return True
 
 
@@ -510,37 +523,26 @@ def compact_partitions(
     follow-up of per-file incremental ingest: millions of small parquet
     files inflate driver listing time and per-task overhead).
 
-    Rewrites each hive partition that holds more than
+    Rewrites each hive partition that holds at least
     ``min_files_to_compact`` data files down to ``max_files_per_partition``
-    files. The temp dir is dot-prefixed (hidden from partition discovery —
-    a bare ``hour=N._compacting`` sibling would break hive layout parsing
-    for concurrent readers of ``data_dir``, ADVICE r2), and the swap
-    renames the new files in BEFORE deleting the old ones, so a concurrent
-    reader never observes an empty partition — it may briefly observe both
-    generations (duplicate rows); run compaction in a read-quiesced window
-    for strict snapshot semantics. A crash mid-swap is repaired on the
-    next run: the temp dir carries an old-generation manifest published
-    (atomic rename, so existence == complete — code-review r11) before
-    any data rename, and ``_finish_compaction`` replays the swap
-    idempotently in the SAME reader-safe order — move the remaining
-    folded files in first, delete the old generation after (without the
-    manifest, a crash between the rename and delete loops would leave
-    both generations double-counted forever — code-review r3; the
-    delete-first replay order was itself a reader-visible undercount
-    window, fixed r11). Returns the number of partitions
-    compacted. Run it out-of-band (the reference has no equivalent — its
-    output only ever accretes).
+    files, through the publish protocol in the module docstring: the fold
+    is staged in a dot-prefixed sibling dir (hidden from partition
+    discovery; a bare ``hour=N._compacting`` sibling would break hive
+    layout parsing for concurrent readers of ``data_dir``), its manifest
+    adds the folded files and retires the old generation, and the staged
+    dir is deleted after the publish. A crash is repaired by the next run,
+    which replays a committed fold and discards an uncommitted one.
+    Returns the number of partitions compacted. Run it out-of-band (the
+    reference has no equivalent — its output only ever accretes).
 
     Partitions are independent, so their fold jobs run under a bounded
     driver-side thread pool (``max_concurrency`` concurrent Spark jobs —
-    the scheduler interleaves them across executor slots; VERDICT r3: the
-    serial loop was the bottleneck at a millions-of-partitions archive).
+    the scheduler interleaves them across executor slots; the serial loop
+    was the bottleneck at a millions-of-partitions archive).
     A partition that fails mid-swap doesn't strand the rest: every
     partition gets its attempt, then the first error is re-raised — its
     partition is repaired by recovery on the next run."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(data_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root, jvm = _fs(spark, data_dir)
     if not fs.exists(root):
         return 0
 
@@ -604,9 +606,7 @@ def archived_glob_for_partition(
     row-level partition filter in :func:`reprocess_partition`."""
     from .grid.filenames import utc_hours_for_sydney_partition
 
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(done_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, root, jvm = _fs(spark, done_dir)
     if not fs.exists(root):
         return None
     stamps = [f"{u:%Y%m%d}_{u:%H}" for u in utc_hours_for_sydney_partition(year, month, day, hour)]
@@ -650,104 +650,53 @@ def reprocess_partition(
     # would decode every archived source file twice
     obs = Observation("reprocess")
     points = points.observe(obs, F.count(F.lit(1)).alias("rows"))
-    with_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # per-write option, not the session conf: setting the session-wide
+    # mode would make every later overwrite in the session dynamic too
     (
         points.repartition(*PARTITION_COLS)
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*PARTITION_COLS)
         .parquet(ws.data_dir)
     )
     return obs.get["rows"]
 
 
-def with_conf(spark: SparkSession, key: str, value: str) -> None:
-    """Set a runtime SQL conf (split out so callers/tests can see the knob)."""
-    spark.conf.set(key, value)
-
-
-#: manifest inside a batch staging dir listing the staged data files; its
-#: presence marks the staged generation COMPLETE (same committed-marker
-#: pattern as _COMPACT_MANIFEST)
-_STAGE_MANIFEST = "_BATCHFILES"
-
-
-def _staged_data_files(fs, staging) -> list[str]:
-    """Relative paths (partition dirs + file name) of the data files under a
-    staging dir. One entry per FILE per batch — bounded by batch size, the
-    same driver-side bound the classify/move lists already have. Paths are
-    sliced against the FS-qualified root (listStatus returns qualified URIs
-    like ``file:/...`` even when the caller's URI is scheme-less)."""
-    base = fs.makeQualified(staging).toString()
-    rels = []
-    stack = [staging]
-    while stack:
-        for st in fs.listStatus(stack.pop()):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                if not name.startswith((".", "_")):
-                    stack.append(st.getPath())
-            elif not name.startswith(("_", ".")):
-                rels.append(st.getPath().toString()[len(base) + 1 :])
-    return sorted(rels)
-
-
-def publish_staged_batch(
-    spark: SparkSession, staging_uri: str, data_dir: str
+def _stage_and_publish(
+    fs, jvm, batch_df: DataFrame, staging: str, data_dir: str
 ) -> list[str]:
-    """Exactly-once publish of one staged micro-batch into the partitioned
-    sink — idempotent under re-delivery at ANY crash point.
-
-    Protocol (mirrors the compaction swap's manifest recovery):
-
-    1. no manifest in the staging dir -> the staged write itself died;
-       caller rewrites the staging dir (mode=overwrite) and writes the
-       manifest AFTER the write completes;
-    2. manifest present -> the staged generation is complete and immutable;
-       each listed file renames into its partition dir (staged names are
-       unique, so a re-run renames only the files a previous attempt
-       didn't get to — a rename whose destination already exists means
-       THIS file was already published: the leftover source is dropped);
-    3. the caller marks the batch committed only after every rename, then
-       deletes the staging dir.
-
-    Returns the manifest's relative paths (partition dir + file name)."""
-    jvm = spark._jvm
-    staging = jvm.org.apache.hadoop.fs.Path(staging_uri)
-    fs = staging.getFileSystem(spark._jsc.hadoopConfiguration())
-    manifest = jvm.org.apache.hadoop.fs.Path(f"{staging_uri}/{_STAGE_MANIFEST}")
-    stream = fs.open(manifest)
-    try:
-        rels = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8").splitlines()
-    finally:
-        stream.close()
-    for rel in rels:
-        if not rel:
-            continue
-        src = jvm.org.apache.hadoop.fs.Path(f"{staging_uri}/{rel}")
-        dst = jvm.org.apache.hadoop.fs.Path(f"{data_dir}/{rel}")
-        if not fs.exists(src):
-            continue  # already renamed by a previous (crashed) attempt
-        fs.mkdirs(dst.getParent())
-        if not fs.rename(src, dst):
-            if fs.exists(dst):
-                fs.delete(src, False)  # best-effort: published by a racing prior attempt
-            else:
-                raise OSError(f"publish rename failed: {src} -> {dst}")
-    return [r for r in rels if r]
+    """Publish one stream micro-batch into *data_dir* exactly once, through
+    the module's publish protocol (add = the staged files, retire = none).
+    A committed manifest left by an earlier attempt of the same batch is
+    replayed instead of restaging. Returns the published paths relative to
+    *data_dir*."""
+    committed = _read_manifest(fs, jvm, staging)
+    if committed is None:
+        # overwrite discards a generation whose write died before its
+        # commit: nothing of it was published
+        (
+            batch_df.repartition(*PARTITION_COLS)
+            .write.mode("overwrite")
+            .partitionBy(*PARTITION_COLS)
+            .parquet(staging)
+        )
+        add = _staged_data_files(fs, jvm.org.apache.hadoop.fs.Path(staging))
+        _write_manifest(fs, jvm, staging, add, [])
+    else:
+        add = committed[0]
+    _replay_publish(fs, jvm, staging, data_dir, add, [])
+    return add
 
 
 def _batch_committed(spark: SparkSession, commit_dir: str, batch_id: int) -> bool:
     """True if the sink-side commit marker for *batch_id* exists."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{commit_dir}/{batch_id}")
-    return bool(p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p))
+    fs, p, _ = _fs(spark, f"{commit_dir}/{batch_id}")
+    return bool(fs.exists(p))
 
 
 def _mark_batch_committed(spark: SparkSession, commit_dir: str, batch_id: int) -> None:
     """Write the (empty) sink-side commit marker for *batch_id*."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{commit_dir}/{batch_id}")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p, _ = _fs(spark, f"{commit_dir}/{batch_id}")
     fs.mkdirs(p.getParent())
     fs.create(p, True).close()
 
@@ -774,22 +723,17 @@ def ingest_stream(
 
     Exactly-once: foreachBatch re-delivers a micro-batch (same batch_id)
     after a failed/restarted trigger, and plain parquet appends are not
-    idempotent — so each batch goes through stage -> manifest -> publish:
-    the batch decodes ONCE into ``<checkpoint>/staging/<batch_id>``
-    (overwrite mode, so a crashed staging write just re-runs), a manifest
-    written after the staged write marks that generation complete and
-    immutable, and :func:`publish_staged_batch` renames the staged files
-    into the partition dirs (unique names; renames are individually
-    idempotent under replay). Rollup partials land in a per-batch
-    OVERWRITTEN subdir and partition registration uses ADD IF NOT EXISTS,
-    so every post-staging step is replay-safe; the commit marker
-    (``<checkpoint>/sink_commits/<batch_id>``) is written last. A crash at
-    ANY point therefore resumes without duplicating or losing a row — the
-    r3 'residual window' (re-appending a whole batch when the crash landed
-    between data write and marker) is closed, with no table format needed.
-    As a bonus the staged parquet, not a re-decode, feeds the rollup
-    partials and the partition list: one decode pass per batch instead of
-    three.
+    idempotent. So each batch decodes ONCE into
+    ``<checkpoint>/staging/<batch_id>`` and is published through the
+    module's publish protocol (:func:`_stage_and_publish`); a re-delivered
+    batch replays its committed manifest or restages. Rollup partials land
+    in a per-batch OVERWRITTEN subdir and partition registration uses ADD
+    IF NOT EXISTS, so every post-publish step is replay-safe too; the
+    commit marker (``<checkpoint>/sink_commits/<batch_id>``) is written
+    last and the staging dir is removed only after it. A crash at ANY
+    point therefore resumes without duplicating or losing a row, with no
+    table format needed. The published files, not a re-decode, feed the
+    rollup partials and the partition list: one decode pass per batch.
 
     Note: malformed files are not moved here (the streaming source tracks
     its input files; moving them mid-stream breaks the source) — their rows
@@ -808,30 +752,14 @@ def ingest_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        jvm = spark._jvm
         staging_uri = f"{checkpoint}/staging/{batch_id}"
-        staging = jvm.org.apache.hadoop.fs.Path(staging_uri)
-        fs = staging.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, staging, jvm = _fs(spark, staging_uri)
         if _batch_committed(spark, commit_dir, batch_id):
             # re-delivered batch, already fully committed; reap a staging
             # dir left by a crash between the marker write and the cleanup
             fs.delete(staging, True)  # best-effort: scratch reap, next replay re-reaps
             return
-        manifest = jvm.org.apache.hadoop.fs.Path(f"{staging_uri}/{_STAGE_MANIFEST}")
-        if not fs.exists(manifest):
-            # (re)stage: overwrite discards any partial generation whose
-            # write crashed before its manifest existed — nothing from it
-            # was published (publish only runs with a manifest)
-            (
-                batch_df.repartition(*PARTITION_COLS)
-                .write.mode("overwrite")
-                .partitionBy(*PARTITION_COLS)
-                .parquet(staging_uri)
-            )
-            out = fs.create(manifest, True)
-            out.write(bytearray("\n".join(_staged_data_files(fs, staging)), "utf-8"))
-            out.close()
-        rels = publish_staged_batch(spark, staging_uri, ws.data_dir)
+        rels = _stage_and_publish(fs, jvm, batch_df, staging_uri, ws.data_dir)
         parts = sorted(
             {tuple(seg.split("=")[1] for seg in rel.split("/")[:-1]) for rel in rels}
         )

@@ -25,6 +25,16 @@ Any call whose boolean feeds an expression (``if not fs.rename(...)``,
 an assignment, an assert) is checked by construction and needs no
 marker.  ``test_lint_is_live`` proves the lint fails on the regression
 it exists for, the fence-liveness convention.
+
+Second rule, in-place writes: a Hadoop ``fs.create`` shows up to
+``exists()`` at once, as a 0-byte file, so a crash between create and
+close leaves a torn file under its final name, and a reader that trusts
+existence (a commit manifest, a high-water mark) takes it as complete.
+A stream returned by ``fs.create(...)`` may therefore be written to only
+inside the atomic writers in ``ATOMIC_WRITERS``, which write under a temp
+name and rename in.  Empty markers (``fs.create(p, True).close()``) stay
+allowed: their content is their existence.  ``test_in_place_lint_is_live``
+covers this rule the same way.
 """
 
 from __future__ import annotations
@@ -38,6 +48,10 @@ PKG = os.path.join(
 )
 
 MARKER = "best-effort"
+
+#: the functions allowed to write into an ``fs.create`` stream: each writes
+#: complete under a temp name and then renames it in
+ATOMIC_WRITERS = {"_write_manifest", "_write_meta"}
 
 
 def unchecked_fs_calls(source: str, filename: str = "<mem>") -> list[str]:
@@ -72,7 +86,64 @@ def unchecked_fs_calls(source: str, filename: str = "<mem>") -> list[str]:
     return out
 
 
-def test_package_fs_calls_checked_or_marked():
+def _is_fs_create(node) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "create"
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "fs"
+    )
+
+
+def _own_nodes(scope):
+    """Nodes of *scope* (a module or function), not descending into the
+    functions defined inside it — each of those is its own scope."""
+    stack = list(ast.iter_child_nodes(scope))
+    while stack:
+        node = stack.pop()
+        yield node
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def in_place_writes(source: str, filename: str = "<mem>") -> list[str]:
+    """``(file:line)`` of every ``fs.create(...)`` whose stream is written
+    to (any ``.write*`` call, on the create itself or on the name it is
+    assigned to) outside a function named in ``ATOMIC_WRITERS``."""
+    tree = ast.parse(source)
+    scopes = [tree] + [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.name not in ATOMIC_WRITERS
+    ]
+    out = set()
+    for scope in scopes:
+        nodes = list(_own_nodes(scope))
+        streams = {
+            t.id: n.lineno
+            for n in nodes
+            if isinstance(n, ast.Assign) and _is_fs_create(n.value)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in nodes:
+            if not (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr.startswith("write")
+            ):
+                continue
+            recv = n.func.value
+            if _is_fs_create(recv):
+                out.add(recv.lineno)
+            elif isinstance(recv, ast.Name) and recv.id in streams:
+                out.add(streams[recv.id])
+    return [f"{filename}:{line}" for line in sorted(out)]
+
+
+def _package_offenders(lint) -> list[str]:
     offenders: list[str] = []
     for root, _dirs, files in os.walk(PKG):
         for f in sorted(files):
@@ -80,9 +151,12 @@ def test_package_fs_calls_checked_or_marked():
                 continue
             p = os.path.join(root, f)
             with open(p) as fh:
-                offenders += unchecked_fs_calls(
-                    fh.read(), os.path.relpath(p, os.path.dirname(PKG))
-                )
+                offenders += lint(fh.read(), os.path.relpath(p, os.path.dirname(PKG)))
+    return offenders
+
+
+def test_package_fs_calls_checked_or_marked():
+    offenders = _package_offenders(unchecked_fs_calls)
     assert not offenders, (
         "unchecked Hadoop fs.rename/fs.delete call sites (silent-false "
         "hazard — check the boolean and raise, or mark the line with a "
@@ -127,3 +201,51 @@ def test_lint_is_live():
         "    fs.delete(c, False)\n"
     )
     assert leak == ["<mem>:3"]
+
+
+def test_package_creates_not_written_in_place():
+    offenders = _package_offenders(in_place_writes)
+    assert not offenders, (
+        "fs.create streams written in place (a crash leaves a torn file "
+        "under its final name — write through an atomic writer, "
+        f"{sorted(ATOMIC_WRITERS)}): " + ", ".join(offenders)
+    )
+
+
+def test_in_place_lint_is_live():
+    """The in-place rule flags a written create stream outside the atomic
+    writers — including one in a closure, the shape of a stream sink's
+    per-batch function — and passes atomic writers and empty markers."""
+    flagged = in_place_writes(
+        "def f(fs, p):\n"
+        "    out = fs.create(p, True)\n"
+        "    out.write(b'x')\n"
+        "    out.close()\n"
+        "def ingest(fs, p):\n"
+        "    def _sink(df, batch_id):\n"
+        "        out = fs.create(p, True)\n"
+        "        out.write(b'x')\n"
+        "        out.close()\n"
+        "    fs.create(p, True).write(b'x')\n"
+        "def _write_manifest(fs, p):\n"
+        "    def inner():\n"
+        "        fs.create(p, True).writeBytes('x')\n"
+    )
+    assert flagged == ["<mem>:2", "<mem>:7", "<mem>:10", "<mem>:13"]
+
+    clean = in_place_writes(
+        "def _write_manifest(fs, p):\n"
+        "    out = fs.create(p, True)\n"
+        "    out.write(b'x')\n"
+        "    out.close()\n"
+        "def _write_meta(fs, p):\n"
+        "    fs.create(p, True).write(b'x')\n"
+        "def marker(fs, p):\n"
+        "    fs.create(p, True).close()\n"
+        "    out = fs.create(p, True)\n"
+        "    out.close()\n"
+        "def other(store, p):\n"
+        "    out = store.create(p)\n"  # not the Hadoop handle convention
+        "    out.write(b'x')\n"
+    )
+    assert clean == []

@@ -192,6 +192,32 @@ def test_reprocess_partition(spark, ws):
     assert sorted(os.listdir(other)) == other_files_before  # untouched
 
 
+def test_reprocess_partition_leaves_session_conf(spark, ws, tmp_path):
+    """Dynamic overwrite is asked for on reprocess_partition's own write:
+    the session's partitionOverwriteMode is unchanged after it, so a later
+    overwrite in the session (write_points_csv) still replaces its whole
+    output instead of keeping stale partitions."""
+    from etl_bom_radiation_spark.grid.decode import decode_grid_directory
+    from etl_bom_radiation_spark.ingest import reprocess_partition
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        _stage_inputs(ws.base, include_bad=False)
+        ingest_batch(spark, ws)
+        assert reprocess_partition(spark, ws, 2018, 4, 1, 11) == 9
+        assert spark.conf.get(key) == "static"
+
+        out = str(tmp_path / "csv")
+        pts = decode_grid_directory(spark, ws.done_dir)
+        write_points_csv(pts, out)
+        write_points_csv(pts.filter(F.col("month") == 4), out)
+        assert os.listdir(os.path.join(out, "year=2018")) == ["month=4"]
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_reprocess_partition_scan_pruned(spark, ws):
     """VERDICT r3: a one-hour rebuild must open ONLY that hour's archived
     files — selected by a name glob on the filename-encoded UTC stamp,
@@ -575,55 +601,20 @@ def test_write_points_hot_partition_fanout(spark, ws, tmp_path):
     assert spark.read.parquet(fan_dir).count() == 18
 
 
-def test_publish_staged_batch_replay_idempotent(spark, ws, tmp_path):
-    """The stage->manifest->publish protocol that closes the r3 'residual
-    window': a publish interrupted after SOME renames completes on replay,
-    and a full replay (crash after all renames but before the commit
-    marker) renames nothing twice — row count stays exact either way."""
-    from etl_bom_radiation_spark.grid.decode import decode_grid_directory
-    from etl_bom_radiation_spark.ingest import (
-        _STAGE_MANIFEST,
-        PARTITION_COLS,
-        publish_staged_batch,
-    )
-
-    _stage_inputs(ws.base, include_bad=False)
-    pts = decode_grid_directory(spark, ws.prefix("in"))
-    staging = str(tmp_path / "staging" / "0")
-    (
-        pts.repartition(*PARTITION_COLS)
-        .write.mode("overwrite")
-        .partitionBy(*PARTITION_COLS)
-        .parquet(staging)
-    )
-    rels = []
-    for root_dir, _, files in os.walk(staging):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                rels.append(os.path.relpath(os.path.join(root_dir, f), staging))
-    rels = sorted(rels)
-    with open(os.path.join(staging, _STAGE_MANIFEST), "w") as fh:
-        fh.write("\n".join(rels))
-
-    # crashed first attempt: exactly one file made it into the sink
-    dst = os.path.join(ws.data_dir, rels[0])
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    os.rename(os.path.join(staging, rels[0]), dst)
-
-    assert sorted(publish_staged_batch(spark, staging, ws.data_dir)) == rels
-    assert spark.read.parquet(ws.data_dir).count() == 18  # completed, no dupes
-
-    # full replay with every source already renamed out: still exact
-    assert sorted(publish_staged_batch(spark, staging, ws.data_dir)) == rels
-    assert spark.read.parquet(ws.data_dir).count() == 18
-
-
 def test_staged_manifest_lists_partition_relative_paths(spark, ws, tmp_path):
     """_staged_data_files must slice against the FS-qualified root (the
     listing returns file:/ URIs even for scheme-less inputs) — a wrong
-    offset here would corrupt every rename the publish step does."""
+    offset here would corrupt every rename the publish step does — and the
+    manifest those paths go into reads back as written, committed under
+    its final name with no temp left behind."""
     from etl_bom_radiation_spark.grid.decode import decode_grid_directory
-    from etl_bom_radiation_spark.ingest import PARTITION_COLS, _staged_data_files
+    from etl_bom_radiation_spark.ingest import (
+        _MANIFEST,
+        PARTITION_COLS,
+        _read_manifest,
+        _staged_data_files,
+        _write_manifest,
+    )
 
     _stage_inputs(ws.base, include_bad=False)
     pts = decode_grid_directory(spark, ws.prefix("in"))
@@ -634,153 +625,103 @@ def test_staged_manifest_lists_partition_relative_paths(spark, ws, tmp_path):
         .partitionBy(*PARTITION_COLS)
         .parquet(staging_uri)
     )
-    jvm = spark._jvm
-    staging = jvm.org.apache.hadoop.fs.Path(staging_uri)
-    fs = staging.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, staging, jvm = W._fs(spark, staging_uri)
     rels = _staged_data_files(fs, staging)
     assert rels and all(r.startswith("year=") and r.count("/") == 4 for r in rels)
     assert all(os.path.exists(os.path.join(staging_uri, r)) for r in rels)
 
-
-def test_compact_partitions_crash_recovery(spark, tmp_path):
-    """code-review r3: a crash between renaming the new generation in and
-    deleting the old one must be repaired by the next compact run (via the
-    temp-dir manifest), not leave duplicate rows forever."""
-    import glob
-
-    from etl_bom_radiation_spark.grid.decode import decode_grid_directory
-    from etl_bom_radiation_spark.ingest import compact_partitions, write_points
-
-    data_dir = str(tmp_path / "athena")
-    pts = decode_grid_directory(spark, os.path.join(FIXTURES, GOOD_FILES[0]))
-    write_points(pts, data_dir)
-    write_points(pts, data_dir)  # second generation -> 2 files per partition
-    total = spark.read.parquet(data_dir).count()
-
-    part_dir = None
-    for root_dir, dirs, files in os.walk(data_dir):
-        if any(f.endswith(".parquet") for f in files):
-            part_dir = root_dir
-            break
-    assert part_dir is not None
-    old_files = sorted(glob.glob(os.path.join(part_dir, "*.parquet")))
-    assert len(old_files) == 2
-
-    # construct the committed-but-crashed swap state by hand: folded output
-    # + manifest in the hidden tmp dir, then "crash" after renaming ONE new
-    # file in (both generations partially visible, deletes never ran)
-    parent, name = os.path.dirname(part_dir), os.path.basename(part_dir)
-    tmp = os.path.join(parent, f".{name}.compacting")
-    spark.read.parquet(part_dir).coalesce(1).write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_OLDFILES"), "w") as fh:
-        fh.write("\n".join(os.path.basename(f) for f in old_files))
-    new_files = sorted(glob.glob(os.path.join(tmp, "*.parquet")))
-    os.rename(new_files[0], os.path.join(part_dir, os.path.basename(new_files[0])))
-
-    # partition now double-counts; the next compaction run repairs it
-    assert spark.read.parquet(data_dir).count() == 2 * total
-    n = compact_partitions(spark, data_dir)
-    assert n >= 1
-    assert not os.path.exists(tmp)
-    assert spark.read.parquet(data_dir).count() == total
+    assert _read_manifest(fs, jvm, staging_uri) is None
+    _write_manifest(fs, jvm, staging_uri, rels, ["year=2018/old.parquet"])
+    assert _read_manifest(fs, jvm, staging_uri) == (rels, ["year=2018/old.parquet"])
+    left = os.listdir(staging_uri)
+    assert _MANIFEST in left and not [f for f in left if f.endswith(".tmp")]
 
 
-def test_compaction_swap_boolean_failures_surface(spark, tmp_path):
-    """ADVICE r10 discipline applied to the partition-compaction swap: a
-    Hadoop rename/delete that fails BY RETURNING FALSE must raise, not
-    proceed — a silently-failed rename strands a folded file for the
-    temp-dir delete to destroy (data loss); a silently-failed old-file
-    delete leaves double-counted rows.  Raising keeps the
-    manifest-marked temp dir, so the next compaction run resumes the
-    swap idempotently."""
+#: (caller, publish step whose Hadoop boolean comes back false). Compaction
+#: adds one folded file and retires the old generation; the stream adds two
+#: files in two partitions (month=3 publishes first, so failing the month=4
+#: rename leaves the batch partly published) and retires nothing.
+PUBLISH_FAILURES = [
+    ("compaction", "manifest"),
+    ("compaction", "rename_in"),
+    ("compaction", "retire"),
+    ("stream", "manifest"),
+    ("stream", "partial"),
+]
+
+
+@pytest.mark.parametrize("caller,step", PUBLISH_FAILURES)
+def test_publish_crash_replays_exactly(spark, ws, tmp_path, caller, step):
+    """The shared publish under a failure at each step. A rename or delete
+    that returns false must raise (a silent false would strand a file for
+    the staging cleanup to destroy, or double-count rows), and the state it
+    leaves is the crash state of that step: no committed manifest if the
+    manifest's own rename failed, otherwise a committed manifest with the
+    publish partly done. The caller's next run must end with exactly the
+    input rows — replaying a committed publish, redoing an uncommitted
+    one — and a further run must change nothing."""
     import glob
 
     import etl_bom_radiation_spark.ingest as I
     from etl_bom_radiation_spark.grid.decode import decode_grid_directory
-    from etl_bom_radiation_spark.ingest import compact_partitions, write_points
     from tests.conftest import LyingFS
 
-    data_dir = str(tmp_path / "athena")
-    pts = decode_grid_directory(spark, os.path.join(FIXTURES, GOOD_FILES[0]))
-    write_points(pts, data_dir)
-    write_points(pts, data_dir)
-    total = spark.read.parquet(data_dir).count()
+    lie = {
+        "manifest": dict(fail_renames=1, path_match=I._MANIFEST),
+        "rename_in": dict(fail_renames=1, path_match=".parquet"),
+        "retire": dict(fail_deletes=1, path_match=".parquet"),
+        "partial": dict(fail_renames=1, path_match="month=4"),
+    }[step]
 
-    part_dir = None
-    for root_dir, _dirs, files in os.walk(data_dir):
-        if any(f.endswith(".parquet") for f in files):
-            part_dir = root_dir
-            break
-    assert part_dir is not None
-    jvm = spark._jvm
-    part_p = jvm.org.apache.hadoop.fs.Path(part_dir)
-    fs = part_p.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = os.path.join(
-        os.path.dirname(part_dir), "." + os.path.basename(part_dir) + ".compacting"
-    )
+    def rows() -> int:
+        if not glob.glob(os.path.join(ws.data_dir, "year=*")):
+            return 0
+        return spark.read.parquet(ws.data_dir).count()
 
-    # rename-in of the folded generation lies (scoped past the manifest
-    # publish, which renames first): must raise BEFORE any
-    # old-generation delete, leaving both generations intact on disk
-    with pytest.raises(OSError, match="could not move folded file"):
-        I._compact_one(
-            spark,
-            LyingFS(fs, fail_renames=1, path_match=".parquet"),
-            jvm,
-            part_p,
-            1,
-            2,
-        )
-    assert spark.read.parquet(data_dir).count() == total
-    assert os.path.exists(os.path.join(tmp, I._COMPACT_MANIFEST))
+    if caller == "compaction":
+        pts = decode_grid_directory(spark, os.path.join(FIXTURES, GOOD_FILES[0]))
+        I.write_points(pts, ws.data_dir)
+        I.write_points(pts, ws.data_dir)  # second generation: 2 files
+        total = rows()
+        part_dir = os.path.join(ws.data_dir, "year=2018", "month=3", "day=30", "hour=12")
+        staging = os.path.join(os.path.dirname(part_dir), ".hour=12.compacting")
+        fs, part_p, jvm = W._fs(spark, part_dir)
+        with pytest.raises(OSError, match="publish: could not"):
+            I._compact_one(spark, LyingFS(fs, **lie), jvm, part_p, 1, 2)
+        # the fold is all in once the retire step runs: both generations
+        # visible, the state a crash between rename-in and retire leaves
+        assert rows() == (2 * total if step == "retire" else total)
+    else:
+        _stage_inputs(ws.base, include_bad=False)
+        batch = decode_grid_directory(spark, ws.in_dir)
+        total = 18
+        ckpt = str(tmp_path / "ckpt")
+        staging = f"{ckpt}/staging/0"
+        fs, _, jvm = W._fs(spark, staging)
+        with pytest.raises(OSError, match="publish: could not"):
+            I._stage_and_publish(LyingFS(fs, **lie), jvm, batch, staging, ws.data_dir)
+        assert rows() == (9 if step == "partial" else 0)
 
-    # the manifest-marked temp makes the next (honest) run resume the
-    # swap instead of re-folding on top of it
-    assert compact_partitions(spark, data_dir) >= 1
-    assert spark.read.parquet(data_dir).count() == total
-    assert not os.path.exists(tmp)
-    assert len(glob.glob(os.path.join(part_dir, "*.parquet"))) == 1
+    manifest = os.path.join(staging, I._MANIFEST)
+    assert os.path.exists(manifest) == (step != "manifest")
 
-    # old-generation delete lies during a fresh compaction: must raise
-    # (rows would double-count), then resume cleanly
-    write_points(pts, data_dir)  # second generation again
-    total2 = spark.read.parquet(data_dir).count()
-    with pytest.raises(OSError, match="could not delete old file"):
-        I._compact_one(
-            spark,
-            LyingFS(fs, fail_deletes=1, path_match=".parquet"),
-            jvm,
-            part_p,
-            1,
-            2,
-        )
-    assert compact_partitions(spark, data_dir) >= 1
-    assert spark.read.parquet(data_dir).count() == total2
-    assert not os.path.exists(tmp)
-
-    # the manifest PUBLISH rename lies (code-review r11: the manifest is
-    # the swap's commit marker, so it must appear atomically — a torn
-    # create-then-write manifest replayed as committed would double-count
-    # forever): must raise with the partition untouched, and the
-    # manifest-less temp the failure leaves is DISCARDED by the next run,
-    # which then compacts from scratch
-    write_points(pts, data_dir)
-    total3 = spark.read.parquet(data_dir).count()
-    with pytest.raises(OSError, match="could not publish manifest"):
-        I._compact_one(
-            spark,
-            LyingFS(fs, fail_renames=1, path_match=I._COMPACT_MANIFEST),
-            jvm,
-            part_p,
-            1,
-            2,
-        )
-    assert spark.read.parquet(data_dir).count() == total3
-    assert os.path.exists(tmp)  # crash state: temp present, NO manifest
-    assert not os.path.exists(os.path.join(tmp, I._COMPACT_MANIFEST))
-    assert compact_partitions(spark, data_dir) >= 1
-    assert spark.read.parquet(data_dir).count() == total3
-    assert not os.path.exists(tmp)
+    if caller == "compaction":
+        assert I.compact_partitions(spark, ws.data_dir) == 1
+        assert len(glob.glob(os.path.join(part_dir, "*.parquet"))) == 1
+        assert rows() == total and not os.path.exists(staging)
+        assert I.compact_partitions(spark, ws.data_dir) == 0
+    else:
+        if step == "partial":
+            # replay finishes the partial publish; a second replay, with
+            # every source already moved out, moves nothing twice
+            committed = I._read_manifest(fs, jvm, staging)
+            for _ in range(2):
+                got = I._stage_and_publish(fs, jvm, batch, staging, ws.data_dir)
+                assert got == committed[0] and rows() == total
+        # the restarted stream over the same checkpoint completes batch 0
+        for _ in range(2):
+            ingest_stream(spark, ws, checkpoint=ckpt).awaitTermination(120)
+            assert rows() == total and not os.path.exists(staging)
 
 
 def test_write_points_cluster_spatial_sorts_by_morton_key(spark, tmp_path):
