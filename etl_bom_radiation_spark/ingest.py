@@ -368,10 +368,12 @@ def ingest_batch(
         if stats_manifest_cols:
             # maintained file-skipping stats (the MSCK-analog for file
             # envelopes): refresh is incremental — only the files this
-            # batch appended are read back. Ordered AFTER the data write
-            # and partition registration; a crash in between just leaves
-            # the manifest one batch stale, which the next refresh heals
-            # and pruned_read surfaces loudly rather than mis-serving.
+            # batch appended are read back, and their stats are appended
+            # as one part file. Ordered AFTER the data write and partition
+            # registration; a crash in between leaves this batch's files
+            # out of the manifest, so pruned reads silently skip them until
+            # the next refresh, which picks them up (only a RETIRED file
+            # makes pruned_read raise).
             from .manifest import refresh_manifest
 
             refresh_manifest(spark, ws.data_dir, stats_manifest_cols)
