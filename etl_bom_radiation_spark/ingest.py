@@ -66,7 +66,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .grid.decode import decode_grids, read_grid_files, with_filename_metadata
-from .workspace import Workspace, _fs, register_batch_partitions
+from .workspace import (
+    Workspace,
+    _fs,
+    _read_text,
+    _write_atomic,
+    register_batch_partitions,
+)
 
 PARTITION_COLS = ["year", "month", "day", "hour"]
 
@@ -416,14 +422,8 @@ def _write_manifest(fs, jvm, staging: str, add: list[str], retire: list[str]) ->
     line per staged file to add and one ``-path`` line per sink file to
     retire, written under a dot-temp name and renamed in, so the manifest
     exists only once it is complete."""
-    final = jvm.org.apache.hadoop.fs.Path(f"{staging}/{_MANIFEST}")
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{staging}/.{_MANIFEST}.tmp")
     lines = [f"+{r}" for r in add] + [f"-{r}" for r in retire]
-    out = fs.create(tmp, True)
-    out.write(bytearray("\n".join(lines), "utf-8"))
-    out.close()
-    if not fs.rename(tmp, final):
-        raise OSError(f"publish: could not commit manifest {final}")
+    _write_atomic(fs, jvm, f"{staging}/{_MANIFEST}", "\n".join(lines), "publish")
 
 
 def _read_manifest(fs, jvm, staging: str) -> tuple[list[str], list[str]] | None:
@@ -432,11 +432,7 @@ def _read_manifest(fs, jvm, staging: str) -> tuple[list[str], list[str]] | None:
     p = jvm.org.apache.hadoop.fs.Path(f"{staging}/{_MANIFEST}")
     if not fs.exists(p):
         return None
-    stream = fs.open(p)
-    try:
-        lines = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8").splitlines()
-    finally:
-        stream.close()
+    lines = _read_text(fs, jvm, p).splitlines()
     return (
         [ln[1:] for ln in lines if ln.startswith("+")],
         [ln[1:] for ln in lines if ln.startswith("-")],

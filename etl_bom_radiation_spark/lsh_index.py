@@ -35,7 +35,7 @@ corpus:
   ``refresh_manifest`` discipline applied to the LSH index: the next
   probe sees the admitted docs without any rebuild.
 
-Scale envelope (ADVICE r8): the probe's plan shape broadcasts the
+Scale envelope: the probe's plan shape broadcasts the
 batch band frame, the batch hset slice, the enriched candidate frame
 and the per-doc verdict aggregate — so the real bound is that the
 BATCH (not the index) plus its candidate fan-out must fit Spark's
@@ -57,8 +57,14 @@ file-prunes to the generations that hold candidates.  Not implemented:
 at bench scale both tables are sub-MB and the win is unmeasurable, so
 the cut would be speculative code.
 
-Crash consistency: an update appends data files FIRST and publishes
-the meta high-water mark LAST — the mark is the commit.  Every read
+Crash consistency: an update appends data files FIRST and commits
+the meta high-water mark LAST.  The commit ADDS a numbered meta
+version (``_meta/<n>.json``, written under a dot-temp name and renamed
+onto the fresh name; no file is ever replaced), so a committed meta
+exists at every instant and a crash leaves either the new version or
+only an unlisted temp — readers take the highest committed version and
+there is nothing to repair (the commit-log idea of Delta Lake, VLDB
+2020, reduced to one small file per commit, two kept).  Every read
 filters to the committed snapshot (ids at or below the mark; parquet
 min/max stats skip uncommitted append files outright, so the filter is
 free on a healthy index), and ``vacuum_lsh_index`` deletes the
@@ -87,14 +93,14 @@ mean existing members can never be evicted by later arrivals
 (pytest-locked rebuild parity, tests/test_scale.py).  Re-arrivals are
 therefore impossible by construction in the fold path; the probe path
 additionally drops index rows whose doc_id re-appears in the batch
-(defensive anti-join, ADVICE r8) so a re-probed doc is judged against
+(defensive anti-join) so a re-probed doc is judged against
 the index minus itself instead of fanning out the verify join.
 
 Parity with the one-shot query is pytest-locked: building the index
 from the n49 index side and probing the n49 shard must reproduce the
 query's rows exactly (tests/test_scale.py).
 
-Cluster-mode durability note (VERDICT r16 #8): the module's lazy
+Cluster-mode durability note: the module's lazy
 ``localCheckpoint`` pins produce EXECUTOR-LOCAL blocks with lineage
 truncated — on a cluster, losing an executor loses its blocks and they
 are NOT recomputable, so a job consuming a pinned frame after such a
@@ -102,7 +108,7 @@ loss fails (in ``local[*]`` the executor is the driver; the hazard is
 moot).  That is an accepted trade here because no pinned frame is the
 durability story: every pin is scoped to ONE driver call (a probe, a
 fold, one admit_batch invocation), and the crash/retry protocol
-re-reads the PERSISTED parquet tables plus ``meta.json`` — a failed
+re-reads the PERSISTED parquet tables plus the committed meta — a failed
 call is retried from storage (vacuum + replay), never from cached
 blocks.  On clusters where mid-call executor loss is routine, swap the
 pins for ``persist(StorageLevel.MEMORY_AND_DISK)`` (recomputable
@@ -118,6 +124,7 @@ from __future__ import annotations
 
 import json
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -125,8 +132,10 @@ from .queries.banded_lsh import BUCKET_CAP, band_frame, gate_buckets, hashed_set
 from .queries.incremental_lsh import shard_verdicts
 from .queries.llm_queries import _shingles, _tokens
 from .queries.minhash_eval import sketch_from_hashes
+from .workspace import _fs, _read_text, _write_atomic
 
-_META = "meta.json"
+#: committed meta versions live here as ``<n>.json`` (see :func:`_write_meta`)
+_META_DIR = "_meta"
 
 #: Index dirs this DRIVER PROCESS has vacuumed and not since seen a fold
 #: fail on.  Orphan rows can only be created by a fold that died
@@ -142,13 +151,12 @@ def _sketch_frames(spark: SparkSession, docs: DataFrame, gate: bool = True):
     for a (doc_id, text) frame — the exact n42/n49 stages (shared
     helpers), one text pass.  ``update_lsh_index`` needs the UNGATED
     band rows: its gate must see existing bucket occupancy, not just
-    the batch.  Hash-once (OPTIMIZATION r16, sketch_from_hashes
-    docstring): the hashed-set frame is built first and the sketch
-    explodes it — one polyhash per (doc, distinct shingle), not two."""
+    the batch.  Hash-once (sketch_from_hashes docstring): the hashed-set
+    frame is built first and the sketch explodes it — one polyhash per
+    (doc, distinct shingle), not two."""
     toks = docs.select("doc_id", _tokens(F.col("text")).alias("ws"))
-    # UNPINNED since OPTIMIZATION r17 (ADVICE r16): hsets is shs' only
-    # consumer after the hash-once refactor, so the former checkpoint of
-    # the distinct-shingle STRING arrays bought no reuse — the hsets pin
+    # unpinned: hsets is shs' only consumer, so a checkpoint of the
+    # distinct-shingle STRING arrays would buy no reuse — the hsets pin
     # (hashed_sets) is the shared barrier
     shs = toks.select("doc_id", F.array_distinct(_shingles("ws", 2)).alias("s"))
     hsets = hashed_sets(shs)
@@ -160,160 +168,66 @@ def _sketch_frames(spark: SparkSession, docs: DataFrame, gate: bool = True):
     return bands, hsets
 
 
-def _meta_path(spark: SparkSession, index_dir: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{_META}")
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _slurp(spark: SparkSession, fs, p) -> str:
-    """Full contents of a (small) Hadoop FS file as a UTF-8 string."""
-    stream = fs.open(p)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-
-
-def _valid_meta(raw: str) -> bool:
-    """Whether ``raw`` is a COMPLETE meta payload (parses, has an integer
-    mark) — the gate :func:`_repair_meta` applies before promoting a tmp
-    (ADVICE r10: 'the tmp is complete by the write protocol' only holds
-    once SOME meta has existed; a crash inside the FIRST-ever
-    ``_write_meta`` of a new index can leave a torn tmp with no live
-    meta, and promoting it would turn every later read into a JSON parse
-    error instead of the honest missing-meta failure).  Soundness note:
-    a torn write is always a strict PREFIX of the payload, and no strict
-    prefix of a JSON object parses (the closing brace is the final
-    byte) — so this check cannot accept a truncated mark as a shorter
-    valid one.  The mark must BE a JSON integer (ADVICE r11): ``int()``
-    coercion would promote a hand-edited or corrupted-yet-parseable tmp
-    whose mark is a float (``int(3.9)`` truncates) or a bool — weaker
-    than the integer mark the writer emits and this gate claims."""
-    try:
-        mark = json.loads(raw)["max_doc_id"]
-    except (ValueError, KeyError, TypeError):
-        return False
-    return isinstance(mark, int) and not isinstance(mark, bool)
+def _meta_versions(fs, jvm, meta_dir) -> dict:
+    """version -> Hadoop ``Path`` of every committed meta version under
+    *meta_dir*, from ONE glob of committed names.  A temp is dot-prefixed,
+    so the glob never lists one, torn or complete."""
+    found = fs.globStatus(jvm.org.apache.hadoop.fs.Path(meta_dir, "[0-9]*.json"))
+    return {int(st.getPath().getName()[:-5]): st.getPath() for st in found or []}
 
 
 def _write_meta(
     spark: SparkSession, index_dir: str, max_doc_id: int, epoch=None
 ) -> None:
     """Publish the high-water mark — the COMMIT of an update (see
-    ``update_lsh_index``): written COMPLETE to a temp name first, then
-    swapped in (delete + rename).  A crash inside the tiny swap window
-    leaves no live meta but a COMPLETE ``meta.json.tmp`` — the tmp's
-    mark was only written after its update's data files had already
-    appended, so :func:`_repair_meta` (run by ``_read_meta`` on a
-    missing meta, i.e. by every entry point) renames it in and the
-    commit completes; a crash BEFORE the delete leaves the old meta
-    authoritative and the superseded tmp is overwritten by the next
-    update (ADVICE r9: without the repair, the swap window bricked the
-    index — every entry point starts at ``_read_meta``, so the module's
-    own repair tooling was unreachable).  ``epoch`` is the
+    ``update_lsh_index``) — as the next numbered version
+    ``_meta/<latest + 1>.json``: written complete under a dot-temp name,
+    then renamed onto that fresh name (a rename that returns false raises
+    and the previous version stays authoritative).  No file is ever
+    replaced, so there is no moment without a committed meta and nothing
+    for a reader to repair; a crash before the rename leaves only a temp
+    that no reader lists.  Versions older than the new one's predecessor
+    are then deleted, so at most two remain.  ``epoch`` is the
     admission-transaction id :func:`admit_batch` uses for replay
-    detection — recorded with the SAME write as the mark, so a commit
-    and its epoch are indivisible."""
-    fs, p = _meta_path(spark, index_dir)
-    jvm = spark._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(p.toString() + ".tmp")
+    detection — recorded in the SAME file as the mark, so a commit and
+    its epoch are indivisible."""
+    fs, meta_dir, jvm = _fs(spark, f"{index_dir}/{_META_DIR}")
+    versions = _meta_versions(fs, jvm, meta_dir)
+    n = max(versions, default=-1) + 1
     payload = json.dumps({"max_doc_id": max_doc_id, "epoch": epoch})
-    out = fs.create(tmp, True)
-    out.write(bytearray(payload, "utf-8"))
-    out.close()
-    if fs.exists(p):
-        fs.delete(p, False)  # best-effort: a false delete fails the rename below
-    if not fs.rename(tmp, p):
-        # ADVICE r10: a rename that fails WITHOUT throwing (Hadoop's
-        # boolean contract) would otherwise lose the commit silently —
-        # the appended keeper rows sit above a stale mark, the caller
-        # reports success, and the next vacuum deletes admitted docs.
-        # One benign cause: a concurrent reader's _repair_meta won the
-        # rename of this very tmp (it saw our delete->rename window) —
-        # then the commit already landed with this exact payload.
-        if fs.exists(p) and _slurp(spark, fs, p) == payload:
-            return
-        # First-write race (ADVICE r11): on a FIRST-ever write a repairer
-        # can promote our complete tmp between the exists(p) check above
-        # returning True and our delete — the delete then removes the
-        # just-promoted meta and the rename finds no tmp, leaving NO meta
-        # although the payload had landed.  The payload is still in
-        # memory: re-stage and retry ONCE so the raced commit self-heals
-        # instead of raising a 'commit failed' that points away from the
-        # real cause with no meta left on disk.
-        out = fs.create(tmp, True)
-        out.write(bytearray(payload, "utf-8"))
-        out.close()
-        if not fs.rename(tmp, p):
-            # a live meta with a DIFFERENT payload here is a genuine
-            # anomaly (the module is single-writer); surface it
-            if not (fs.exists(p) and _slurp(spark, fs, p) == payload):
-                raise RuntimeError(
-                    f"meta commit failed: could not rename {tmp} to {p}"
-                )
-
-
-def _repair_meta(spark: SparkSession, index_dir: str) -> bool:
-    """Complete a :func:`_write_meta` swap that crashed between delete
-    and rename: live meta MISSING + ``meta.json.tmp`` present -> the tmp
-    is complete by the write protocol (created, fully written and closed
-    BEFORE the live delete) and its mark's data files are already on
-    disk, so renaming it in finishes the commit.  Returns whether a
-    repair happened; with the live meta present this is a no-op (a
-    stale tmp next to a live meta is a superseded leftover of a crash
-    BEFORE the delete — harmless, overwritten by the next update).
-
-    The completeness argument has one hole (ADVICE r10): the FIRST-ever
-    meta write of a new index runs with no live meta at all, so a crash
-    mid-create leaves a TORN tmp in exactly the live-missing state this
-    repair fires on.  The tmp is therefore validated (:func:`_valid_meta`)
-    before promotion; an invalid tmp is IGNORED — not deleted — so
-    callers see the intended missing-meta failure mode, not a parse
-    error on a live meta.  Ignoring (code-review r11) rather than
-    deleting matters: the same live-missing + tmp-present state is what
-    a reader sees while the first-ever ``_write_meta`` is STILL WRITING
-    the tmp, and deleting it out from under the writer would turn a
-    healthy initial build into a spurious commit failure.  A genuinely
-    torn leftover is harmless in place: it is never promoted, and the
-    next ``_write_meta`` overwrites it (``fs.create(tmp, True)``)."""
-    fs, p = _meta_path(spark, index_dir)
-    if fs.exists(p):
-        return False
-    tmp = spark._jvm.org.apache.hadoop.fs.Path(p.toString() + ".tmp")
-    if not fs.exists(tmp):
-        return False
-    try:
-        complete = _valid_meta(_slurp(spark, fs, tmp))
-    except Exception:
-        # the tmp vanished under a concurrent repairer: benign iff the
-        # winner restored the live meta
-        return fs.exists(p)
-    if not complete:
-        return fs.exists(p)  # a concurrent writer may have landed a commit
-    if not fs.rename(tmp, p):
-        # readers are NOT single-writer-bound: two concurrent probes can
-        # both see the crashed swap and race the rename — the loser's
-        # failure is benign iff the winner restored the meta
-        if fs.exists(p):
-            return True
-        raise RuntimeError(f"could not restore {p} from its completed tmp")
-    return True
+    _write_atomic(
+        fs, jvm, f"{index_dir}/{_META_DIR}/{n:020d}.json", payload, "LSH index meta"
+    )
+    for v, old in versions.items():
+        if v < n - 1:
+            fs.delete(old, False)  # best-effort: superseded; the next commit retries
 
 
 def _read_meta(spark: SparkSession, index_dir: str) -> dict:
-    """The index meta: ``max_doc_id`` (the committed high-water mark,
-    always present) and ``epoch`` (last admission-transaction id, may be
-    absent/None on indexes written before epochs existed).  A meta lost
-    to a crashed swap is restored first (:func:`_repair_meta`) — every
-    entry point passes through here, so the repair needs no separate
-    call site; the exists-check it costs is one namenode op per read."""
-    fs, p = _meta_path(spark, index_dir)
-    if not fs.exists(p):
-        _repair_meta(spark, index_dir)
-    meta = json.loads(_slurp(spark, fs, p))
-    meta["max_doc_id"] = int(meta["max_doc_id"])
-    return meta
+    """The committed index meta, read from the highest version under
+    ``_meta/``: ``max_doc_id`` (the high-water mark) and ``epoch`` (last
+    admission-transaction id, None when the commit recorded none).  If
+    that version vanished before it was opened — only possible when two
+    commits landed during this read, the second deleting it — the listing
+    is taken again.  Raises ``FileNotFoundError`` when the index holds no
+    committed version."""
+    fs, meta_dir, jvm = _fs(spark, f"{index_dir}/{_META_DIR}")
+    while True:
+        versions = _meta_versions(fs, jvm, meta_dir)
+        if not versions:
+            raise FileNotFoundError(
+                f"no committed LSH index meta under {index_dir}/{_META_DIR}"
+            )
+        latest = versions[max(versions)]
+        try:
+            text = _read_text(fs, jvm, latest)
+        except Py4JJavaError:
+            if fs.exists(latest):
+                raise
+            continue
+        meta = json.loads(text)
+        meta["max_doc_id"] = int(meta["max_doc_id"])
+        return meta
 
 
 def _part_file_count(fs, path) -> int:
@@ -345,7 +259,7 @@ def build_lsh_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> Non
     """Sketch ``docs`` (doc_id, text, ...) and persist the two index
     tables an arrival probe reads — ``bands.parquet`` (capped bucket
     membership) and ``hsets.parquet`` (hashed shingle sets) — plus the
-    ``meta.json`` high-water mark ``update_lsh_index`` checks its
+    committed meta high-water mark ``update_lsh_index`` checks its
     append-only id precondition against."""
     bands, hsets = _sketch_frames(spark, docs)
     bands.write.mode("overwrite").parquet(f"{index_dir}/bands.parquet")
@@ -353,20 +267,19 @@ def build_lsh_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> Non
     # high-water mark from the ALREADY-MATERIALIZED hset frame — one row
     # per input doc (hashed_sets neither filters nor explodes), so
     # max(doc_id) is identical to an agg over ``docs``, without a second
-    # scan of the corpus (OPTIMIZATION r16, guide §1.2 step 1: don't
-    # rescan what a checkpoint already pinned)
+    # scan of the corpus (don't rescan what a checkpoint already pinned)
     mx = hsets.agg(F.max("doc_id")).first()[0]
     _write_meta(spark, index_dir, -(2**62) if mx is None else int(mx))
 
 
 class _IndexView:
     """The committed index, read ONCE per ``admit_batch`` call and shared
-    by every sub-batch cycle (VERDICT r12 #6).
+    by every sub-batch cycle.
 
     Without it each of k sub-batch cycles re-opened and re-scanned the
     full committed tables three times over (probe bands, probe hsets,
     fold occupancy) — ``lsh_admit_split4`` paid ~4x the one-shot's full
-    fixed cost (BENCH_IO r12: 14.91 s vs 3.75 s) even though between
+    fixed cost (14.91 s vs 3.75 s in BENCH_IO) even though between
     sub-batches the index changes ONLY by the just-folded generation.
     The view pins the base tables (persist: memory, disk-spilled —
     they are re-read k times within one call, then released) and tracks
@@ -383,18 +296,18 @@ class _IndexView:
     later cycles re-read a materialized batch-sized frame instead of
     re-running the admission lineage.
 
-    Measured honestly (r13, quiet spin canaries 0.666/0.659, sf0.1,
-    median-of-3): oneshot 5.08 s, split4 13.33 s without the view vs
-    12.74 s with it — a 4.4% saving at sandbox scale, where the index
-    tables are sub-MB and re-opening them costs almost nothing.  The
-    remaining split4-vs-oneshot gap is per-cycle DRIVER fixed cost
+    Measured (quiet spin canaries 0.666/0.659, sf0.1, median-of-3):
+    oneshot 5.08 s, split4 13.33 s without the view vs 12.74 s with it —
+    a 4.4% saving at sandbox scale, where the index tables are sub-MB
+    and re-opening them costs almost nothing.  The remaining
+    split4-vs-oneshot gap is per-cycle DRIVER fixed cost
     (~30 sequential jobs per probe/fold cycle: stats .first()s, eager
     localCheckpoints, the shard_verdicts chain), which no read cache can
     remove — the cycles are sequential BY DESIGN (the append-only fold
     order is the admission contract).
 
-    Re-priced at INDEX scale r14 (``scaling_probe.py --split``: view vs
-    a no-cache pre-r13 emulation, 1x vs 10x synthetic index): at the 10x
+    Re-priced at INDEX scale (``scaling_probe.py --split``: view vs a
+    no-cache emulation, 1x vs 10x synthetic index): at the 10x
     cell all three captures agree the view costs 4-10% (the persist
     overhead without enough re-read volume to amortize), and admit time
     is FLAT from 1x to 10x index (driver fixed cost swamps the scan
@@ -484,7 +397,7 @@ def probe_lsh_index(
     sketched fresh and broadcast; the index tables stream map-side
     (no shuffle of the index, no SortMergeJoin).
 
-    Broadcast-bound (ADVICE r8): the batch band frame, batch hset
+    Broadcast-bound: the batch band frame, batch hset
     slice, candidate frame and verdict aggregate are all broadcast, so
     the BATCH and its candidate fan-out must fit the broadcast limit —
     split over-sized arrivals into sub-batches before probing
@@ -493,7 +406,7 @@ def probe_lsh_index(
     A doc_id present in BOTH the index and the batch (a re-arrival) is
     judged against the index minus itself: the defensive anti-joins
     drop its index-side band rows and hset before the union, so the
-    verify join cannot fan out across generations (ADVICE r8).
+    verify join cannot fan out across generations.
 
     Reads are the COMMITTED snapshot (ids at or below the meta
     high-water mark): leftovers of a crashed ``update_lsh_index`` are
@@ -523,7 +436,7 @@ def update_lsh_index(
       by index size).
 
     Requires append-only doc_ids (every new id > the index's recorded
-    ``max_doc_id`` — checked against ``meta.json``, ValueError
+    ``max_doc_id`` — checked against the committed meta, ValueError
     otherwise).  Under that precondition the appended membership is
     EXACTLY what a from-scratch rebuild over the union would cap: the
     gate keeps the BUCKET_CAP lowest ids per bucket and monotone ids
@@ -575,8 +488,8 @@ def _fold_frames(
     # broadcast hint here — the joins below hint their own small sides
     # (touched, occ); a hint on THIS frame would sit under an aggregate
     # and the outer side of a left join, where it is unusable and only
-    # logs "join hint ... not part of a join relation" per fold.  LAZY
-    # (OPTIMIZATION r16): blocks materialize inside the first consuming
+    # logs "join hint ... not part of a join relation" per fold.  LAZY:
+    # blocks materialize inside the first consuming
     # job (the touched-bucket broadcast build) instead of a dedicated
     # eager-checkpoint driver job per fold.
     new_bands = new_bands.localCheckpoint(eager=False)
@@ -605,12 +518,11 @@ def _fold_frames(
         .select("doc_id", "band", "bk")
     )
     if idx_view is not None:
-        # pin the delta for later cycles.  LAZY checkpoints (OPTIMIZATION
-        # r16, guide §1.2 driver fixed cost): the blocks materialize as a
-        # side effect of the append writes just below, so later cycles
-        # still re-read a materialized batch-sized frame — the former
-        # EAGER checkpoints were two separate driver jobs per sub-batch
-        # cycle for the same pinning.
+        # pin the delta for later cycles.  LAZY checkpoints (per-cycle
+        # driver fixed cost): the blocks materialize as a side effect of
+        # the append writes just below, so later cycles still re-read a
+        # materialized batch-sized frame — EAGER checkpoints would be two
+        # separate driver jobs per sub-batch cycle for the same pinning.
         admitted = admitted.localCheckpoint(eager=False)
         new_hsets = new_hsets.localCheckpoint(eager=False)
     try:
@@ -640,7 +552,7 @@ def _split_batch(batch: DataFrame, k: int, lo: int, hi: int) -> DataFrame:
     min/max), i.e. a pure projection ``(doc_id - lo) div width`` — which
     buys the two properties this path must have at once:
 
-    * distributed (VERDICT r9 #1): no shuffle, no sort, no Window at all
+    * distributed: no shuffle, no sort, no Window at all
       — every task tags its own rows.  The rejected first form,
       ``ntile(k) OVER (ORDER BY doc_id)``, funneled the whole
       over-broadcast batch through ONE task's sort; the rejected second
@@ -788,8 +700,8 @@ def admit_batch(
         ).first()
         stats = {"n": row["n"], "mn": row["mn"], "mx": row["mx"]}
     else:
-        # precomputed by the parent split's ONE grouped aggregation
-        # (OPTIMIZATION r16): identical values to the per-leaf agg this
+        # precomputed by the parent split's ONE grouped aggregation:
+        # identical values to the per-leaf agg this
         # replaces — count/min/max of exactly this sub-batch's rows
         stats = {"n": _stats[0], "mn": _stats[1], "mx": _stats[2]}
     n = stats["n"]
@@ -815,14 +727,13 @@ def admit_batch(
         # band/hset frames (the sketch is the arrival's dominant linear
         # term — update_lsh_index re-sketching the keepers from text
         # would double it).
-        # OPTIMIZATION r16 (guide §1.2 driver fixed cost): no extra
-        # eager .localCheckpoint() layer here — _sketch_frames' band and
-        # hset frames are already LAZILY checkpointed by band_frame /
-        # hashed_sets, so their blocks materialize inside the first
-        # consuming job (the verdicts materialization) and every later
-        # consumer (the fold's joins) reads the same pinned blocks.  The
-        # former eager re-checkpoints were two pure double-checkpoint
-        # driver jobs per cycle.
+        # No extra eager .localCheckpoint() layer here: _sketch_frames'
+        # band and hset frames are already LAZILY checkpointed by
+        # band_frame / hashed_sets, so their blocks materialize inside the
+        # first consuming job (the verdicts materialization) and every
+        # later consumer (the fold's joins) reads the same pinned blocks;
+        # eager re-checkpoints would be two double-checkpoint driver jobs
+        # per cycle.
         bands_u, hsets_b = _sketch_frames(spark, batch, gate=False)
         verdicts = _probe_frames(
             spark,
@@ -859,13 +770,13 @@ def admit_batch(
     # localCheckpoint so the k per-sub filters materialize the batch once
     # (determinism does NOT depend on it: the cuts are a pure function of
     # the batch's lo/hi/k, so a replay in a fresh process reproduces them).
-    # LAZY (OPTIMIZATION r16): the grouped stats aggregation right below
+    # LAZY: the grouped stats aggregation right below
     # is the first consumer and materializes the blocks inside its own job.
     tagged = _split_batch(batch, k, stats["mn"], stats["mx"]).localCheckpoint(
         eager=False
     )
     # ONE grouped aggregation replaces k per-leaf stats jobs plus k
-    # isEmpty probes (OPTIMIZATION r16, guide §1.2 driver fixed cost):
+    # isEmpty probes (per-cycle driver fixed cost):
     # the leaves receive exactly the count/min/max the per-sub agg would
     # have computed, and absent keys are the empty ranges isEmpty skipped
     sub_stats = {
@@ -878,7 +789,7 @@ def admit_batch(
         )
         .collect()
     }
-    # generation reuse (VERDICT r12 #6): pin the committed view ONCE for
+    # generation reuse: pin the committed view ONCE for
     # all k sub-batch cycles — each cycle's probe and fold read the
     # persisted base plus the prior cycles' committed deltas instead of
     # re-opening the full index tables per cycle.  Created at the
@@ -937,7 +848,7 @@ def compact_lsh_index(
     * the id-sorted layout keeps per-file min/max stats tight, so the
       committed-snapshot filter and any future candidate-id pushdown
       stay file-prunable;
-    * ``meta.json`` is untouched — compaction changes layout, never
+    * the meta is untouched — compaction changes layout, never
       content (probe results bit-identical, pytest-locked).
 
     Like ``compact_partitions``, the swap (delete-old, rename-new) wants
@@ -956,8 +867,7 @@ def compact_lsh_index(
 
     _repair_compaction(spark, index_dir)
     hw = _read_meta(spark, index_dir)["max_doc_id"]
-    jvm = spark._jvm
-    fs, _ = _meta_path(spark, index_dir)
+    fs, _, jvm = _fs(spark, index_dir)
     out = {}
     for name in ("bands", "hsets"):
         live = f"{index_dir}/{name}.parquet"
@@ -975,15 +885,15 @@ def compact_lsh_index(
                 .sortWithinPartitions("doc_id")
                 .write.parquet(tmp)
             )
-            # the boolean-return discipline (ADVICE r10, applied module-
-            # wide): a false delete means the live dir still exists and
-            # the rename below cannot land — the compaction would report
-            # success having changed nothing; a false rename after a
-            # successful delete would leave the table missing until the
-            # NEXT entry point's _repair_compaction, so repair inline.
+            # the boolean-return discipline (applied module-wide): a false
+            # delete means the live dir still exists and the rename below
+            # cannot land — the compaction would report success having
+            # changed nothing; a false rename after a successful delete
+            # would leave the table missing until the NEXT entry point's
+            # _repair_compaction, so repair inline.
             if not fs.delete(live_p, True):
                 # Hadoop delete ALSO returns false when the path does not
-                # exist (ADVICE r11) — a live table that vanished after
+                # exist — a live table that vanished after
                 # _repair_compaction (out-of-band delete) must surface as
                 # the missing-table diagnosis, not a misleading
                 # 'could not delete'.
@@ -993,7 +903,7 @@ def compact_lsh_index(
                     # next entry point's _repair_compaction promotes it
                     # (live-missing + complete temp is exactly the
                     # crashed-swap state it repairs) — so the remediation
-                    # is a re-run, never a rebuild (code-review r12)
+                    # is a re-run, never a rebuild
                     raise RuntimeError(
                         f"compact_lsh_index: live table {live_p} vanished "
                         "at the swap (deleted out-of-band or by a "
@@ -1031,10 +941,8 @@ def _repair_compaction(spark: SparkSession, index_dir: str) -> bool:
       rename, therefore a complete temp exists — rename it in.  A
       missing live with no complete temp is real corruption (someone
       deleted data out-of-band) and raises instead of guessing."""
-    jvm = spark._jvm
-    fs, _ = _meta_path(spark, index_dir)
+    fs, root, jvm = _fs(spark, index_dir)
     HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(index_dir)
     repaired = False
     for name in ("bands", "hsets"):
         live = HPath(f"{index_dir}/{name}.parquet")
@@ -1092,8 +1000,7 @@ def vacuum_lsh_index(spark: SparkSession, index_dir: str) -> int:
     ``spark.sql.files.ignoreMissingFiles`` during repair windows."""
     _repair_compaction(spark, index_dir)
     hw = _read_meta(spark, index_dir)["max_doc_id"]
-    jvm = spark._jvm
-    fs, _ = _meta_path(spark, index_dir)
+    fs, _, jvm = _fs(spark, index_dir)
     removed = 0
     for name in ("bands", "hsets"):
         orphan_files = (
@@ -1110,7 +1017,7 @@ def vacuum_lsh_index(spark: SparkSession, index_dir: str) -> int:
             # would miss the real file — and a missed delete that still
             # counted its rows would tell the caller the index is clean,
             # the crashed batch would be retried, and the double-append
-            # would commit duplicates (ADVICE r9).  Route through
+            # would commit duplicates.  Route through
             # java.net.URI (decodes) and fail LOUDLY on a false delete.
             p = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r["path"]))
             if not fs.delete(p, False):

@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .workspace import _fs
+from .workspace import _dir_files, _fs
 
 #: manifest location inside a table dir (underscore = ignored by readers)
 MANIFEST_DIR = "_manifest"
@@ -75,17 +75,8 @@ def _read_manifest(
     spark: SparkSession, data_dir: str, schema: StructType | None = None
 ) -> DataFrame | None:
     """The manifest of *data_dir* read from its listed part files, or None
-    if it has none.  Passing the part files rather than the ``_manifest``
-    root keeps Spark from warning that the root path was ignored; a known
-    *schema* skips the schema-inference job."""
-    fs, root, _ = _fs(spark, os.path.join(data_dir, MANIFEST_DIR))
-    if not fs.exists(root):
-        return None
-    parts = sorted(
-        st.getPath().toString()
-        for st in fs.listStatus(root)
-        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
-    )
+    if it has none; a known *schema* skips the schema-inference job."""
+    parts = _dir_files(spark, os.path.join(data_dir, MANIFEST_DIR))
     if not parts:
         return None
     reader = spark.read if schema is None else spark.read.schema(schema)

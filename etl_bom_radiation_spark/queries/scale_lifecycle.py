@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..workspace import _dir_files
 from . import load_events, register
 
 def _data_files(tbl: str, part_glob: str) -> list[str]:
@@ -179,7 +180,7 @@ def d02_scale_levers_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         e_vec = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         q_row = base_vectors(e_vec.filter(F.col("vec_id") == 0))
-        cent = spark.read.parquet(f"{ivf}/_centroids")
+        cent = spark.read.parquet(*_dir_files(spark, f"{ivf}/_centroids"))
         expected = layout.join(
             F.broadcast(probe_cells(q_row, cent, nprobe=4)), "cell"
         ).count()

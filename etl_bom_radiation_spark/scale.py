@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .workspace import _dir_files
+
 
 def _reject_reserved(df: DataFrame, reserved: set[str], fn_name: str) -> None:
     """The sort/rank index helpers build internal columns via withColumn —
@@ -596,7 +598,7 @@ def ivf_probe_candidates(
     idx = spark.read.parquet(index_dir)
     if nprobe is None:
         return idx, q_row
-    cent = spark.read.parquet(f"{index_dir}/_centroids")
+    cent = spark.read.parquet(*_dir_files(spark, f"{index_dir}/_centroids"))
     probe = probe_cells(q_row, cent, nprobe)
     return idx.join(F.broadcast(probe), "cell"), q_row
 

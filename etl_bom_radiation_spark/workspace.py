@@ -39,6 +39,43 @@ def _fs(spark: SparkSession, path: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
 
 
+def _write_atomic(fs, jvm, path: str, text: str, what: str) -> None:
+    """Write *text* to *path* complete under the dot-temp ``.<name>.tmp``
+    beside it, then rename it in, so *path* exists only once it is whole.
+    A rename that returns false raises ``OSError`` (prefixed *what*)."""
+    final = jvm.org.apache.hadoop.fs.Path(path)
+    tmp = jvm.org.apache.hadoop.fs.Path(final.getParent(), f".{final.getName()}.tmp")
+    out = fs.create(tmp, True)
+    out.write(bytearray(text, "utf-8"))
+    out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"{what}: could not commit {final}")
+
+
+def _read_text(fs, jvm, path) -> str:
+    """Full contents of a small file (a Hadoop ``Path``) as UTF-8 text."""
+    stream = fs.open(path)
+    try:
+        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
+def _dir_files(spark: SparkSession, path: str) -> list[str]:
+    """The files directly under the directory *path*, skipping ``_``/``.``
+    names (markers, temps), sorted; empty if *path* does not exist.
+    Reading these instead of a ``_``-prefixed directory itself keeps Spark
+    from warning that the root path was ignored."""
+    fs, root, _ = _fs(spark, path)
+    if not fs.exists(root):
+        return []
+    return sorted(
+        st.getPath().toString()
+        for st in fs.listStatus(root)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    )
+
+
 @dataclass(frozen=True)
 class Workspace:
     base: str

@@ -1,11 +1,10 @@
-"""AST lint: the Hadoop FS boolean-return discipline, ratcheted (VERDICT
-r11 #5).
+"""AST lint: the Hadoop FS boolean-return discipline, ratcheted.
 
 Hadoop's ``FileSystem.rename``/``delete`` report failure by RETURNING
 FALSE — no exception — so an unchecked call site is a silent-loss bug
-class this repo has now fixed seven times by audit (ADVICE r10 ×4 + the
-r11 module-wide sweep + manifest._swap_in).  Nothing stopped an eighth
-from being written; this lint does.
+class this repo has fixed seven times by audit (four call sites, one
+module-wide sweep, manifest._swap_in).  Nothing stopped an eighth from
+being written; this lint does.
 
 Rule: every statement-level ``fs.rename(...)`` / ``fs.delete(...)`` in
 the package (result discarded — an ``ast.Expr`` whose value is the
@@ -35,6 +34,10 @@ inside the atomic writers in ``ATOMIC_WRITERS``, which write under a temp
 name and rename in.  Empty markers (``fs.create(p, True).close()``) stay
 allowed: their content is their existence.  ``test_in_place_lint_is_live``
 covers this rule the same way.
+
+Third rule, one FS-handle source: ``getFileSystem(`` is called only inside
+``workspace._fs``, so every Hadoop handle comes from one function that a
+test can patch (``test_fs_handle_lint_is_live`` covers it).
 """
 
 from __future__ import annotations
@@ -49,9 +52,9 @@ PKG = os.path.join(
 
 MARKER = "best-effort"
 
-#: the functions allowed to write into an ``fs.create`` stream: each writes
-#: complete under a temp name and then renames it in
-ATOMIC_WRITERS = {"_write_manifest", "_write_meta"}
+#: the functions allowed to write into an ``fs.create`` stream: the one
+#: shared writer, which writes complete under a temp name and renames it in
+ATOMIC_WRITERS = {"_write_atomic"}
 
 
 def unchecked_fs_calls(source: str, filename: str = "<mem>") -> list[str]:
@@ -60,7 +63,7 @@ def unchecked_fs_calls(source: str, filename: str = "<mem>") -> list[str]:
     ``best-effort`` marker — in the statement's own lines, or in a pure
     COMMENT line directly above it (a trailing marker on a preceding
     STATEMENT must not leak down and suppress the lint for a new
-    unchecked call written below it; code-review r12).  Receiver
+    unchecked call written below it).  Receiver
     matching is the repo convention: the Hadoop FileSystem handle is
     always bound to a local name ``fs``."""
     tree = ast.parse(source)
@@ -191,8 +194,8 @@ def test_lint_is_live():
     assert clean == []
 
     # a marker TRAILING a preceding statement must not leak down to a
-    # new unchecked call written below it (code-review r12) — only a
-    # pure comment line directly above counts
+    # new unchecked call written below it — only a pure comment line
+    # directly above counts
     leak = unchecked_fs_calls(
         "def f(fs, a, b, c):\n"
         "    fs.delete(a, True)  # best-effort: scratch only\n"
@@ -227,19 +230,17 @@ def test_in_place_lint_is_live():
         "        out.write(b'x')\n"
         "        out.close()\n"
         "    fs.create(p, True).write(b'x')\n"
-        "def _write_manifest(fs, p):\n"
+        "def _write_atomic(fs, p):\n"
         "    def inner():\n"
         "        fs.create(p, True).writeBytes('x')\n"
     )
     assert flagged == ["<mem>:2", "<mem>:7", "<mem>:10", "<mem>:13"]
 
     clean = in_place_writes(
-        "def _write_manifest(fs, p):\n"
+        "def _write_atomic(fs, p):\n"
         "    out = fs.create(p, True)\n"
         "    out.write(b'x')\n"
         "    out.close()\n"
-        "def _write_meta(fs, p):\n"
-        "    fs.create(p, True).write(b'x')\n"
         "def marker(fs, p):\n"
         "    fs.create(p, True).close()\n"
         "    out = fs.create(p, True)\n"
@@ -249,3 +250,46 @@ def test_in_place_lint_is_live():
         "    out.write(b'x')\n"
     )
     assert clean == []
+
+
+def fs_handle_sites(source: str, filename: str = "<mem>") -> list[str]:
+    """``(file:line)`` of every ``getFileSystem(...)`` call outside the
+    function ``_fs`` of ``workspace.py``."""
+    tree = ast.parse(source)
+    allowed = set()
+    if os.path.basename(filename) == "workspace.py":
+        for n in ast.walk(tree):
+            if isinstance(n, ast.FunctionDef) and n.name == "_fs":
+                allowed |= {id(c) for c in ast.walk(n)}
+    return [
+        f"{filename}:{n.lineno}"
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "getFileSystem"
+        and id(n) not in allowed
+    ]
+
+
+def test_package_fs_handles_come_from_workspace_fs():
+    offenders = _package_offenders(fs_handle_sites)
+    assert not offenders, (
+        "Hadoop FileSystem handles made outside workspace._fs (take "
+        "`fs, path, jvm = _fs(spark, uri)` instead): " + ", ".join(offenders)
+    )
+
+
+def test_fs_handle_lint_is_live():
+    """The handle rule flags ``getFileSystem`` anywhere but ``_fs`` in
+    ``workspace.py`` — a same-named ``_fs`` elsewhere is no exemption."""
+    src = (
+        "def _fs(spark, path):\n"
+        "    return path.getFileSystem(spark.conf)\n"
+        "def other(spark, p):\n"
+        "    return p.getFileSystem(spark.conf)\n"
+    )
+    assert fs_handle_sites(src, "pkg/workspace.py") == ["pkg/workspace.py:4"]
+    assert fs_handle_sites(src, "pkg/lsh_index.py") == [
+        "pkg/lsh_index.py:2",
+        "pkg/lsh_index.py:4",
+    ]

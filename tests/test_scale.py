@@ -1178,7 +1178,7 @@ def test_compact_lsh_index_layout_only(spark, tmp_path):
 def test_compact_lsh_index_swap_boolean_failures_surface(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r10 discipline on the index-compaction swap: a delete or
+    """The boolean-return discipline on the index-compaction swap: a delete or
     rename that fails BY RETURNING FALSE (Hadoop boolean contract) must
     raise, not proceed.  A lying delete used to make the compaction a
     silent no-op that reported success; a lying rename left the table
@@ -1205,26 +1205,26 @@ def test_compact_lsh_index_swap_boolean_failures_surface(
             ),
         )
     before_rows = _index_rows(spark, d)
-    real_meta_path = L._meta_path
+    real_fs = L._fs
 
     def lie(**kw):
-        # ONE lying instance shared across _meta_path calls, so the lie
+        # ONE lying instance shared across _fs calls, so the lie
         # count is consumed process-wide (the inline repair must see an
         # honest FS once the single lie has fired)
         state: dict = {}
 
         def patched(s, i):
-            fs, p = real_meta_path(s, i)
+            fs, p, jvm = real_fs(s, i)
             state.setdefault("fs", LyingFS(fs, **kw))
-            return state["fs"], p
+            return state["fs"], p, jvm
 
-        monkeypatch.setattr(L, "_meta_path", patched)
+        monkeypatch.setattr(L, "_fs", patched)
 
     # the live-table delete lies: swap cannot land — raise, change nothing
     lie(fail_deletes=1, path_match="bands.parquet")
     with pytest.raises(RuntimeError, match="could not delete"):
         L.compact_lsh_index(spark, d, files_per_table=1)
-    monkeypatch.setattr(L, "_meta_path", real_meta_path)
+    monkeypatch.setattr(L, "_fs", real_fs)
     assert _index_rows(spark, d) == before_rows
 
     # the rename-in lies AFTER a successful delete: raise, but repair the
@@ -1232,14 +1232,14 @@ def test_compact_lsh_index_swap_boolean_failures_surface(
     lie(fail_renames=1, path_match=".bands.compact-")
     with pytest.raises(RuntimeError, match="could not swap"):
         L.compact_lsh_index(spark, d, files_per_table=1)
-    monkeypatch.setattr(L, "_meta_path", real_meta_path)
+    monkeypatch.setattr(L, "_fs", real_fs)
     assert (Path(d) / "bands.parquet").exists()
     assert _index_rows(spark, d) == before_rows
 
     # an honest run then compacts to the requested layout
     L.compact_lsh_index(spark, d, files_per_table=1)
     assert _index_rows(spark, d) == before_rows
-    fs, _ = real_meta_path(spark, d)  # the REAL fs: the lies are over
+    fs, _, _ = real_fs(spark, d)  # the REAL fs: the lies are over
     bands_p = spark._jvm.org.apache.hadoop.fs.Path(f"{d}/bands.parquet")
     assert L._part_file_count(fs, bands_p) <= 1
 
@@ -1642,224 +1642,131 @@ def test_admit_batch_skewed_ids_resplit_recursively(spark, tmp_path, monkeypatch
     assert sum(leaf_sizes) == 16  # all novel docs admitted, exactly once
 
 
-def test_meta_swap_crash_repair(spark, tmp_path):
-    """_write_meta's delete+rename swap window (ADVICE r9): a crash
-    between the delete and the rename leaves no live meta but a COMPLETE
-    ``meta.json.tmp`` — and every entry point starts at ``_read_meta``,
-    so without a repair the index (including its own repair tooling) was
-    unreachable.  ``_read_meta`` now renames the tmp in, completing the
-    commit.  A stale tmp NEXT TO a live meta (crash before the delete)
-    is ignored: the live meta stays authoritative."""
-    import json
-
-    import etl_bom_radiation_spark.lsh_index as L
-
-    d = str(tmp_path / "idx")
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
-    assert (
-        L.update_lsh_index(
-            spark, d, _docs_frame(spark, [(10, "novel doc about morton codes")])
-        )
-        == 1
-    )
-    meta = Path(d) / "meta.json"
-    committed = meta.read_text()
-    assert json.loads(committed)["max_doc_id"] == 10
-
-    # crash BEFORE the delete: a superseded tmp alongside the live meta
-    tmp = Path(d) / "meta.json.tmp"
-    tmp.write_text(json.dumps({"max_doc_id": 999, "epoch": None}))
-    assert L._read_meta(spark, d)["max_doc_id"] == 10  # live meta wins
-
-    # crash BETWEEN delete and rename: live gone, complete tmp present
-    tmp.write_text(committed)
-    meta.unlink()
-    assert L._read_meta(spark, d)["max_doc_id"] == 10  # restored from tmp
-    assert meta.exists() and not tmp.exists()
-    # the commit really completed: the lifecycle continues from the mark
-    assert (
-        L.update_lsh_index(
-            spark, d, _docs_frame(spark, [(11, "another novel doc on z order")])
-        )
-        == 1
-    )
-    assert L._read_meta(spark, d)["max_doc_id"] == 11
-
-
-def test_meta_first_write_torn_tmp_not_promoted(spark, tmp_path):
-    """ADVICE r10: the 'tmp is complete by the write protocol' argument
-    fails for the FIRST-ever meta write (build on a new index) — no live
-    meta exists during the entire tmp write, so a crash mid-create
-    leaves a TORN ``meta.json.tmp`` with the live meta missing, and
-    promoting it would turn every later read into a JSON parse error on
-    a live meta instead of the intended missing-meta failure mode.
-    ``_repair_meta`` now validates the tmp before renaming it in and
-    IGNORES an invalid one — not deletes it (code-review r11): the same
-    on-disk state is what a reader sees while the first-ever write is
-    still writing the tmp, and deleting it under the writer would abort
-    a healthy initial build."""
+def test_read_meta_missing_is_file_not_found(spark, tmp_path):
+    """An index dir with no committed meta version (never built, or a
+    first build that died before its commit) fails with
+    ``FileNotFoundError`` naming the meta dir, through ``_read_meta`` and
+    through every entry point that starts there — not with a Java error
+    from opening a file that is not there."""
     import etl_bom_radiation_spark.lsh_index as L
 
     d = tmp_path / "idx"
     d.mkdir()
-    tmp = d / "meta.json.tmp"
-    tmp.write_text('{"max_doc_id": 1')  # crashed mid-create: torn JSON
-    assert L._repair_meta(spark, str(d)) is False
-    assert not (d / "meta.json").exists()
-    assert tmp.exists()  # left in place: it may be an in-flight write
-    # the caller sees the honest missing-meta failure, not a parse error
-    with pytest.raises(Exception, match="meta.json"):
-        L._read_meta(spark, str(d))
-    # parseable-but-not-a-meta content is refused the same way
-    tmp.write_text('{"wrong_key": 1}')
-    assert L._repair_meta(spark, str(d)) is False
-    assert not (d / "meta.json").exists()
-    # a COMPLETE tmp still repairs (the ADVICE r9 swap-window fix)
-    tmp.write_text('{"max_doc_id": 7, "epoch": null}')
-    assert L._repair_meta(spark, str(d)) is True
-    assert L._read_meta(spark, str(d))["max_doc_id"] == 7
-    # and a lingering torn tmp never wedges the next real build: the
-    # writer overwrites it and commits normally
-    (d / "meta.json").unlink()
-    tmp.write_text('{"max_doc_id": 1')
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), str(d))
-    assert L._read_meta(spark, str(d))["max_doc_id"] == 2
-    assert not tmp.exists()
+    for where in (d, tmp_path / "never_created"):
+        with pytest.raises(FileNotFoundError, match="_meta"):
+            L._read_meta(spark, str(where))
+    with pytest.raises(FileNotFoundError, match="_meta"):
+        L.probe_lsh_index(
+            spark, str(d), _docs_frame(spark, [(1, "a doc about z order")])
+        )
+
+
+def test_meta_stray_temp_ignored(spark, tmp_path):
+    """A temp left by a commit that crashed before its rename — torn or
+    complete — is never read: readers glob committed names only.  With
+    no committed version the read is the missing-meta failure; with one,
+    that version stays authoritative; and the next commit overwrites the
+    stray temp and lands normally."""
+    import etl_bom_radiation_spark.lsh_index as L
+
+    d = tmp_path / "idx"
+    meta = d / "_meta"
+    meta.mkdir(parents=True)
+    stray = ('{"max_doc_id": 1', '{"max_doc_id": 999, "epoch": null}')
+    for text in stray:
+        (meta / f".{0:020d}.json.tmp").write_text(text)
+        with pytest.raises(FileNotFoundError):
+            L._read_meta(spark, str(d))
+    L._write_meta(spark, str(d), 3)
+    for text in stray:
+        (meta / f".{1:020d}.json.tmp").write_text(text)
+        assert L._read_meta(spark, str(d)) == {"max_doc_id": 3, "epoch": None}
+    L._write_meta(spark, str(d), 4, epoch=1)
+    assert L._read_meta(spark, str(d)) == {"max_doc_id": 4, "epoch": 1}
+    assert not [f for f in meta.iterdir() if f.name.endswith(".tmp")]
 
 
 def test_write_meta_rename_failure_surfaces(spark, tmp_path, monkeypatch):
-    """ADVICE r10: ``_write_meta`` ignored ``fs.rename``'s boolean — on
-    a store where rename fails WITHOUT throwing, the commit was silently
-    lost while ``update_lsh_index`` reported success: the appended
-    keeper rows sit above a stale mark (orphans), and the next vacuum
-    deletes admitted docs after the stream checkpoint advanced.  A
-    failed rename now raises — unless a concurrent reader's
-    ``_repair_meta`` won the rename of the SAME tmp, which lands the
-    identical payload (a completed commit, not a loss)."""
+    """``_write_meta`` checks ``fs.rename``'s boolean: on a store where
+    the rename fails WITHOUT throwing, a silent commit loss would leave
+    the appended keeper rows above a stale mark while the caller reports
+    success, and the next vacuum would delete admitted docs.  The failed
+    commit raises, the previous version stays authoritative, and the next
+    commit succeeds."""
     import etl_bom_radiation_spark.lsh_index as L
+    from tests.conftest import LyingFS
 
     d = str(tmp_path / "idx")
     L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
-    real_meta_path = L._meta_path
+    real_fs = L._fs
 
-    class _RenameLiesFS:
-        """Delegates to the real FS but reports rename failure; with
-        ``reader_wins`` the rename actually happens first (a concurrent
-        repairer got there), it just looks failed to the writer."""
+    def lying(s, path):
+        fs, p, jvm = real_fs(s, path)
+        return LyingFS(fs, fail_renames=1), p, jvm
 
-        def __init__(self, fs, reader_wins):
-            self._fs, self._reader_wins = fs, reader_wins
+    monkeypatch.setattr(L, "_fs", lying)
+    with pytest.raises(OSError, match="could not commit"):
+        L._write_meta(spark, d, 99, epoch=5)
+    monkeypatch.setattr(L, "_fs", real_fs)
+    assert L._read_meta(spark, d) == {"max_doc_id": 2, "epoch": None}
 
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-        def rename(self, src, dst):
-            if self._reader_wins:
-                assert self._fs.rename(src, dst)
-            return False
-
-    def patch(reader_wins):
-        monkeypatch.setattr(
-            L,
-            "_meta_path",
-            lambda s, i: (
-                lambda fs_p: (_RenameLiesFS(fs_p[0], reader_wins), fs_p[1])
-            )(real_meta_path(s, i)),
-        )
-
-    # rename fails and nothing restored the meta: surface, don't succeed
-    patch(reader_wins=False)
-    with pytest.raises(RuntimeError, match="meta commit failed"):
-        L._write_meta(spark, d, 99)
-    # the completed tmp the failure left behind is itself repairable
-    monkeypatch.setattr(L, "_meta_path", real_meta_path)
-    assert L._read_meta(spark, d)["max_doc_id"] == 99
-
-    # a concurrent reader completed the swap: same payload landed — success
-    patch(reader_wins=True)
     L._write_meta(spark, d, 123, epoch=7)
-    monkeypatch.setattr(L, "_meta_path", real_meta_path)
-    meta = L._read_meta(spark, d)
-    assert meta["max_doc_id"] == 123 and meta["epoch"] == 7
+    assert L._read_meta(spark, d) == {"max_doc_id": 123, "epoch": 7}
 
 
-def test_write_meta_repairer_consumed_tmp_self_heals(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r11: the narrow first-write race — a concurrent reader's
-    ``_repair_meta`` promotes the writer's complete tmp, the writer's
-    own delete then removes the just-promoted meta, and the rename finds
-    no tmp.  End state at the rename: tmp GONE, live meta GONE, payload
-    landed nowhere — the old code raised 'meta commit failed' with no
-    meta left although the payload was still in memory.  ``_write_meta``
-    now re-stages the tmp from the in-memory payload and retries once,
-    so the raced commit self-heals."""
-    import json
+def test_meta_keeps_at_most_two_versions(spark, tmp_path):
+    """Each commit adds one version and deletes those below its
+    predecessor, so ``_meta/`` never holds more than two."""
+    import etl_bom_radiation_spark.lsh_index as L
+
+    d = tmp_path / "idx"
+    for mark in range(40):
+        L._write_meta(spark, str(d), mark, epoch=mark)
+        assert len(list((d / "_meta").glob("[0-9]*.json"))) <= 2
+    assert sorted(p.name for p in (d / "_meta").glob("[0-9]*.json")) == [
+        f"{38:020d}.json",
+        f"{39:020d}.json",
+    ]
+    assert L._read_meta(spark, str(d)) == {"max_doc_id": 39, "epoch": 39}
+
+
+def test_meta_reader_during_commits(spark, tmp_path):
+    """A reader polling ``_read_meta`` while 30 commits land never fails
+    and never sees the mark go backwards: some committed version exists
+    at every instant, and a version deleted under the reader is
+    re-listed."""
+    import threading
 
     import etl_bom_radiation_spark.lsh_index as L
 
     d = str(tmp_path / "idx")
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
-    real_meta_path = L._meta_path
+    L._write_meta(spark, d, 0)
+    seen, errors, done = [], [], threading.Event()
 
-    class _RaceFS:
-        """First rename: simulate the raced loss — consume the tmp (as
-        the repairer's promote + the writer's delete jointly do) and
-        report failure.  Later calls are honest, so the retry lands."""
+    def reader():
+        while not done.is_set():
+            try:
+                seen.append(L._read_meta(spark, d)["max_doc_id"])
+            except Exception as e:  # any failure fails the test
+                errors.append(e)
+                return
 
-        def __init__(self, fs):
-            self._fs, self._raced = fs, False
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-        def rename(self, src, dst):
-            if not self._raced:
-                self._raced = True
-                assert self._fs.delete(src, False)  # tmp gone, p gone
-                return False
-            return self._fs.rename(src, dst)
-
-    state: dict = {}
-
-    def patched(s, i):
-        fs, p = real_meta_path(s, i)
-        state.setdefault("fs", _RaceFS(fs))
-        return state["fs"], p
-
-    monkeypatch.setattr(L, "_meta_path", patched)
-    (Path(d) / "meta.json").unlink()  # the first-ever-write state
-    L._write_meta(spark, d, 42, epoch=3)  # must NOT raise
-    monkeypatch.setattr(L, "_meta_path", real_meta_path)
-    meta = L._read_meta(spark, d)
-    assert meta["max_doc_id"] == 42 and meta["epoch"] == 3
-    assert json.loads((Path(d) / "meta.json").read_text())["max_doc_id"] == 42
-
-
-def test_valid_meta_mark_must_be_json_integer(spark, tmp_path):
-    """ADVICE r11: ``_valid_meta`` must not promote a parseable tmp whose
-    mark is a float (``int(3.9)`` truncates) or a bool — the writer only
-    emits JSON integers, so anything else is hand-edited or corrupted."""
-    import etl_bom_radiation_spark.lsh_index as L
-
-    assert L._valid_meta('{"max_doc_id": 7, "epoch": null}') is True
-    for bad in (
-        '{"max_doc_id": 3.9}',
-        '{"max_doc_id": true}',
-        '{"max_doc_id": "7"}',
-        '{"max_doc_id": null}',
-    ):
-        assert L._valid_meta(bad) is False, bad
-    # and the repair path refuses them end-to-end
-    d = tmp_path / "idx"
-    d.mkdir()
-    (d / "meta.json.tmp").write_text('{"max_doc_id": 3.9}')
-    assert L._repair_meta(spark, str(d)) is False
-    assert not (d / "meta.json").exists()
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        for mark in range(1, 31):
+            L._write_meta(spark, d, mark)
+    finally:
+        done.set()
+        t.join(timeout=60)
+    assert not t.is_alive()
+    assert not errors, errors
+    assert seen and seen == sorted(seen)
+    assert L._read_meta(spark, d)["max_doc_id"] == 30
 
 
 def test_compact_missing_live_table_diagnosed(spark, tmp_path, monkeypatch):
-    """ADVICE r11: Hadoop delete returns false for a MISSING path too —
+    """Hadoop delete returns false for a MISSING path too —
     a live table that vanishes out-of-band right at the swap must
     surface as the missing-table diagnosis, not as a misleading
     'could not delete'."""
@@ -1878,7 +1785,7 @@ def test_compact_missing_live_table_diagnosed(spark, tmp_path, monkeypatch):
                  for i in range(5)],
             ),
         )
-    real_meta_path = L._meta_path
+    real_fs = L._fs
 
     class _VanishFS(LyingFS):
         """delete(live): the dir vanishes (really deleted) but the call
@@ -1893,18 +1800,18 @@ def test_compact_missing_live_table_diagnosed(spark, tmp_path, monkeypatch):
     state: dict = {}
 
     def patched(s, i):
-        fs, p = real_meta_path(s, i)
+        fs, p, jvm = real_fs(s, i)
         state.setdefault("fs", _VanishFS(fs))
-        return state["fs"], p
+        return state["fs"], p, jvm
 
-    monkeypatch.setattr(L, "_meta_path", patched)
+    monkeypatch.setattr(L, "_fs", patched)
     with pytest.raises(RuntimeError, match="vanished at the swap"):
         L.compact_lsh_index(spark, d, files_per_table=1)
     # the remediation the message promises holds: an honest re-run
     # resumes from the completed temp (_repair_compaction promotes it)
-    monkeypatch.setattr(L, "_meta_path", real_meta_path)
+    monkeypatch.setattr(L, "_fs", real_fs)
     L.compact_lsh_index(spark, d, files_per_table=1)
-    fs, _ = real_meta_path(spark, d)
+    fs, _, _ = real_fs(spark, d)
     bands_p = spark._jvm.org.apache.hadoop.fs.Path(f"{d}/bands.parquet")
     assert fs.exists(bands_p)
 
