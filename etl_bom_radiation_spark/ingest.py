@@ -21,7 +21,9 @@ Scale design:
   difference between |partitions| output files and |tasks|x|partitions|
   small files;
 * quarantine detection is header/metadata-based (NULL ncols/Date after
-  ANSI-safe try_cast) — no second decode pass;
+  ANSI-safe try_cast) — no second decode pass. Each file's text is still
+  read twice, though: once by the classify collect, once by the write
+  (ROADMAP item 2);
 * file moves are Hadoop FS renames (server-side copy+delete in the
   reference, bom.py:16-25); the list of files per batch is small (one
   driver-side loop over file names, never over rows).

@@ -124,7 +124,6 @@ from __future__ import annotations
 
 import json
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -132,7 +131,7 @@ from .queries.banded_lsh import BUCKET_CAP, band_frame, gate_buckets, hashed_set
 from .queries.incremental_lsh import shard_verdicts
 from .queries.llm_queries import _shingles, _tokens
 from .queries.minhash_eval import sketch_from_hashes
-from .workspace import _fs, _read_text, _write_atomic
+from .workspace import _commit_version, _fs, _read_latest, _versions
 
 #: committed meta versions live here as ``<n>.json`` (see :func:`_write_meta`)
 _META_DIR = "_meta"
@@ -168,14 +167,6 @@ def _sketch_frames(spark: SparkSession, docs: DataFrame, gate: bool = True):
     return bands, hsets
 
 
-def _meta_versions(fs, jvm, meta_dir) -> dict:
-    """version -> Hadoop ``Path`` of every committed meta version under
-    *meta_dir*, from ONE glob of committed names.  A temp is dot-prefixed,
-    so the glob never lists one, torn or complete."""
-    found = fs.globStatus(jvm.org.apache.hadoop.fs.Path(meta_dir, "[0-9]*.json"))
-    return {int(st.getPath().getName()[:-5]): st.getPath() for st in found or []}
-
-
 def _write_meta(
     spark: SparkSession, index_dir: str, max_doc_id: int, epoch=None
 ) -> None:
@@ -192,12 +183,10 @@ def _write_meta(
     detection — recorded in the SAME file as the mark, so a commit and
     its epoch are indivisible."""
     fs, meta_dir, jvm = _fs(spark, f"{index_dir}/{_META_DIR}")
-    versions = _meta_versions(fs, jvm, meta_dir)
+    versions = _versions(fs, jvm, meta_dir)
     n = max(versions, default=-1) + 1
     payload = json.dumps({"max_doc_id": max_doc_id, "epoch": epoch})
-    _write_atomic(
-        fs, jvm, f"{index_dir}/{_META_DIR}/{n:020d}.json", payload, "LSH index meta"
-    )
+    _commit_version(fs, jvm, meta_dir, n, payload, "LSH index meta")
     for v, old in versions.items():
         if v < n - 1:
             fs.delete(old, False)  # best-effort: superseded; the next commit retries
@@ -212,22 +201,14 @@ def _read_meta(spark: SparkSession, index_dir: str) -> dict:
     is taken again.  Raises ``FileNotFoundError`` when the index holds no
     committed version."""
     fs, meta_dir, jvm = _fs(spark, f"{index_dir}/{_META_DIR}")
-    while True:
-        versions = _meta_versions(fs, jvm, meta_dir)
-        if not versions:
-            raise FileNotFoundError(
-                f"no committed LSH index meta under {index_dir}/{_META_DIR}"
-            )
-        latest = versions[max(versions)]
-        try:
-            text = _read_text(fs, jvm, latest)
-        except Py4JJavaError:
-            if fs.exists(latest):
-                raise
-            continue
-        meta = json.loads(text)
-        meta["max_doc_id"] = int(meta["max_doc_id"])
-        return meta
+    latest = _read_latest(fs, jvm, meta_dir)
+    if latest is None:
+        raise FileNotFoundError(
+            f"no committed LSH index meta under {index_dir}/{_META_DIR}"
+        )
+    meta = json.loads(latest[1])
+    meta["max_doc_id"] = int(meta["max_doc_id"])
+    return meta
 
 
 def _part_file_count(fs, path) -> int:

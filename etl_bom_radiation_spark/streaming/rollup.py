@@ -14,18 +14,40 @@ At 100 TB the right structure is an incrementally-maintained rollup:
   per group so reader cost stays O(groups), not O(batches x groups).
 
 This is the same partial/final split Spark's own HashAggregate does inside
-one query, lifted across micro-batches. Used by tests/test_rollup.py and
-wireable into ingest via ``foreachBatch``.
+one query, lifted across micro-batches. ``ingest_stream(rollup_dir=...)``
+appends each micro-batch's partials.
+
+Layout and commit. Every write adds one ``gen=<label>`` generation under
+the rollup dir (hive-style, so readers see ``gen`` as a partition column):
+``batch<id>`` or ``adhoc<uuid>`` for an append, ``fold-<n>-<uuid8>`` for
+a compaction, which then commits the fold record ``_folds/<n>.json`` =
+``{"fold": <label>, "absorbed": [<labels>]}`` as the next numbered version
+(``workspace._commit_version``). No directory is ever renamed. Readers
+drop the generations the latest record absorbed and every fold but the
+one it names, so a fold and the generations it replaced are never both
+counted, and an uncommitted fold never is. Nothing waits or runs on a
+timer: appends and reads proceed while a compaction folds.
+
+Conflict detection needs a rename that refuses an existing name (HDFS and
+local filesystems do); on object stores, run one compactor.
 """
 
 from __future__ import annotations
 
+import json
 from uuid import uuid4
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..workspace import _commit_version, _fs, _read_latest, _read_text, _versions
+
 KEYS = ["RadiationType", "year", "month", "day", "hour"]
+
+#: fold records live here as ``<n>.json`` (see :func:`compact_rollup`);
+#: the ``_`` prefix keeps the directory out of Spark's partition discovery
+_FOLDS = "_folds"
+
 
 def _partial_aggs():
     # built lazily: Column construction needs an active SparkContext
@@ -37,278 +59,64 @@ def _partial_aggs():
     ]
 
 
-#: how long a fence marker (the compactor's swap marker, or an appender's
-#: per-append lease) may go without a heartbeat before being treated as a
-#: crashed owner's leftovers. LIVE owners re-touch their marker every
-#: quarter-lease from a daemon thread (:func:`_heartbeat`) for as long as
-#: their work runs — a slow fold or a big append never goes stale, only a
-#: dead process does (code-review r5: without the heartbeat, any owner
-#: outliving the lease had its fence torn down mid-operation, reopening
-#: the lost-append race). Assumes the hosts' clocks agree to well within
-#: the lease and that a live process is never paused longer than the lease
-#: (true for a driver-side ops job; tighten if compaction ever moves
-#: off-host).
-_SWAP_LEASE_MS = 60_000
-
-
-class _heartbeat:
-    """Context manager: re-touch *path* every quarter-lease on a daemon
-    thread so the fence stays fresh exactly as long as its owner is alive.
-    py4j is thread-safe (each thread gets its own gateway connection)."""
-
-    def __init__(self, fs, path):
-        import threading
-
-        self._fs, self._path = fs, path
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-
-    def _run(self):
-        # Retry on touch failure instead of exiting (ADVICE r5): a transient
-        # FS/py4j error must not silently disarm the heartbeat while the
-        # owner keeps working — one lease period later a concurrent entry
-        # point would treat the still-live fence as a crashed owner's and
-        # delete it mid-operation. Only a _stop (owner teardown) or a full
-        # two lease periods of consecutive failures (the fence is already
-        # stale by then, so the protection is gone either way) ends the loop,
-        # and both a failed touch and a disarm are logged so they're
-        # observable.
-        import logging
-
-        log = logging.getLogger(__name__)
-        failures = 0
-        while not self._stop.wait(_SWAP_LEASE_MS / 4000):
-            try:
-                self._fs.create(self._path, True).close()
-                failures = 0
-            except Exception:
-                failures += 1
-                log.warning(
-                    "heartbeat touch failed (%d consecutive) on %s",
-                    failures,
-                    self._path,
-                    exc_info=True,
-                )
-                if failures >= 8:  # 8 quarter-lease ticks = 2 lease periods
-                    log.error(
-                        "heartbeat disarmed after %d consecutive failures on "
-                        "%s; fence is stale and may be healed away",
-                        failures,
-                        self._path,
-                    )
-                    return
-
-    def __enter__(self):
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc):
-        self._stop.set()
-        self._thread.join()
-
-
-def _swap_paths(spark: SparkSession, rollup_dir: str):
-    """(fs, root, tmp, old, marker) for the compaction swap of *rollup_dir*.
-
-    ATOMICITY RESTRICTION (code-review r6): the fence/lease/swap protocol
-    relies on atomic ``createNewFile`` (the compaction fence) and atomic,
-    O(1) directory ``rename`` (the generation swap). Both hold on HDFS and
-    local/posix filesystems; NEITHER holds on s3a (create is HEAD-then-PUT,
-    rename is a copy+delete of every object), where two compactors can
-    both win the fence and the "milliseconds swap window" becomes minutes.
-    Run the rollup directory on HDFS-semantics storage, or front object
-    stores with an external lock service / a table format with commit
-    semantics.
-    """
-    from ..workspace import _fs
-
-    fs, root, jvm = _fs(spark, rollup_dir)
-    parent, name = root.getParent().toString(), root.getName()
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{parent}/.{name}.compact_tmp")
-    old = jvm.org.apache.hadoop.fs.Path(f"{parent}/.{name}.compact_old")
-    marker = jvm.org.apache.hadoop.fs.Path(f"{parent}/.{name}.compact_inprogress")
-    return fs, root, tmp, old, marker
-
-
-def _recover_rollup(spark: SparkSession, rollup_dir: str) -> None:
-    """Heal a crashed compact_rollup swap (code-review r3): if the rollup
-    dir is missing but the staged-aside previous generation exists, rename
-    it back — otherwise the next partial append would silently recreate
-    the dir with ONE batch of history and readers would undercount.
-
-    A LIVE compaction is not a crashed one (ADVICE r3): while the
-    in-progress marker is fresh — and a live compactor heartbeats it for
-    the whole fenced drain+fold+swap window (code-review r5) — the
-    compactor owns the directory and this waits instead of renaming the
-    staged-aside generation back mid-swap, which aborted the compaction
-    (or, losing the second race, nested a stale dir inside the rollup).
-    The wait is bounded (2x lease); if the marker is STILL fresh when the
-    bound expires (a legitimately heartbeated fold longer than the wait),
-    return WITHOUT healing (ADVICE r5): the compactor owns the directory
-    while its marker is fresh, and running the old->root heal at that
-    instant could land inside the swap window and rename the staged-aside
-    generation back mid-swap. Skipping the heal is safe for both callers —
-    readers only need root to exist, and it does outside the
-    milliseconds-long swap window; writers re-check the fence in their
-    acquire loop. A marker past the lease with no heartbeat means the
-    compactor died — remove it and heal as before."""
-    import time
-
-    fs, root, tmp, old, marker = _swap_paths(spark, rollup_dir)
-    deadline = time.time() + 2 * (_SWAP_LEASE_MS / 1000)  # hard bound on waiting
-    while fs.exists(marker) and time.time() < deadline:
-        try:
-            age_ms = int(time.time() * 1000) - fs.getFileStatus(
-                marker
-            ).getModificationTime()
-        except Exception:
-            break  # marker vanished between exists and stat: swap finished
-        if age_ms > _SWAP_LEASE_MS:
-            fs.delete(marker, False)  # best-effort: crashed compactor heal; re-aged next entry
-            break
-        time.sleep(0.05)
-    if fs.exists(marker):
-        # bounded wait expired with the fence still fresh: a live (slow,
-        # heartbeated) compaction owns the directory — never heal under it
-        return
-    if not fs.exists(root) and fs.exists(old):
-        if not fs.rename(old, root):
-            # boolean checked (ADVICE r10 discipline): proceeding on a
-            # silently-failed restore would delete the folded tmp below
-            # with root STILL missing — loud beats a heal that reports
-            # done while readers fail; the staged-aside generation is
-            # intact, so the next _recover_rollup retries this rename.
-            raise OSError(
-                f"_recover_rollup: could not restore {root} from the "
-                f"staged-aside generation {old}"
-            )
-        # the folded output in tmp is now stale (superseded by the restored
-        # partials) and re-derivable — discard it. tmp is left alone in any
-        # other state: it may belong to an in-flight compaction.
-        fs.delete(tmp, True)  # best-effort: stale folded scratch only
-
-
-def _acquire_append_lease(spark: SparkSession, rollup_dir: str):
-    """Register an in-flight partial append: create a per-append lease
-    marker the compactor's drain phase waits on, AFTER confirming no
-    compaction fence is up (backing off if one appears between the check
-    and our create — the compactor wins every race).
-
-    Without this, an append landing between the compactor's fold listing
-    and its directory swap would ride the staged-aside generation into
-    ``fs.delete(old)`` and be silently lost (VERDICT r4 #8 — the last
-    unproven interleaving). Returns ``(fs, lease_path)``; the caller must
-    delete the lease in a ``finally``."""
-    import time
-
-    jvm = spark._jvm
-    fs, root, tmp, old, marker = _swap_paths(spark, rollup_dir)
-    parent, name = root.getParent().toString(), root.getName()
-    lease = jvm.org.apache.hadoop.fs.Path(
-        f"{parent}/.{name}.append_{uuid4().hex}"
-    )
-    # generous absolute cap: a LIVE compaction heartbeats its fence and may
-    # legitimately hold it for many lease periods (big fold); waiting on a
-    # fresh fence is correct, so only a truly wedged fence should raise
-    deadline = time.time() + 60 * (_SWAP_LEASE_MS / 1000)
-    while time.time() < deadline:
-        _recover_rollup(spark, rollup_dir)  # waits out / heals any swap
-        fs.create(lease, True).close()
-        if not fs.exists(marker):
-            return fs, lease
-        # a compaction fenced between our recover check and our create:
-        # back off so its drain phase sees no straggler lease
-        fs.delete(lease, False)  # best-effort: a stale lease ages out of the drain
-        time.sleep(0.05)
-    raise TimeoutError(
-        f"append lease on {rollup_dir} not acquired within "
-        f"{60 * _SWAP_LEASE_MS} ms: compaction fence never cleared"
-    )
-
-
-def _drain_append_leases(spark: SparkSession, rollup_dir: str) -> None:
-    """Compactor side of the append fence: with the swap marker already up
-    (so no NEW append can start), wait for in-flight append leases to
-    finish. Live appenders heartbeat their lease for the whole write
-    (code-review r5), so a lease past the lease period is a crashed
-    appender's leftover and is removed — its process is gone, so its write
-    either already committed (the fold's listing sees it) or never will.
-    A heartbeating slow append resets the drain wait each touch."""
-    import time
-
-    fs, root, *_ = _swap_paths(spark, rollup_dir)
-    parent, name = root.getParent(), root.getName()
-    prefix = f".{name}.append_"
-    # a live slow append heartbeats its lease and is worth waiting for;
-    # only a wedged state (lease forever fresh, write never finishing)
-    # should abort the compaction, hence the generous absolute cap
-    deadline = time.time() + 60 * (_SWAP_LEASE_MS / 1000)
-    while time.time() < deadline:
-        live = 0
-        for st in fs.listStatus(parent):
-            p = st.getPath()
-            if not p.getName().startswith(prefix):
-                continue
-            age_ms = int(time.time() * 1000) - st.getModificationTime()
-            if age_ms > _SWAP_LEASE_MS:
-                fs.delete(p, False)  # best-effort: crashed appender; re-aged next pass
-            else:
-                live += 1
-        if not live:
-            return
-        time.sleep(0.05)
-    raise TimeoutError(
-        f"in-flight partial appends on {rollup_dir} did not drain within "
-        f"{60 * _SWAP_LEASE_MS} ms"
-    )
+def _latest_record(fs, jvm, folds) -> tuple[int, dict]:
+    """``(n, record)`` of the latest committed fold record; before the
+    first compaction, version -1 with no fold and nothing absorbed."""
+    latest = _read_latest(fs, jvm, folds)
+    if latest is None:
+        return -1, {"fold": None, "absorbed": []}
+    return latest[0], json.loads(latest[1])
 
 
 def append_hourly_partials(
     points: DataFrame, rollup_dir: str, batch_id: int | None = None
 ) -> None:
     """Reduce one batch of decoded points to per-hour partial aggregates and
-    add them as one GENERATION of the rollup (a batch touches few hours ->
-    few rows; the write is cheap and conflict-free). No forced coalesce(1):
-    a hard single-task write is a straggler when a batch touches many hours
-    (VERDICT r2); AQE already coalesces the post-aggregation partitions to
-    match the (tiny) output size, so small batches still produce one file.
+    add them as one GENERATION of the rollup (few rows; a cheap write). No
+    forced coalesce(1): a single-task write is a straggler when a batch
+    touches many hours, and AQE already coalesces the tiny output.
 
-    Every generation is a ``gen=<label>`` subdirectory (hive-style, so
-    readers see ``gen`` as a partition column and the layout stays uniform
-    across appends and compactions). With *batch_id* the label is
-    ``batch<id>`` and the write OVERWRITES that one generation — a
-    re-delivered streaming micro-batch (ingest_stream replay after a crash
-    between its rollup append and its commit marker) rewrites the same
-    subdir with identical content instead of double-appending its partials.
-    Without *batch_id* the label is unique per call (plain append
-    semantics for ad-hoc/batch callers).
+    With *batch_id* the label is ``batch<id>`` and the write OVERWRITES
+    that one generation — a re-delivered streaming micro-batch
+    (ingest_stream replay after a crash between its rollup append and its
+    commit marker) rewrites the same subdir with identical content instead
+    of double-appending its partials. Without *batch_id* the label is
+    unique per call (plain append semantics for ad-hoc/batch callers).
 
-    The write happens under a per-append lease marker so a concurrent
-    :func:`compact_rollup` drains it before swapping directories — safe to
-    run against a live compactor (see :func:`_acquire_append_lease`)."""
-    fs, lease = _acquire_append_lease(points.sparkSession, rollup_dir)
-    try:
-        label = f"batch{batch_id}" if batch_id is not None else f"adhoc{uuid4().hex}"
-        # heartbeat for the whole write: a big batch's aggregation+commit can
-        # outlive the lease, and a stale-looking lease would be deleted by a
-        # concurrent compactor's drain mid-write (code-review r5)
-        with _heartbeat(fs, lease):
-            (
-                points.groupBy(*KEYS)
-                .agg(*_partial_aggs())
-                .write.mode("overwrite")
-                .parquet(f"{rollup_dir}/gen={label}")
-            )
-    finally:
-        fs.delete(lease, False)  # best-effort: a stuck lease ages out of the drain
+    Safe to run during a :func:`compact_rollup`: Spark writes the
+    generation's ``_SUCCESS`` last, and a compaction absorbs only
+    generations that have one."""
+    label = f"batch{batch_id}" if batch_id is not None else f"adhoc{uuid4().hex}"
+    (
+        points.groupBy(*KEYS)
+        .agg(*_partial_aggs())
+        .write.mode("overwrite")
+        .parquet(f"{rollup_dir}/gen={label}")
+    )
 
 
 def read_hourly_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
     """Merge partials into final per-hour aggregates. Algebraic merge:
-    exact regardless of how many batches contributed to an hour."""
-    _recover_rollup(spark, rollup_dir)
-    p = spark.read.parquet(rollup_dir)  # gen= partition col discovered, unused
-    return p.groupBy(*KEYS).agg(
+    exact regardless of how many batches contributed to an hour.
+
+    The generations are listed under the latest fold record, and the
+    listing is taken again if a compaction committed meanwhile, so the
+    record and the listing agree. The filter is on the ``gen`` partition
+    column, so dropped generations are pruned, never opened. A read that
+    runs while a compaction deletes the generations it folded can still
+    fail loudly on a missing file; it never returns a wrong total."""
+    fs, root, jvm = _fs(spark, rollup_dir)
+    folds = jvm.org.apache.hadoop.fs.Path(root, _FOLDS)
+    while True:
+        n, rec = _latest_record(fs, jvm, folds)
+        p = spark.read.parquet(rollup_dir)  # lists every generation's files
+        if max(_versions(fs, jvm, folds), default=-1) == n:
+            break
+    gen = F.col("gen")
+    live = ~gen.startswith("fold-") & ~gen.isin(rec["absorbed"])
+    if rec["fold"] is not None:
+        live = live | (gen == rec["fold"])
+    return p.filter(live).groupBy(*KEYS).agg(
         F.sum("cnt").alias("points"),
         (F.sum("sum_rad") / F.sum("cnt")).alias("avg_radiation"),
         F.min("min_rad").alias("min_radiation"),
@@ -317,85 +125,75 @@ def read_hourly_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
 
 
 def compact_rollup(spark: SparkSession, rollup_dir: str) -> None:
-    """Fold all partials down to one row per group (reader cost back to
-    O(groups)).
+    """Fold every complete generation into one new generation holding one
+    row per group (reader cost back to O(groups)), and commit it.
 
-    The fold is written to a sibling temp directory and swapped in via two
-    renames — never an in-place overwrite of the directory being read: the
-    previous cache()-as-barrier version could recompute from a
-    partially-deleted source if cached blocks were evicted mid-overwrite
-    (ADVICE r2). A reader racing the swap can hit the brief window between
-    the two renames (dir momentarily absent — retryable); a CRASH in that
-    window is healed by ``_recover_rollup``, which every rollup entry
-    point runs before touching the dir (code-review r3: without it the
-    next partial append would recreate the dir with one batch of history
-    and readers would silently undercount).
+    With ``(n, rec)`` the latest fold record:
 
-    The whole compaction — listing, fold, and the two renames — is fenced
-    by the in-progress marker (ADVICE r3, tightened in r5): concurrent
-    rollup entry points wait for the marker instead of mistaking the
-    staged-aside directory for a crashed swap and 'recovering' it out
-    from under the two renames, AND — because appends hold per-append
-    leases the fence drains before folding — an append can no longer
-    land a generation between the fold's listing and the swap, where
-    ``fs.delete(old)`` would silently destroy it.  Live appenders are
-    therefore safe: they back off for the (seconds-long) fence and
-    their partials survive (tests/test_rollup.py::
-    test_compaction_concurrent_with_live_appender).
+    1. delete ``rec``'s absorbed generations — left behind only when a
+       compactor died or failed between its commit and its own deletes; a
+       false delete of one that still exists raises;
+    2. delete, best-effort, every fold generation numbered ``<= n`` other
+       than ``rec``'s: the leftovers of compactors that crashed before
+       their commit or lost the race for it;
+    3. absorb every generation holding a ``_SUCCESS`` file (Spark writes
+       it last, so an append in flight is never absorbed), skipping fold
+       generations other than ``rec``'s; if that leaves nothing but
+       ``rec``'s fold, return without writing;
+    4. write their fold to ``gen=fold-<n + 1>-<uuid8>`` and commit record
+       ``n + 1``. A compactor that lost the race for ``n + 1`` raises
+       ``OSError``, having deleted nothing;
+    5. read record ``n + 1`` back — two compactors share the commit's temp
+       name, so the one whose record was renamed in may be the other's —
+       and only if it names this fold, delete the absorbed generations.
+
+    A crash anywhere leaves a state readers count exactly (before the
+    commit the fold is in no record; after it the record drops what it
+    absorbed), and the next compaction cleans up. Records are never
+    deleted: a version a slow compactor may still try to commit stays taken.
 
     Run only against a FULLY-COMMITTED stream (stopped, or no batch in
     flight): folding consumes every ``gen=batch<id>`` generation, so
     compacting while a crashed-uncommitted batch is pending would
     double-count that batch when its replay rewrites ``gen=batch<id>``
-    after the fold already absorbed it. (The lease protects the FILE
-    interleaving; it cannot know a crashed batch will be redelivered.)
-
-    SINGLE live compactor per rollup dir, enforced (ADVICE r5): the fence
-    is taken with an atomic create-if-absent, so a second compactor that
-    waited out ``_recover_rollup``'s bounded wait while the first is still
-    folding raises instead of overwriting the live fence and racing the
-    swap. Callers wanting queue semantics should catch the OSError and
-    retry after the first compaction's fence clears."""
-    _recover_rollup(spark, rollup_dir)
-    fs, root, tmp, old, marker = _swap_paths(spark, rollup_dir)
-
-    # fence: new appends back off from here. createNewFile is atomic
-    # create-if-absent — if a fresh fence is already up (live compaction
-    # that outlasted _recover_rollup's bounded wait), fail loudly rather
-    # than co-owning the marker and racing the directory swap.
-    if not fs.createNewFile(marker):
-        raise OSError(
-            f"compact_rollup: a compaction of {rollup_dir} is already in "
-            f"progress (fence {marker} exists); retry after it clears"
+    after the fold already absorbed it."""
+    fs, root, jvm = _fs(spark, rollup_dir)
+    path = jvm.org.apache.hadoop.fs.Path
+    folds = path(root, _FOLDS)
+    n, rec = _latest_record(fs, jvm, folds)
+    for g in rec["absorbed"]:
+        old = path(root, f"gen={g}")
+        if not fs.delete(old, True) and fs.exists(old):
+            raise OSError(f"compact_rollup: could not delete absorbed {old}")
+    for st in fs.globStatus(path(root, "gen=fold-*")) or []:
+        g = st.getPath().getName()[4:]
+        if g != rec["fold"] and int(g.split("-")[1]) <= n:
+            fs.delete(st.getPath(), True)  # best-effort: never counted; retried next compaction
+    complete = [
+        st.getPath().getParent().getName()[4:]
+        for st in fs.globStatus(path(root, "gen=*/_SUCCESS")) or []
+    ]
+    absorbed = sorted(
+        g for g in complete if g == rec["fold"] or not g.startswith("fold-")
+    )
+    if not set(absorbed) - {rec["fold"]}:
+        return
+    label = f"fold-{n + 1:020d}-{uuid4().hex[:8]}"
+    (
+        spark.read.option("basePath", rollup_dir)
+        .parquet(*(f"{rollup_dir}/gen={g}" for g in absorbed))
+        .groupBy(*KEYS)
+        .agg(
+            F.sum("cnt").alias("cnt"),
+            F.sum("sum_rad").alias("sum_rad"),
+            F.min("min_rad").alias("min_rad"),
+            F.max("max_rad").alias("max_rad"),
         )
-    try:
-        # heartbeat for the whole fenced window: a fold outliving the lease
-        # must not look like a crashed compactor to concurrent entry points,
-        # which would delete the live fence and reopen the lost-append race
-        # (code-review r5)
-        with _heartbeat(fs, marker):
-            _drain_append_leases(spark, rollup_dir)  # in-flight appends finish
-            p = spark.read.parquet(rollup_dir)
-            folded = p.groupBy(*KEYS).agg(
-                F.sum("cnt").alias("cnt"),
-                F.sum("sum_rad").alias("sum_rad"),
-                F.min("min_rad").alias("min_rad"),
-                F.max("max_rad").alias("max_rad"),
-            )
-            # folded output keeps the uniform gen= layout (a bare-file root
-            # next to later gen= subdirs would break hive partition
-            # discovery on read)
-            folded.write.mode("overwrite").parquet(f"{tmp.toString()}/gen=folded")
-            fs.delete(old, True)  # best-effort: if old survives, the rename below fails loudly
-            if not fs.rename(root, old):
-                raise OSError(
-                    f"compact_rollup: could not stage {rollup_dir} aside"
-                )
-            if not fs.rename(tmp, root):
-                fs.rename(old, root)  # best-effort: roll back before raising; _recover_rollup heals
-                raise OSError(
-                    f"compact_rollup: could not swap folded rollup into {rollup_dir}"
-                )
-            fs.delete(old, True)  # best-effort: staged-aside copy; next compact re-deletes
-    finally:
-        fs.delete(marker, False)  # best-effort: a stuck fence ages out via _recover_rollup
+        .write.parquet(f"{rollup_dir}/gen={label}")
+    )
+    record = json.dumps({"fold": label, "absorbed": absorbed})
+    committed = _commit_version(fs, jvm, folds, n + 1, record, "compact_rollup")
+    if json.loads(_read_text(fs, jvm, committed))["fold"] != label:
+        raise OSError(f"compact_rollup: {committed} names another compactor's fold")
+    for g in absorbed:
+        fs.delete(path(root, f"gen={g}"), True)  # best-effort: the record drops it; step 1 retries

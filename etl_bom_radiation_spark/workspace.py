@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 PREFIXES = ("in", "processing", "done", "quarantine", "athena")
@@ -59,6 +60,44 @@ def _read_text(fs, jvm, path) -> str:
         return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
+
+
+def _versions(fs, jvm, vdir) -> dict:
+    """version -> Hadoop ``Path`` of every committed version ``<n>.json``
+    under the directory *vdir* (a Hadoop ``Path``), from ONE glob of
+    committed names.  A temp is dot-prefixed, so the glob never lists one,
+    torn or complete."""
+    found = fs.globStatus(jvm.org.apache.hadoop.fs.Path(vdir, "[0-9]*.json"))
+    return {int(st.getPath().getName()[:-5]): st.getPath() for st in found or []}
+
+
+def _commit_version(fs, jvm, vdir, n: int, text: str, what: str):
+    """Commit *text* as version *n* under *vdir* and return its ``Path``:
+    written complete under a dot-temp name, then renamed onto the fresh
+    name ``<n zero-padded>.json``.  No version is ever replaced: a rename
+    that returns false — the name already taken by a writer that won the
+    race for *n*, or a store failing silently — raises ``OSError``
+    (prefixed *what*)."""
+    path = jvm.org.apache.hadoop.fs.Path(vdir, f"{n:020d}.json")
+    _write_atomic(fs, jvm, path.toString(), text, what)
+    return path
+
+
+def _read_latest(fs, jvm, vdir) -> tuple[int, str] | None:
+    """``(n, text)`` of the highest committed version under *vdir*, or
+    None when none is committed.  If that version vanished before it was
+    opened — a writer that prunes old versions deleted it during this
+    read — the listing is taken again."""
+    while True:
+        versions = _versions(fs, jvm, vdir)
+        if not versions:
+            return None
+        n = max(versions)
+        try:
+            return n, _read_text(fs, jvm, versions[n])
+        except Py4JJavaError:
+            if fs.exists(versions[n]):
+                raise
 
 
 def _dir_files(spark: SparkSession, path: str) -> list[str]:

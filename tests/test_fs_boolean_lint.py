@@ -15,8 +15,6 @@ there.  The allowlisted classes, each marked in place at its site:
 * final temp/staging deletes after the content has already moved out
   (scratch reclamation — a survivor is garbage, never data);
 * checkpoint GC (graph.py's per-round checkpoint directories);
-* lease/fence markers whose staleness is aged out by the next entry
-  point (rollup's append leases and swap fence);
 * deletes whose failure is surfaced by the VERY NEXT checked call
   (a pre-rename delete: a false delete makes the checked rename fail).
 
@@ -38,6 +36,13 @@ covers this rule the same way.
 Third rule, one FS-handle source: ``getFileSystem(`` is called only inside
 ``workspace._fs``, so every Hadoop handle comes from one function that a
 test can patch (``test_fs_handle_lint_is_live`` covers it).
+
+Fourth rule, no wall clock in crash protocols: no package module calls
+``time.sleep(`` or ``getModificationTime(``.  A protocol that decides by
+waiting, or by how old a marker file is, is only as safe as its guess of
+how long a live owner can pause; the commit protocols here decide by what
+is committed (a numbered version, a manifest), never by time
+(``test_wall_clock_lint_is_live`` covers it).
 """
 
 from __future__ import annotations
@@ -293,3 +298,54 @@ def test_fs_handle_lint_is_live():
         "pkg/lsh_index.py:2",
         "pkg/lsh_index.py:4",
     ]
+
+
+def wall_clock_sites(source: str, filename: str = "<mem>") -> list[str]:
+    """``(file:line)`` of every ``time.sleep(...)`` or bare ``sleep(...)``
+    call and every ``....getModificationTime(...)`` call."""
+    lines = set()
+    for n in ast.walk(ast.parse(source)):
+        f = n.func if isinstance(n, ast.Call) else None
+        if (
+            (isinstance(f, ast.Name) and f.id == "sleep")
+            or (
+                isinstance(f, ast.Attribute)
+                and f.attr == "sleep"
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "time"
+            )
+            or (isinstance(f, ast.Attribute) and f.attr == "getModificationTime")
+        ):
+            lines.add(n.lineno)
+    return [f"{filename}:{line}" for line in sorted(lines)]
+
+
+def test_package_never_waits_on_the_wall_clock():
+    offenders = _package_offenders(wall_clock_sites)
+    assert not offenders, (
+        "wall-clock waits or file-age checks in the package (decide by "
+        "what is committed, not by time): " + ", ".join(offenders)
+    )
+
+
+def test_wall_clock_lint_is_live():
+    """The wall-clock rule flags a sleep poll and a marker-age check — the
+    shape of a lease protocol — and passes other ``sleep``/stat calls."""
+    flagged = wall_clock_sites(
+        "import time\n"
+        "from time import sleep\n"
+        "def wait_out(fs, marker):\n"
+        "    while fs.exists(marker):\n"
+        "        age = time.time() - fs.getFileStatus(marker).getModificationTime()\n"
+        "        time.sleep(0.05)\n"
+        "        sleep(1)\n"
+    )
+    assert flagged == ["<mem>:5", "<mem>:6", "<mem>:7"]
+
+    clean = wall_clock_sites(
+        "def f(fs, p, ev, pool):\n"
+        "    ev.wait(1)\n"
+        "    pool.sleep(1)\n"  # not the time module
+        "    fs.getFileStatus(p).getLen()\n"
+    )
+    assert clean == []

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_bom_radiation_spark.grid.decode import decode_grid_directory
@@ -75,99 +76,41 @@ def test_rollup_batch_generation_overwrite_idempotent(spark, tmp_path):
         assert after[k][0] == 2 * before[k][0]
 
 
-def test_rollup_crash_window_recovery(spark, tmp_path):
-    """code-review r3: a crash between compact_rollup's two renames leaves
-    rollup_dir absent and the previous generation staged aside; every
-    entry point must restore it instead of silently recreating an empty
-    dir."""
-    import os
-    import shutil
+def _gens(rdir):
+    """Labels of the ``gen=<label>`` directories on disk, sorted."""
+    return sorted(p.name[4:] for p in Path(rdir).glob("gen=*"))
 
+
+def test_rollup_crash_window_recovery(spark, tmp_path, monkeypatch):
+    """A compaction that dies after writing its fold but before committing
+    its record, or after the commit but before deleting the generations it
+    folded, leaves a rollup that reads exactly; the next compactions end
+    exact with only the committed fold left on disk."""
     rdir = str(tmp_path / "rollup")
     pts = decode_grid_directory(spark, str(sorted(FIXTURES.glob("*.txt"))[0]))
-    R.append_hourly_partials(pts, rdir)
-    before = _as_dict(R.read_hourly_rollup(spark, rdir))
+    real_commit = R._commit_version
 
-    # simulate the crash window: rollup_dir renamed aside, swap-in never ran
-    staged = str(tmp_path / ".rollup.compact_old")
-    os.rename(rdir, staged)
-    assert not os.path.exists(rdir)
+    def crash_before_commit(*args):
+        raise RuntimeError("crash before the commit")
 
-    # a new batch append must first heal, then append — not recreate empty
-    R.append_hourly_partials(pts, rdir)
-    merged = _as_dict(R.read_hourly_rollup(spark, rdir))
-    assert set(merged) == set(before)
-    # the healed dir holds BOTH generations of partials (counts doubled)
-    for k in before:
-        assert merged[k][0] == 2 * before[k][0]
+    def crash_after_commit(*args):
+        real_commit(*args)
+        raise RuntimeError("crash after the commit")
 
-    # and a reader alone heals too
-    shutil.rmtree(str(tmp_path / "rollup"))
-    R.append_hourly_partials(pts, rdir)
-    os.rename(rdir, staged)
-    assert _as_dict(R.read_hourly_rollup(spark, rdir)) == before
-
-
-def test_rollup_live_swap_not_mistaken_for_crash(spark, tmp_path):
-    """ADVICE r3: while the in-progress marker is FRESH, a concurrent entry
-    point must wait the swap out — not rename the staged-aside generation
-    back mid-swap. Simulated: marker + staged state exist; a 'compactor'
-    thread completes the swap shortly after; the reader arrives mid-window
-    and must see the post-swap generation with no spurious recovery."""
-    import os
-    import threading
-    import time
-
-    rdir = str(tmp_path / "rollup")
-    pts = decode_grid_directory(spark, str(sorted(FIXTURES.glob("*.txt"))[0]))
-    R.append_hourly_partials(pts, rdir)
-    before = _as_dict(R.read_hourly_rollup(spark, rdir))
-
-    staged = str(tmp_path / ".rollup.compact_old")
-    marker = str(tmp_path / ".rollup.compact_inprogress")
-    os.rename(rdir, staged)  # mid-swap: root absent, old present
-    with open(marker, "w"):
-        pass  # fresh marker: swap is live
-
-    def finish_swap():
-        time.sleep(0.5)
-        os.rename(staged, rdir)  # compactor completes the swap-in
-        os.remove(marker)
-
-    t = threading.Thread(target=finish_swap)
-    t.start()
-    try:
-        t0 = time.time()
-        after = _as_dict(R.read_hourly_rollup(spark, rdir))
-        waited = time.time() - t0
-    finally:
-        t.join()
-    assert after == before
-    assert waited >= 0.4  # it actually waited for the live swap
-    assert not os.path.exists(staged) and not os.path.exists(marker)
-
-
-def test_rollup_stale_marker_healed(spark, tmp_path):
-    """A marker older than the lease is a crashed compactor's leftover:
-    recovery removes it and heals the staged-aside generation."""
-    import os
-    import time
-
-    rdir = str(tmp_path / "rollup")
-    pts = decode_grid_directory(spark, str(sorted(FIXTURES.glob("*.txt"))[0]))
-    R.append_hourly_partials(pts, rdir)
-    before = _as_dict(R.read_hourly_rollup(spark, rdir))
-
-    staged = str(tmp_path / ".rollup.compact_old")
-    marker = str(tmp_path / ".rollup.compact_inprogress")
-    os.rename(rdir, staged)
-    with open(marker, "w"):
-        pass
-    old_t = time.time() - 2 * (R._SWAP_LEASE_MS / 1000)
-    os.utime(marker, (old_t, old_t))  # age the marker past the lease
-
-    assert _as_dict(R.read_hourly_rollup(spark, rdir)) == before
-    assert not os.path.exists(marker)
+    for crash in (crash_before_commit, crash_after_commit):
+        R.append_hourly_partials(pts, rdir)
+        R.append_hourly_partials(pts, rdir)
+        expect = _as_dict(R.read_hourly_rollup(spark, rdir))
+        monkeypatch.setattr(R, "_commit_version", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            R.compact_rollup(spark, rdir)
+        monkeypatch.setattr(R, "_commit_version", real_commit)
+        assert _as_dict(R.read_hourly_rollup(spark, rdir)) == expect
+        R.compact_rollup(spark, rdir)
+        R.compact_rollup(spark, rdir)  # cleans what the first one kept
+        assert _as_dict(R.read_hourly_rollup(spark, rdir)) == expect
+        (left,) = _gens(rdir)
+        assert left.startswith("fold-")
 
 
 def _one_point(spark, rad: int):
@@ -175,39 +118,6 @@ def _one_point(spark, rad: int):
         [("GLOBAL", 2018, 4, 1, 11, rad)],
         "RadiationType string, year int, month int, day int, hour int, Radiation int",
     )
-
-
-def test_append_backs_off_while_compaction_fence_up(spark, tmp_path):
-    """The appender side of the r5 fence: with the compactor's in-progress
-    marker up, a partial append must NOT start its write (its generation
-    could ride the staged-aside dir into fs.delete(old)) — it backs off
-    until the marker clears, then lands normally."""
-    import os
-    import threading
-    import time
-
-    rdir = str(tmp_path / "rollup")
-    R.append_hourly_partials(_one_point(spark, 5), rdir)
-    marker = str(tmp_path / ".rollup.compact_inprogress")
-    with open(marker, "w"):
-        pass
-
-    done = threading.Event()
-
-    def blocked_append():
-        R.append_hourly_partials(_one_point(spark, 7), rdir)
-        done.set()
-
-    t = threading.Thread(target=blocked_append)
-    t.start()
-    try:
-        assert not done.wait(1.5), "append proceeded under a fresh fence"
-        os.remove(marker)
-        assert done.wait(30), "append never completed after fence cleared"
-    finally:
-        t.join()
-    got = _as_dict(R.read_hourly_rollup(spark, rdir))
-    assert got[("GLOBAL", 2018, 4, 1, 11)] == (2, round(6.0, 9), 5, 7)
 
 
 def test_compaction_concurrent_with_live_appender(spark, tmp_path):
@@ -255,183 +165,268 @@ def test_compaction_concurrent_with_live_appender(spark, tmp_path):
     )
 
 
-def test_slow_heartbeated_lease_survives_drain_dead_lease_reaped(
-    spark, tmp_path, monkeypatch
-):
-    """code-review r5: an appender slower than the lease period must not be
-    mistaken for a crashed one — its heartbeat keeps the lease fresh, and
-    the compactor's drain waits instead of deleting it mid-write. A lease
-    with no heartbeat past the period IS a crashed appender's and is
-    reaped promptly."""
-    import os
-    import threading
-    import time
-
-    monkeypatch.setattr(R, "_SWAP_LEASE_MS", 1000)
-    rdir = str(tmp_path / "rollup")
-    R.append_hourly_partials(_one_point(spark, 1), rdir)
-    fs, root, *_ = R._swap_paths(spark, rdir)
-    jvm = spark._jvm
-    live = jvm.org.apache.hadoop.fs.Path(str(tmp_path / ".rollup.append_live"))
-    fs.create(live, True).close()
-
-    done = threading.Event()
-
-    def drain():
-        R._drain_append_leases(spark, rdir)
-        done.set()
-
-    t = threading.Thread(target=drain)
-    with R._heartbeat(fs, live):
-        t.start()
-        # well past the 1 s lease: drain must still be waiting on the
-        # heartbeated (fresh) lease, not have deleted it
-        assert not done.wait(2.5), "drain reaped a live, heartbeated lease"
-        assert os.path.exists(str(tmp_path / ".rollup.append_live"))
-    fs.delete(live, False)  # appender finishes (heartbeat already stopped)
-    assert done.wait(30), "drain never finished after the lease was released"
-    t.join()
-
-    # dead lease: no heartbeat, aged past the period -> reaped, drain returns
-    dead = str(tmp_path / ".rollup.append_dead")
-    with open(dead, "w"):
-        pass
-    old_t = time.time() - 5
-    os.utime(dead, (old_t, old_t))
-    t0 = time.time()
-    R._drain_append_leases(spark, rdir)
-    assert time.time() - t0 < 5
-    assert not os.path.exists(dead)
+_KEY = ("GLOBAL", 2018, 4, 1, 11)
 
 
-def test_recover_never_heals_under_a_fresh_marker(spark, tmp_path, monkeypatch):
-    """ADVICE r5: when the bounded wait expires while the compaction marker
-    is STILL fresh (a legitimately heartbeated fold longer than the wait),
-    _recover_rollup must return WITHOUT running the old->root heal — healing
-    at that instant could land inside the compactor's swap window and rename
-    the staged-aside generation back mid-swap."""
-    import os
-    import threading
-    import time
-
-    monkeypatch.setattr(R, "_SWAP_LEASE_MS", 1000)
-    rdir = str(tmp_path / "rollup")
-    R.append_hourly_partials(_one_point(spark, 1), rdir)
-
-    staged = str(tmp_path / ".rollup.compact_old")
-    marker = str(tmp_path / ".rollup.compact_inprogress")
-    os.rename(rdir, staged)  # mid-swap: root absent, old present
-    with open(marker, "w"):
-        pass  # fence up BEFORE recovery starts (no thread-start race)
-    stop = threading.Event()
-
-    def keep_fresh():  # the live compactor's heartbeat
-        while not stop.wait(0.1):
-            with open(marker, "w"):
-                pass
-
-    t = threading.Thread(target=keep_fresh, daemon=True)
-    t.start()
-    try:
-        t0 = time.time()
-        R._recover_rollup(spark, rdir)
-        waited = time.time() - t0
-    finally:
-        stop.set()
-        t.join()
-    # waited out the 2x-lease bound, then declined to heal
-    assert waited >= 1.8
-    assert not os.path.exists(rdir), "healed old->root under a fresh marker"
-    assert os.path.exists(staged)
-    os.rename(staged, rdir)  # restore for cleanliness
-    os.remove(marker)
+def _total(spark, rdir):
+    return _as_dict(R.read_hourly_rollup(spark, rdir))[_KEY]
 
 
 def test_second_compactor_fails_instead_of_coopting_live_fence(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r5: compact_rollup takes its fence with an atomic
-    create-if-absent — a second compactor arriving while a live (fresh,
-    heartbeated) fence is up must raise, not overwrite the marker and race
-    the first compactor's swap."""
-    import threading
-    import time
-
-    import pytest
-
-    monkeypatch.setattr(R, "_SWAP_LEASE_MS", 1000)
+    """Two compactors racing for one fold record version: the rival
+    commits first, and the loser finds the version taken, raises
+    ``OSError`` and deletes nothing.  Two compactors also share the
+    commit's temp name, so one may rename the other's record in: it reads
+    the record back, finds another fold named, and raises deleting
+    nothing.  Either way reads stay exact and the next compaction cleans
+    the loser's fold away."""
     rdir = str(tmp_path / "rollup")
-    R.append_hourly_partials(_one_point(spark, 1), rdir)
+    real_commit = R._commit_version
+    state = {}
 
-    marker = str(tmp_path / ".rollup.compact_inprogress")
-    with open(marker, "w"):
-        pass  # fence up BEFORE the second compactor starts
-    stop = threading.Event()
+    def rival_commits_first(*args):
+        monkeypatch.setattr(R, "_commit_version", real_commit)
+        R.compact_rollup(spark, rdir)
+        state["gens"] = _gens(rdir)
+        return real_commit(*args)
 
-    def keep_fresh():  # first compactor holds + heartbeats the fence
-        while not stop.wait(0.1):
-            with open(marker, "w"):
-                pass
+    def rival_record_renamed_in(fs, jvm, folds, n, text, what):
+        rival = {}
 
-    t = threading.Thread(target=keep_fresh, daemon=True)
-    t.start()
-    try:
-        with pytest.raises(OSError, match="already in progress"):
+        def stalls_before_rename(fs, jvm, folds, n, text, what):
+            rival["text"] = text
+            raise RuntimeError("rival stalled before its rename")
+
+        monkeypatch.setattr(R, "_commit_version", stalls_before_rename)
+        with pytest.raises(RuntimeError, match="stalled"):
             R.compact_rollup(spark, rdir)
-    finally:
-        stop.set()
-        t.join()
-    import os
+        monkeypatch.setattr(R, "_commit_version", real_commit)
+        state["gens"] = _gens(rdir)
+        return real_commit(fs, jvm, folds, n, rival["text"], what)
 
-    os.remove(marker)
-    # with the fence gone the same call succeeds
-    R.compact_rollup(spark, rdir)
-    before = _as_dict(R.read_hourly_rollup(spark, rdir))
-    assert before
+    for race, error in (
+        (rival_commits_first, "could not commit"),
+        (rival_record_renamed_in, "another compactor's fold"),
+    ):
+        R.append_hourly_partials(_one_point(spark, 5), rdir)
+        R.append_hourly_partials(_one_point(spark, 7), rdir)
+        expect = _total(spark, rdir)
+        monkeypatch.setattr(R, "_commit_version", race)
+        with pytest.raises(OSError, match=error):
+            R.compact_rollup(spark, rdir)
+        monkeypatch.setattr(R, "_commit_version", real_commit)
+        assert _gens(rdir) == state["gens"]  # the loser deleted nothing
+        assert len([g for g in state["gens"] if g.startswith("fold-")]) >= 2
+        assert _total(spark, rdir) == expect
+        R.compact_rollup(spark, rdir)
+        assert _total(spark, rdir) == expect
+        (left,) = _gens(rdir)
+        assert left.startswith("fold-")
 
 
 def test_recover_heal_rename_failure_raises_keeps_generations(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r10 discipline on the heal path: _recover_rollup's
-    old->root restore used to ignore fs.rename's boolean — a rename
-    failing WITHOUT throwing would leave root missing while the heal
-    proceeded to delete the folded tmp and return as if done (readers
-    then fail on the missing dir with no signal why).  It must raise,
-    leaving the staged-aside generation AND the folded tmp intact so
-    the next entry point retries the restore."""
-    import os
-
-    import pytest
-
+    """Hadoop reports a failed rename or delete by RETURNING FALSE.  A
+    false rename at the record commit raises and deletes nothing.  A false
+    delete of a folded generation after the commit is harmless to readers
+    (the record drops it), and the next compaction's checked delete raises
+    while it survives.  Honest compactions then resume exactly."""
     from tests.conftest import LyingFS
 
     rdir = str(tmp_path / "rollup")
     pts = decode_grid_directory(spark, str(sorted(FIXTURES.glob("*.txt"))[0]))
     R.append_hourly_partials(pts, rdir)
-    before = _as_dict(R.read_hourly_rollup(spark, rdir))
+    R.append_hourly_partials(pts, rdir)
+    expect = _as_dict(R.read_hourly_rollup(spark, rdir))
+    appended = _gens(rdir)
+    real_fs = R._fs
 
-    # crash window: root staged aside, a (stale) folded tmp present
-    staged = str(tmp_path / ".rollup.compact_old")
-    folded_tmp = str(tmp_path / ".rollup.compact_tmp")
-    os.rename(rdir, staged)
-    os.makedirs(folded_tmp)
+    def lying_fs(**lies):
+        def _fs(s, path):
+            fs, p, jvm = real_fs(s, path)
+            return LyingFS(fs, **lies), p, jvm
 
-    real_swap_paths = R._swap_paths
+        return _fs
 
-    def lying(s, d):
-        fs, root, tmp, old, marker = real_swap_paths(s, d)
-        return LyingFS(fs, fail_renames=1), root, tmp, old, marker
+    monkeypatch.setattr(R, "_fs", lying_fs(fail_renames=1))
+    with pytest.raises(OSError, match="could not commit"):
+        R.compact_rollup(spark, rdir)
+    monkeypatch.setattr(R, "_fs", real_fs)
+    assert set(appended) < set(_gens(rdir))  # only an uncommitted fold added
+    assert _as_dict(R.read_hourly_rollup(spark, rdir)) == expect
 
-    monkeypatch.setattr(R, "_swap_paths", lying)
-    with pytest.raises(OSError, match="could not restore"):
-        R._recover_rollup(spark, rdir)
-    # nothing destroyed: both the staged generation and the tmp survive
-    assert os.path.exists(staged) and os.path.exists(folded_tmp)
-    assert not os.path.exists(rdir)
+    monkeypatch.setattr(R, "_fs", lying_fs(fail_deletes=1, path_match="gen=adhoc"))
+    R.compact_rollup(spark, rdir)
+    monkeypatch.setattr(R, "_fs", real_fs)
+    (survivor,) = set(appended) & set(_gens(rdir))
+    assert _as_dict(R.read_hourly_rollup(spark, rdir)) == expect
 
-    # an honest retry heals: partials restored, stale tmp discarded
-    monkeypatch.setattr(R, "_swap_paths", real_swap_paths)
-    assert _as_dict(R.read_hourly_rollup(spark, rdir)) == before
-    assert os.path.exists(rdir)
-    assert not os.path.exists(staged) and not os.path.exists(folded_tmp)
+    monkeypatch.setattr(
+        R, "_fs", lying_fs(fail_deletes=1, path_match=f"gen={survivor}")
+    )
+    with pytest.raises(OSError, match="could not delete absorbed"):
+        R.compact_rollup(spark, rdir)
+    monkeypatch.setattr(R, "_fs", real_fs)
+    assert survivor in _gens(rdir)
+
+    R.compact_rollup(spark, rdir)
+    assert _as_dict(R.read_hourly_rollup(spark, rdir)) == expect
+    (left,) = _gens(rdir)
+    assert left.startswith("fold-")
+
+
+def _in_thread(fn, *args):
+    """Start ``fn(*args)`` on a thread; returns (thread, done, out) where
+    ``out`` collects the result or the exception."""
+    import threading
+
+    done, out = threading.Event(), []
+
+    def run():
+        try:
+            out.append(fn(*args))
+        except Exception as exc:  # reported through out
+            out.append(exc)
+        done.set()
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    return t, done, out
+
+
+@pytest.mark.parametrize("entry", ["read", "append"])
+def test_entry_points_proceed_while_compaction_folds(
+    spark, tmp_path, monkeypatch, entry
+):
+    """With a compaction blocked inside its fold write, a read returns the
+    pre-compaction totals, and an append completes, within 5 s: no entry
+    point waits for a compaction.  Once released, the compaction commits
+    and an append made during it stays counted."""
+    import threading
+
+    from pyspark.sql import DataFrameWriter
+
+    rdir = str(tmp_path / "rollup")
+    R.append_hourly_partials(_one_point(spark, 5), rdir)
+    R.append_hourly_partials(_one_point(spark, 7), rdir)
+    in_fold, release = threading.Event(), threading.Event()
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if "gen=fold" in path:
+            in_fold.set()
+            release.wait(120)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    compactor, _, compact_out = _in_thread(R.compact_rollup, spark, rdir)
+    try:
+        assert in_fold.wait(60), "compaction never reached its fold write"
+        if entry == "read":
+            _, done, out = _in_thread(_total, spark, rdir)
+            expect, after = (2, 6.0, 5, 7), (2, 6.0, 5, 7)
+        else:
+            point = _one_point(spark, 9)
+            _, done, out = _in_thread(R.append_hourly_partials, point, rdir)
+            expect, after = None, (3, 7.0, 5, 9)
+        assert done.wait(5), f"{entry} waited for the compaction"
+        assert out == [expect]
+    finally:
+        release.set()
+        compactor.join(120)
+    assert not compactor.is_alive() and compact_out == [None]
+    assert _total(spark, rdir) == after
+    assert len([g for g in _gens(rdir) if g.startswith("fold-")]) == 1
+
+
+def test_reads_during_compactions_are_prefix_totals(spark, tmp_path):
+    """An appender adds the points 1..n one at a time while compactions
+    run back to back and a reader reads in a loop.  Every read that
+    completes holds exactly the first k appends for some k, and k never
+    goes backwards: a fold and the generations it replaced are never both
+    counted, and no append is lost.  A read may fail loudly when a
+    compaction deletes the files it listed, never silently."""
+    import threading
+
+    rdir = str(tmp_path / "rollup")
+    n_appends = 10
+    R.append_hourly_partials(_one_point(spark, 1), rdir)
+    seen, failed, stop = [], [], threading.Event()
+
+    def reader():
+        while not stop.is_set():
+            try:
+                seen.append(_total(spark, rdir))
+            except Exception as exc:
+                failed.append(exc)
+
+    def appender():
+        for i in range(2, n_appends + 1):
+            R.append_hourly_partials(_one_point(spark, i), rdir)
+
+    readers = threading.Thread(target=reader, daemon=True)
+    appends = threading.Thread(target=appender, daemon=True)
+    readers.start()
+    appends.start()
+    n_compactions = 0
+    try:
+        while appends.is_alive():
+            R.compact_rollup(spark, rdir)
+            n_compactions += 1
+    finally:
+        appends.join(120)
+        stop.set()
+        readers.join(120)
+    assert not appends.is_alive() and not readers.is_alive()
+    assert n_compactions >= 2, "appender finished before any real interleaving"
+    ks = [points for points, *_ in seen]
+    assert len(seen) >= 3 and ks == sorted(ks)
+    for points, avg, lo, hi in seen:
+        assert (avg, lo, hi) == (round((points + 1) / 2, 9), 1, points)
+    for exc in failed:
+        assert "FILE_NOT_EXIST" in str(exc) or "does not exist" in str(exc), exc
+    R.compact_rollup(spark, rdir)
+    assert _total(spark, rdir) == (n_appends, (n_appends + 1) / 2, 1, n_appends)
+
+
+def test_generation_without_success_neither_absorbed_nor_deleted(spark, tmp_path):
+    """An append in flight — data files written, ``_SUCCESS`` not yet — is
+    left alone by a compaction: not folded and not deleted, so its rows
+    are counted once, through the generation itself.  Once it completes,
+    the next compaction absorbs it."""
+    rdir = str(tmp_path / "rollup")
+    R.append_hourly_partials(_one_point(spark, 5), rdir)
+    R.append_hourly_partials(_one_point(spark, 7), rdir, batch_id=3)
+    success = tmp_path / "rollup" / "gen=batch3" / "_SUCCESS"
+    success.unlink()
+    R.compact_rollup(spark, rdir)
+    assert "batch3" in _gens(rdir)
+    assert list((tmp_path / "rollup" / "gen=batch3").glob("part-*"))
+    assert _total(spark, rdir) == (2, 6.0, 5, 7)
+    success.touch()
+    R.compact_rollup(spark, rdir)
+    (left,) = _gens(rdir)
+    assert left.startswith("fold-")
+    assert _total(spark, rdir) == (2, 6.0, 5, 7)
+
+
+def test_swap_layout_folded_generation_absorbed(spark, tmp_path):
+    """A rollup compacted by the older directory-swap code holds its fold
+    as ``gen=folded`` and no fold record.  It reads exactly as an ordinary
+    generation, and the next compaction absorbs it."""
+    rdir = str(tmp_path / "rollup")
+    (
+        _one_point(spark, 5)
+        .groupBy(*R.KEYS)
+        .agg(*R._partial_aggs())
+        .write.parquet(f"{rdir}/gen=folded")
+    )
+    R.append_hourly_partials(_one_point(spark, 7), rdir)
+    assert _total(spark, rdir) == (2, 6.0, 5, 7)
+    R.compact_rollup(spark, rdir)
+    (left,) = _gens(rdir)
+    assert left.startswith("fold-")
+    assert _total(spark, rdir) == (2, 6.0, 5, 7)
