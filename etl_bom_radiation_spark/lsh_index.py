@@ -20,7 +20,7 @@ corpus:
   then run the shared probe/verify/verdict assembly
   (``incremental_lsh.shard_verdicts`` — one implementation, so the
   persisted path cannot drift from the hash-verified query): the
-  batch's band frame broadcasts onto the index buckets, the enriched
+  batch's band rows broadcast onto the index buckets, the enriched
   candidate frame broadcasts onto the index hset table, and the
   verdicts come back per batch doc (keep / drop_index_dup /
   drop_shard_dup + candidate counts + best verified Jaccard).  No
@@ -35,15 +35,26 @@ corpus:
   ``refresh_manifest`` discipline applied to the LSH index: the next
   probe sees the admitted docs without any rebuild.
 
-Scale envelope: the probe's plan shape broadcasts the
-batch band frame, the batch hset slice, the enriched candidate frame
-and the per-doc verdict aggregate — so the real bound is that the
-BATCH (not the index) plus its candidate fan-out must fit Spark's
-broadcast limit (``spark.sql.autoBroadcastJoinThreshold`` semantics;
-hard ceiling 8 GB).  A 100 TB INDEX is fine; a 100 GB arriving batch
-is not one probe call — ``admit_batch(..., max_docs=N)`` splits it
-into id-ordered broadcast-sized sub-batches, probing and folding each
-in turn (admission contract in its docstring).
+Plan shape and scale envelope: the batch side of an arrival is small
+by contract, the index side is not.  Each batch-side frame — the
+hashed sets, the band rows, the in-batch gated band rows and (in
+``admit_batch``) the verdicts — is collected ONCE to the driver as a
+local relation (:func:`_local`), and every query that needs it reads
+those rows: nothing batch-side is re-derived per consuming query,
+projections and filters over them are folded at planning time, and the
+verdicts are read back without a job.  The index tables stay
+distributed parquet scans, read with a declared schema
+(:data:`INDEX_SCHEMAS`, so no footer-inference job).  The probe
+broadcasts the batch band rows, the batch hset slice, the enriched
+candidate frame and the per-doc verdict aggregate — so the real bound
+is that the BATCH (not the index) plus its candidate fan-out must fit
+the driver and Spark's broadcast limit
+(``spark.sql.autoBroadcastJoinThreshold`` semantics; hard ceiling
+8 GB).  The driver holds exactly the frames the probe broadcasts, so
+the bound is the same one.  A 100 TB INDEX is fine; a 100 GB arriving
+batch is not one probe call — ``admit_batch(..., max_docs=N)`` splits
+it into id-ordered broadcast-sized sub-batches, probing and folding
+each in turn (admission contract in its docstring).
 
 Per-arrival IO floor: a probe scans BOTH index tables once, map-side,
 shuffle-free — the bands table (8 short rows/doc, ~3% of corpus bytes)
@@ -100,20 +111,18 @@ Parity with the one-shot query is pytest-locked: building the index
 from the n49 index side and probing the n49 shard must reproduce the
 query's rows exactly (tests/test_scale.py).
 
-Cluster-mode durability note: the module's lazy
-``localCheckpoint`` pins produce EXECUTOR-LOCAL blocks with lineage
-truncated — on a cluster, losing an executor loses its blocks and they
-are NOT recomputable, so a job consuming a pinned frame after such a
-loss fails (in ``local[*]`` the executor is the driver; the hazard is
-moot).  That is an accepted trade here because no pinned frame is the
-durability story: every pin is scoped to ONE driver call (a probe, a
-fold, one admit_batch invocation), and the crash/retry protocol
-re-reads the PERSISTED parquet tables plus the committed meta — a failed
-call is retried from storage (vacuum + replay), never from cached
-blocks.  On clusters where mid-call executor loss is routine, swap the
-pins for ``persist(StorageLevel.MEMORY_AND_DISK)`` (recomputable
-lineage, at re-derivation cost) or reliable ``checkpoint()`` — the
-sharing structure is unchanged either way.
+Cluster-mode durability note: the batch-side local relations live in
+the driver, so losing an executor loses none of them.  Executor-side
+pins remain in two places, each scoped to one driver call:
+``build_lsh_index``'s lazy ``localCheckpoint`` of the hashed sets, and
+in a split ``admit_batch`` the tagged batch (``localCheckpoint``) and
+the ``_IndexView`` base (``persist``, recomputable).  A
+``localCheckpoint`` block is NOT recomputable: on a cluster, a job that
+reads one after its executor is lost fails (in ``local[*]`` the
+executor is the driver; moot).  No pin is the durability story — the
+crash/retry protocol re-reads the PERSISTED parquet tables plus the
+committed meta, so a failed call is retried from storage (vacuum +
+replay), never from cached blocks.
 
 Reference parity: no reference analog (the reference's pipeline has no
 dedup at all); this is the LLM-training-corpus maintenance workflow
@@ -124,10 +133,16 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries.banded_lsh import BUCKET_CAP, band_frame, gate_buckets, hashed_sets
+from .queries.banded_lsh import (
+    BUCKET_CAP,
+    band_frame,
+    bucket_rank,
+    gate_buckets,
+    hashed_sets,
+)
 from .queries.incremental_lsh import shard_verdicts
 from .queries.llm_queries import _shingles, _tokens
 from .queries.minhash_eval import sketch_from_hashes
@@ -135,6 +150,14 @@ from .workspace import _commit_version, _fs, _read_latest, _versions
 
 #: committed meta versions live here as ``<n>.json`` (see :func:`_write_meta`)
 _META_DIR = "_meta"
+
+#: The schema of each index table, exactly as :func:`build_lsh_index`
+#: writes it (pytest-locked).  Every index read passes it, so opening a
+#: table never runs a footer-inference job.
+INDEX_SCHEMAS = {
+    "bands": "doc_id BIGINT, band INT, bk STRING",
+    "hsets": "doc_id BIGINT, hs ARRAY<BIGINT>",
+}
 
 #: Index dirs this DRIVER PROCESS has vacuumed and not since seen a fold
 #: fail on.  Orphan rows can only be created by a fold that died
@@ -145,26 +168,58 @@ _META_DIR = "_meta"
 _KNOWN_CLEAN: set[str] = set()
 
 
-def _sketch_frames(spark: SparkSession, docs: DataFrame, gate: bool = True):
-    """(band frame — cap-gated unless ``gate=False`` —, hashed-set frame)
-    for a (doc_id, text) frame — the exact n42/n49 stages (shared
-    helpers), one text pass.  ``update_lsh_index`` needs the UNGATED
-    band rows: its gate must see existing bucket occupancy, not just
-    the batch.  Hash-once (sketch_from_hashes docstring): the hashed-set
-    frame is built first and the sketch explodes it — one polyhash per
-    (doc, distinct shingle), not two."""
-    toks = docs.select("doc_id", _tokens(F.col("text")).alias("ws"))
-    # unpinned: hsets is shs' only consumer, so a checkpoint of the
-    # distinct-shingle STRING arrays would buy no reuse — the hsets pin
-    # (hashed_sets) is the shared barrier
-    shs = toks.select("doc_id", F.array_distinct(_shingles("ws", 2)).alias("s"))
-    hsets = hashed_sets(shs)
-    bands = band_frame(
+def _local(df: DataFrame) -> DataFrame:
+    """``df`` collected ONCE into a driver-local relation; the rows go
+    from the executors to the driver JVM, never through Python.  For the
+    batch-side frames of an arrival, which are broadcast-sized by
+    contract.  Later queries read these rows instead of re-deriving
+    them; projections and filters over them are folded at planning
+    time, and ``collect()`` reads them with no job.  Broadcasting one
+    still runs a small job on Spark 4.1 (``BroadcastExchangeExec``
+    collects its child through ``executeCollectIterator``, which
+    ``LocalTableScanExec`` does not override), but it re-derives
+    nothing."""
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(
+        df._jdf.collectAsList(), df._jdf.schema()
+    )
+    return DataFrame(jdf, spark)
+
+
+def _hashed_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id BIGINT, hs) hashed shingle sets of a (doc_id, text) frame —
+    the exact n42/n49 stages (shared helpers), one text pass, unpinned."""
+    toks = docs.select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        _tokens(F.col("text")).alias("ws"),
+    )
+    return hashed_sets(
+        toks.select("doc_id", F.array_distinct(_shingles("ws", 2)).alias("s"))
+    )
+
+
+def _band_rows(hsets: DataFrame) -> DataFrame:
+    """UNGATED (doc_id, band, bk) rows of a hashed-set frame.  Hash-once
+    (sketch_from_hashes docstring): the sketch explodes the hashed sets —
+    one polyhash per (doc, distinct shingle), not two."""
+    return band_frame(
         sketch_from_hashes(hsets.select("doc_id", F.explode("hs").alias("x")))
     )
-    if gate:
-        bands = gate_buckets(bands)
-    return bands, hsets
+
+
+def _batch_frames(batch: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(hashed sets, UNGATED band rows, in-batch BUCKET_CAP-gated band
+    rows) of a broadcast-sized batch, all driver-local.  The fold needs
+    the ungated rows (its gate must see existing bucket occupancy, not
+    just the batch), the probe the gated ones.  Two jobs: the text pass,
+    then the sketch and the bucket rank over the local sets in ONE task
+    — a single partition already satisfies the per-doc aggregate and the
+    per-bucket window, so there is no exchange; both band frames are
+    projections of that one ranked relation."""
+    hsets = _local(_hashed_sets(batch))
+    ranked = _local(bucket_rank(_band_rows(hsets.coalesce(1))))
+    gated = ranked.filter(F.col("rn") <= BUCKET_CAP)
+    return hsets, ranked.drop("rn"), gated.drop("rn")
 
 
 def _write_meta(
@@ -222,6 +277,14 @@ def _part_file_count(fs, path) -> int:
     )
 
 
+def _table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
+    """An index table read with its declared schema: opening it lists the
+    files and reads no footer."""
+    return spark.read.schema(INDEX_SCHEMAS[name]).parquet(
+        f"{index_dir}/{name}.parquet"
+    )
+
+
 def _committed(spark: SparkSession, index_dir: str, name: str, hw: int) -> DataFrame:
     """The COMMITTED snapshot of an index table: rows at or below the
     meta high-water mark.  ``update_lsh_index`` appends data files FIRST
@@ -231,9 +294,7 @@ def _committed(spark: SparkSession, index_dir: str, name: str, hw: int) -> DataF
     contain ONLY ids above the pre-crash mark, parquet min/max stats
     skip those files entirely (the filter costs no IO on a healthy
     index either)."""
-    return spark.read.parquet(f"{index_dir}/{name}.parquet").filter(
-        F.col("doc_id") <= hw
-    )
+    return _table(spark, index_dir, name).filter(F.col("doc_id") <= hw)
 
 
 def build_lsh_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> None:
@@ -241,14 +302,18 @@ def build_lsh_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> Non
     tables an arrival probe reads — ``bands.parquet`` (capped bucket
     membership) and ``hsets.parquet`` (hashed shingle sets) — plus the
     committed meta high-water mark ``update_lsh_index`` checks its
-    append-only id precondition against."""
-    bands, hsets = _sketch_frames(spark, docs)
-    bands.write.mode("overwrite").parquet(f"{index_dir}/bands.parquet")
+    append-only id precondition against.  The written schemas are
+    :data:`INDEX_SCHEMAS`."""
+    # pinned: the sets feed the sketch, their own write and the mark
+    hsets = _hashed_sets(docs).localCheckpoint(eager=False)
+    gate_buckets(_band_rows(hsets)).write.mode("overwrite").parquet(
+        f"{index_dir}/bands.parquet"
+    )
     hsets.write.mode("overwrite").parquet(f"{index_dir}/hsets.parquet")
     # high-water mark from the ALREADY-MATERIALIZED hset frame — one row
     # per input doc (hashed_sets neither filters nor explodes), so
     # max(doc_id) is identical to an agg over ``docs``, without a second
-    # scan of the corpus (don't rescan what a checkpoint already pinned)
+    # scan of the corpus
     mx = hsets.agg(F.max("doc_id")).first()[0]
     _write_meta(spark, index_dir, -(2**62) if mx is None else int(mx))
 
@@ -273,19 +338,18 @@ class _IndexView:
     existing cross-process replay test).
 
     Deltas are the POST-GATE admitted band rows and the keeper hsets —
-    precisely the rows the fold appended, localCheckpoint-pinned so k-1
-    later cycles re-read a materialized batch-sized frame instead of
-    re-running the admission lineage.
+    precisely the rows the fold appended, as driver-local relations, so
+    k-1 later cycles re-read a batch-sized frame instead of re-running
+    the admission lineage.
 
     Measured (quiet spin canaries 0.666/0.659, sf0.1, median-of-3):
     oneshot 5.08 s, split4 13.33 s without the view vs 12.74 s with it —
     a 4.4% saving at sandbox scale, where the index tables are sub-MB
     and re-opening them costs almost nothing.  The remaining
-    split4-vs-oneshot gap is per-cycle DRIVER fixed cost
-    (~30 sequential jobs per probe/fold cycle: stats .first()s, eager
-    localCheckpoints, the shard_verdicts chain), which no read cache can
-    remove — the cycles are sequential BY DESIGN (the append-only fold
-    order is the admission contract).
+    split4-vs-oneshot gap is per-cycle driver fixed cost — each cycle
+    runs its own sketch, probe and fold jobs (about a dozen), which no
+    read cache can remove: the cycles are sequential BY DESIGN (the
+    append-only fold order is the admission contract).
 
     Re-priced at INDEX scale (``scaling_probe.py --split``: view vs a
     no-cache emulation, 1x vs 10x synthetic index): at the 10x
@@ -326,19 +390,16 @@ class _IndexView:
         self._hsets.unpersist()
 
 
-def _probe_frames(
+def _index_frames(
     spark: SparkSession,
     index_dir: str,
-    spine: DataFrame,
-    inc_gated: DataFrame,
-    inc_hsets: DataFrame,
-    as_of_id: int | None = None,
     idx_view: _IndexView | None = None,
-) -> DataFrame:
-    """The probe on PRE-SKETCHED batch frames — shared by
-    :func:`probe_lsh_index` (which sketches then probes) and
-    :func:`admit_batch` (which sketches ONCE and feeds probe and fold
-    from the same frames).
+    as_of_id: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The committed (bands, hsets) an arrival is probed against: the
+    caller's pinned view (base ∪ committed deltas — identical rows to a
+    fresh meta + :func:`_committed` read, without re-opening the tables
+    per sub-batch cycle) or a fresh committed read.
 
     ``as_of_id`` reconstructs a PAST index view for replay
     (:func:`admit_batch`'s epoch protocol): only ids strictly below it
@@ -346,27 +407,31 @@ def _probe_frames(
     everything folded after a batch began has ids above the batch's
     minimum, so ``as_of_id = min(batch ids)`` is precisely the index
     the batch's original probe saw."""
-    ids = F.broadcast(spine)
     if idx_view is not None:
-        # the caller's pinned committed view (base ∪ committed deltas) —
-        # identical rows to a fresh meta+_committed read, without
-        # re-opening the tables per sub-batch cycle
-        idx_bands, idx_hsets = idx_view.current()
+        bands, hsets = idx_view.current()
     else:
         hw = _read_meta(spark, index_dir)["max_doc_id"]
-        idx_bands = _committed(spark, index_dir, "bands", hw)
-        idx_hsets = _committed(spark, index_dir, "hsets", hw)
+        bands = _committed(spark, index_dir, "bands", hw)
+        hsets = _committed(spark, index_dir, "hsets", hw)
     if as_of_id is not None:
-        idx_bands = idx_bands.filter(F.col("doc_id") < as_of_id)
-        idx_hsets = idx_hsets.filter(F.col("doc_id") < as_of_id)
-    idx_bands = idx_bands.join(ids, "doc_id", "left_anti")
-    idx_hsets = idx_hsets.join(ids, "doc_id", "left_anti")
+        bands = bands.filter(F.col("doc_id") < as_of_id)
+        hsets = hsets.filter(F.col("doc_id") < as_of_id)
+    return bands, hsets
+
+
+def _probe_frames(
+    idx_bands: DataFrame, idx_hsets: DataFrame, hsets: DataFrame, gated: DataFrame
+) -> DataFrame:
+    """The probe of a batch's driver-local frames (:func:`_batch_frames`)
+    against the given index frames — shared by :func:`probe_lsh_index`
+    and :func:`admit_batch` (which sketches ONCE and feeds probe and fold
+    from the same frames).  Lazy: the caller decides whether to collect."""
     return shard_verdicts(
         idx_bands,
-        inc_gated,
-        idx_hsets.unionByName(inc_hsets),
-        inc_hsets,
-        spine,
+        gated,
+        idx_hsets.unionByName(hsets),
+        hsets,
+        hsets.select("doc_id"),
     )
 
 
@@ -375,10 +440,10 @@ def probe_lsh_index(
 ) -> DataFrame:
     """Per-doc near-dup verdicts for an arriving ``batch`` (doc_id,
     text, ...) against a :func:`build_lsh_index` layout — the batch is
-    sketched fresh and broadcast; the index tables stream map-side
-    (no shuffle of the index, no SortMergeJoin).
+    sketched fresh, collected to the driver and broadcast; the index
+    tables stream map-side (no shuffle of the index, no SortMergeJoin).
 
-    Broadcast-bound: the batch band frame, batch hset
+    Broadcast-bound: the batch band rows, batch hset
     slice, candidate frame and verdict aggregate are all broadcast, so
     the BATCH and its candidate fan-out must fit the broadcast limit —
     split over-sized arrivals into sub-batches before probing
@@ -392,10 +457,12 @@ def probe_lsh_index(
     Reads are the COMMITTED snapshot (ids at or below the meta
     high-water mark): leftovers of a crashed ``update_lsh_index`` are
     invisible until :func:`vacuum_lsh_index` repairs them."""
-    inc_bands, inc_hsets = _sketch_frames(spark, batch)
-    return _probe_frames(
-        spark, index_dir, batch.select("doc_id"), inc_bands, inc_hsets
+    hsets, _, gated = _batch_frames(batch)
+    ids = F.broadcast(hsets.select("doc_id"))
+    idx_bands, idx_hsets = (
+        t.join(ids, "doc_id", "left_anti") for t in _index_frames(spark, index_dir)
     )
+    return _probe_frames(idx_bands, idx_hsets, hsets, gated)
 
 
 def update_lsh_index(
@@ -403,18 +470,18 @@ def update_lsh_index(
 ) -> int:
     """Fold ``kept_batch`` — the docs a probe ADMITTED (decision
     ``keep``) — into the persisted index without a rebuild.  Returns
-    the number of docs folded in.
+    the number of docs folded in.  The batch is broadcast-sized, like a
+    probe's: its sketch is collected to the driver.
 
     Pure append, gate recompute local to the touched buckets:
 
     * hsets: the batch's hashed shingle sets append as-is;
     * bands: a new row enters a (band, bk) bucket only while the bucket
-      stays within ``BUCKET_CAP`` counting its EXISTING occupancy —
-      occupancy is read via a broadcast-semi-join of the index band
-      table against the batch's touched bucket keys (the index streams
-      map-side; the aggregate shuffles only the surviving
-      touched-bucket rows, bounded by batch size x bands x cap, never
-      by index size).
+      stays within ``BUCKET_CAP`` counting its EXISTING occupancy — the
+      index band table is semi-joined against the batch's band keys
+      (broadcast; the index streams map-side), and the gate ranks the
+      surviving rows together with the batch's: a shuffle bounded by
+      batch size x bands x cap, never by index size.
 
     Requires append-only doc_ids (every new id > the index's recorded
     ``max_doc_id`` — checked against the committed meta, ValueError
@@ -432,10 +499,8 @@ def update_lsh_index(
     (``_committed``); run :func:`vacuum_lsh_index` before RETRYING the
     crashed batch, or the retry's append would double the uncommitted
     rows and the commit would expose both copies."""
-    new_bands, new_hsets = _sketch_frames(spark, kept_batch, gate=False)
-    return _fold_frames(
-        spark, index_dir, kept_batch.select("doc_id"), new_bands, new_hsets
-    )
+    hsets, bands, _ = _batch_frames(kept_batch)
+    return _fold_frames(spark, index_dir, hsets.select("doc_id"), bands, hsets)
 
 
 def _fold_frames(
@@ -447,69 +512,54 @@ def _fold_frames(
     epoch=None,
     idx_view: _IndexView | None = None,
 ) -> int:
-    """The fold on PRE-SKETCHED keeper frames (``new_bands`` UNGATED) —
+    """The fold on driver-local keeper frames (``new_bands`` UNGATED) —
     shared by :func:`update_lsh_index` (which sketches then folds) and
     :func:`admit_batch` (one sketch for probe and fold; passes its
     ``epoch`` so the commit records the admission transaction, and its
     ``idx_view`` so the occupancy read reuses the pinned committed view
     and the committed delta is registered for later sub-batch cycles)."""
-    mn_mx = kept_ids.agg(
-        F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"), F.count("*").alias("n")
-    ).first()
-    if mn_mx["n"] == 0:
+    ids = [r[0] for r in kept_ids.collect()]
+    if not ids:
         return 0
     high_water = _read_meta(spark, index_dir)["max_doc_id"]
-    if mn_mx["mn"] <= high_water:
+    if min(ids) <= high_water:
         raise ValueError(
             f"update_lsh_index requires append-only doc_ids: batch min "
-            f"{mn_mx['mn']} <= indexed max {high_water} (re-arrival or "
+            f"{min(ids)} <= indexed max {high_water} (re-arrival or "
             f"out-of-order fold — rebuild or re-id the batch)"
         )
-    # pinned once: touched, occ and admitted all derive from it.  No
-    # broadcast hint here — the joins below hint their own small sides
-    # (touched, occ); a hint on THIS frame would sit under an aggregate
-    # and the outer side of a left join, where it is unusable and only
-    # logs "join hint ... not part of a join relation" per fold.  LAZY:
-    # blocks materialize inside the first consuming
-    # job (the touched-bucket broadcast build) instead of a dedicated
-    # eager-checkpoint driver job per fold.
-    new_bands = new_bands.localCheckpoint(eager=False)
-
-    # occupancy of ONLY the touched buckets: broadcast semi-join keeps the
-    # index scan shuffle-free; the count aggregates <= cap rows per
-    # touched bucket.  Committed snapshot: a crashed update's leftovers
-    # must not count toward the cap.
-    touched = new_bands.select("band", "bk").distinct()
+    # the gate over each touched bucket's committed members plus the
+    # keepers: append-only ids rank every committed member first, so a
+    # keeper's rank is the bucket's occupancy plus its rank among the
+    # keepers — the rebuild's cap test, on touched buckets only.
+    # Committed snapshot: a crashed update's leftovers must not count
+    # toward the cap.  The semi-join's build side is the local keeper
+    # rows as they are (a semi-join needs no unique keys); with no
+    # shuffle on either join side, Catalyst injects no runtime bloom
+    # filter that would scan the index bands to build it.
     committed_bands = (
         idx_view.current()[0]
         if idx_view is not None
         else _committed(spark, index_dir, "bands", high_water)
     )
-    occ = (
-        committed_bands
-        .join(F.broadcast(touched), ["band", "bk"], "left_semi")
-        .groupBy("band", "bk")
-        .agg(F.count("*").alias("occ"))
+    occupants = committed_bands.join(
+        F.broadcast(new_bands.select("band", "bk")), ["band", "bk"], "left_semi"
     )
-    w = Window.partitionBy("band", "bk").orderBy("doc_id")
     admitted = (
-        new_bands.withColumn("rn", F.row_number().over(w))
-        .join(F.broadcast(occ), ["band", "bk"], "left")
-        .filter(F.col("rn") + F.coalesce("occ", F.lit(0)) <= BUCKET_CAP)
-        .select("doc_id", "band", "bk")
+        gate_buckets(occupants.unionByName(new_bands))
+        .filter(F.col("doc_id") > high_water)
+        .select("doc_id", "band", "bk")  # the semi-join put its keys first
     )
     if idx_view is not None:
-        # pin the delta for later cycles.  LAZY checkpoints (per-cycle
-        # driver fixed cost): the blocks materialize as a side effect of
-        # the append writes just below, so later cycles still re-read a
-        # materialized batch-sized frame — EAGER checkpoints would be two
-        # separate driver jobs per sub-batch cycle for the same pinning.
-        admitted = admitted.localCheckpoint(eager=False)
-        new_hsets = new_hsets.localCheckpoint(eager=False)
+        # later sub-batch cycles read this delta: hold it on the driver
+        admitted = _local(admitted)
     try:
-        admitted.write.mode("append").parquet(f"{index_dir}/bands.parquet")
-        new_hsets.write.mode("append").parquet(f"{index_dir}/hsets.parquet")
-        _write_meta(spark, index_dir, int(mn_mx["mx"]), epoch)  # <- the commit
+        # one file per table per fold: the rows are batch-sized
+        for rows, name in ((admitted, "bands"), (new_hsets, "hsets")):
+            rows.coalesce(1).write.mode("append").parquet(
+                f"{index_dir}/{name}.parquet"
+            )
+        _write_meta(spark, index_dir, max(ids), epoch)  # <- the commit
     except BaseException:
         # the fold may have appended rows it never committed — the next
         # epoch-bearing admit_batch must re-vacuum, not trust the cache
@@ -520,7 +570,7 @@ def _fold_frames(
         # stay invisible to later cycles, exactly as _committed's
         # high-water filter would keep them
         idx_view.add_delta(admitted, new_hsets)
-    return int(mn_mx["n"])
+    return len(ids)
 
 
 def _split_batch(batch: DataFrame, k: int, lo: int, hi: int) -> DataFrame:
@@ -584,12 +634,17 @@ def admit_batch(
     call, returning the per-doc verdict frame — result-identical to
     :func:`probe_lsh_index` then :func:`update_lsh_index` on the
     keepers (pytest-pinned), but the batch is sketched ONCE and the
-    probe and fold share the materialized frames (the sketch is the
+    probe and fold share its driver-local frames (the sketch is the
     arrival's dominant linear term; the two-call path pays it twice).
+    The returned verdicts are driver-local too: collecting them runs no
+    job.  Without ``max_docs`` the whole batch is collected to the
+    driver — pass ``max_docs`` for an arrival that may not fit.
 
     Fails fast if any batch id is at or below the index high-water
-    mark (checked BEFORE any sub-batch folds, so a multi-sub-batch
-    admission can never stop half-folded on the id guard).
+    mark: each leaf checks after its sketch and before its probe, and
+    the first leaf of a split holds the batch's lowest id, so the check
+    fires BEFORE any fold and a multi-sub-batch admission can never
+    stop half-folded on the id guard.
 
     ``max_docs`` closes the module's scale caveat with code instead of a
     docstring instruction: the probe broadcasts the BATCH and its
@@ -673,89 +728,30 @@ def admit_batch(
         if index_dir not in _KNOWN_CLEAN:
             vacuum_lsh_index(spark, index_dir)
             _KNOWN_CLEAN.add(index_dir)
-    if _stats is None:
+    if _stats is None and max_docs is not None:
+        # the split decision must precede any collect of the batch
         row = batch.agg(
             F.count("*").alias("n"),
             F.min("doc_id").alias("mn"),
             F.max("doc_id").alias("mx"),
         ).first()
-        stats = {"n": row["n"], "mn": row["mn"], "mx": row["mx"]}
-    else:
-        # precomputed by the parent split's ONE grouped aggregation:
-        # identical values to the per-leaf agg this
-        # replaces — count/min/max of exactly this sub-batch's rows
-        stats = {"n": _stats[0], "mn": _stats[1], "mx": _stats[2]}
-    n = stats["n"]
-    if n > 0 and not _replay:
-        hw = _read_meta(spark, index_dir)["max_doc_id"]
-        if stats["mn"] <= hw:
-            raise ValueError(
-                f"admit_batch requires append-only doc_ids: batch min "
-                f"{stats['mn']} <= indexed max {hw} (re-arrival or "
-                f"out-of-order arrival — re-id the batch)"
-            )
+        _stats = (row["n"], row["mn"], row["mx"])
+    if _stats is None:
+        return _admit_leaf(spark, index_dir, batch, epoch, _replay, _view)
+    n, mn, mx = _stats
     # recursion backstop: a single-id interval cannot split further, so a
     # contract-violating batch with DUPLICATED ids (n > max_docs, one id)
     # degrades to a one-shot probe instead of recursing forever — for
     # n<=1 the preceding arm already forces k=1
-    k = (
-        1
-        if max_docs is None or n <= max_docs or stats["mn"] == stats["mx"]
-        else -(-n // max_docs)
-    )
+    k = 1 if n <= max_docs or mn == mx else -(-n // max_docs)
     if k == 1:
-        # sketch ONCE: the probe and the fold read the same materialized
-        # band/hset frames (the sketch is the arrival's dominant linear
-        # term — update_lsh_index re-sketching the keepers from text
-        # would double it).
-        # No extra eager .localCheckpoint() layer here: _sketch_frames'
-        # band and hset frames are already LAZILY checkpointed by
-        # band_frame / hashed_sets, so their blocks materialize inside the
-        # first consuming job (the verdicts materialization) and every
-        # later consumer (the fold's joins) reads the same pinned blocks;
-        # eager re-checkpoints would be two double-checkpoint driver jobs
-        # per cycle.
-        bands_u, hsets_b = _sketch_frames(spark, batch, gate=False)
-        verdicts = _probe_frames(
-            spark,
-            index_dir,
-            batch.select("doc_id"),
-            gate_buckets(bands_u),
-            hsets_b,
-            as_of_id=stats["mn"] if _replay else None,
-            idx_view=_view,
-        ).localCheckpoint(eager=False)
-        keeps = verdicts.filter(F.col("decision") == "keep")
-        if _replay:
-            mx_keep = keeps.agg(F.max("doc_id")).first()[0]
-            if (
-                mx_keep is not None
-                and mx_keep <= _read_meta(spark, index_dir)["max_doc_id"]
-            ):
-                return verdicts  # this (sub-)batch's fold already committed
-        keep_ids = keeps.select("doc_id")
-        # hint only the JOIN uses; the kept_ids argument feeds an
-        # aggregate in _fold_frames, where a broadcast hint is unusable
-        # and would log "join hint ... not part of a join relation"
-        keep_b = F.broadcast(keep_ids)
-        _fold_frames(
-            spark,
-            index_dir,
-            keep_ids,
-            bands_u.join(keep_b, "doc_id"),
-            hsets_b.join(keep_b, "doc_id"),
-            epoch=epoch,
-            idx_view=_view,
-        )
-        return verdicts
+        return _admit_leaf(spark, index_dir, batch, epoch, _replay, _view)
     # localCheckpoint so the k per-sub filters materialize the batch once
     # (determinism does NOT depend on it: the cuts are a pure function of
     # the batch's lo/hi/k, so a replay in a fresh process reproduces them).
     # LAZY: the grouped stats aggregation right below
     # is the first consumer and materializes the blocks inside its own job.
-    tagged = _split_batch(batch, k, stats["mn"], stats["mx"]).localCheckpoint(
-        eager=False
-    )
+    tagged = _split_batch(batch, k, mn, mx).localCheckpoint(eager=False)
     # ONE grouped aggregation replaces k per-leaf stats jobs plus k
     # isEmpty probes (per-cycle driver fixed cost):
     # the leaves receive exactly the count/min/max the per-sub agg would
@@ -798,12 +794,71 @@ def admit_batch(
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        # the verdict frames are localCheckpoint-materialized per leaf, so
-        # releasing the view's pinned base under them is safe
+        # the leaf verdicts are driver-local relations, so releasing the
+        # view's pinned base under them is safe
         return out
     finally:
         if created_view:
             _view.release()
+
+
+def _admit_leaf(
+    spark: SparkSession,
+    index_dir: str,
+    batch: DataFrame,
+    epoch,
+    replay: bool | None,
+    view: _IndexView | None,
+) -> DataFrame:
+    """One broadcast-sized probe-and-fold of :func:`admit_batch`.  The
+    batch is sketched ONCE into driver-local frames; the probe and the
+    fold both read them (the sketch is the arrival's dominant linear
+    term — re-sketching the keepers from text would double it).  The
+    verdicts are collected to the driver too: their rows give the batch
+    ids and the keepers without a stats job, and the caller's
+    ``collect()`` runs none."""
+    hsets, bands, gated = _batch_frames(batch)
+    ids = [r[0] for r in hsets.select("doc_id").collect()]
+    if ids and not replay:
+        # admit_batch's fail-fast, after the sketch and before the probe
+        hw = _read_meta(spark, index_dir)["max_doc_id"]
+        if min(ids) <= hw:
+            raise ValueError(
+                f"admit_batch requires append-only doc_ids: batch min "
+                f"{min(ids)} <= indexed max {hw} (re-arrival or "
+                f"out-of-order arrival — re-id the batch)"
+            )
+    idx_bands, idx_hsets = _index_frames(
+        spark, index_dir, view, as_of_id=min(ids) if replay and ids else None
+    )
+    verdicts = _local(_probe_frames(idx_bands, idx_hsets, hsets, gated))
+    keep, drop = [], []
+    for r in verdicts.collect():
+        (keep if r.decision == "keep" else drop).append(r.doc_id)
+    if not keep:
+        return verdicts  # nothing to fold, as an empty fold would do
+    if replay and max(keep) <= _read_meta(spark, index_dir)["max_doc_id"]:
+        return verdicts  # this (sub-)batch's fold already committed
+    # a literal id list: filters over local relations fold at planning
+    # time.  Each filter compiles the list into its predicate, so the
+    # shorter list is used — the keepers, or else every batch doc but the
+    # dropped ones (each row of these frames is a batch doc with a verdict)
+    if len(keep) <= len(drop):
+        kept = F.expr(f"doc_id IN ({', '.join(map(str, keep))})")
+    elif drop:
+        kept = F.expr(f"NOT doc_id IN ({', '.join(map(str, drop))})")
+    else:
+        kept = F.lit(True)
+    _fold_frames(
+        spark,
+        index_dir,
+        hsets.select("doc_id").filter(kept),
+        bands.filter(kept),
+        hsets.filter(kept),
+        epoch=epoch,
+        idx_view=view,
+    )
+    return verdicts
 
 
 def compact_lsh_index(
@@ -860,8 +915,7 @@ def compact_lsh_index(
         tmp = f"{index_dir}/.{name}.compact-{uuid.uuid4().hex[:8]}"
         try:
             (
-                spark.read.parquet(live)
-                .filter(F.col("doc_id") <= hw)
+                _committed(spark, index_dir, name, hw)
                 .repartitionByRange(files_per_table, "doc_id")
                 .sortWithinPartitions("doc_id")
                 .write.parquet(tmp)
@@ -985,7 +1039,7 @@ def vacuum_lsh_index(spark: SparkSession, index_dir: str) -> int:
     removed = 0
     for name in ("bands", "hsets"):
         orphan_files = (
-            spark.read.parquet(f"{index_dir}/{name}.parquet")
+            _table(spark, index_dir, name)
             .filter(F.col("doc_id") > hw)
             .groupBy(F.input_file_name().alias("path"))
             .agg(F.count("*").alias("n"))

@@ -35,8 +35,8 @@ candidate set — pair ids, band-hit counts, verified Jaccard, pass flag
 — hash-matches DuckDB exactly.
 
 Registered after ``profiling`` in ``queries.__init__._MODULES`` — new
-round-6 entries must not queue-jump the stalest-evidence queries at the
-registry front (VERDICT r3 #1).
+entries must not queue-jump the stalest-evidence queries at the
+registry front.
 
 Reference parity: no reference analog; completes SURVEY §2.H's near-dup
 family (n02 production path, n36 estimator gate, this the mechanics
@@ -83,16 +83,16 @@ BUCKET_CAP = 64
 # The band-key construction, the BUCKET_CAP gate, and the hashed-set
 # build are parity-critical: n49's persisted-index layout must be
 # byte-identical to n42's pipeline on BOTH engines, so each exists
-# exactly once here (the SRC_FP_CTES discipline — code-review r8).
+# exactly once here (the SRC_FP_CTES discipline).
 
 
 def band_frame(sig: DataFrame) -> DataFrame:
     """(doc_id, band, bk) from a (doc_id, seed, mn) signature frame:
     the band key concatenates the band's minima IN SEED ORDER via
     parity-conditional mins (deterministic — no collect_list ordering
-    hazard).  Checkpointed: consumers join this frame on both sides,
-    and without the barrier each side would rebuild the whole
-    shingle-explode x seeds x min sketch (the n36/n29 lever)."""
+    hazard).  Not pinned here: a caller whose plan consumes the frame
+    more than once pins it (n49), so a caller with driver-local inputs
+    (``lsh_index``) plans no checkpoint at all."""
     return (
         sig.groupBy("doc_id", (F.col("seed") / ROWS).cast("int").alias("band"))
         .agg(
@@ -102,8 +102,15 @@ def band_frame(sig: DataFrame) -> DataFrame:
                 F.min(F.when(F.col("seed") % ROWS == 1, F.col("mn"))),
             ).alias("bk")
         )
-        .localCheckpoint(eager=False)
     )
+
+
+def bucket_rank(bands: DataFrame) -> DataFrame:
+    """(doc_id, band, bk, rn): each band row's rank by doc_id within its
+    (band, bk) bucket — the gate's ordering, for a caller that keeps the
+    gated and the ungated rows from one pass."""
+    w = Window.partitionBy("band", "bk").orderBy("doc_id")
+    return bands.withColumn("rn", F.row_number().over(w))
 
 
 def gate_buckets(bands: DataFrame) -> DataFrame:
@@ -111,23 +118,19 @@ def gate_buckets(bands: DataFrame) -> DataFrame:
     keep the cap-lowest doc_ids.  The rank window shares the (band, bk)
     partitioning the bucket join shuffles on anyway — no extra Exchange
     class — and turns the quadratic saturated-bucket term linear."""
-    w = Window.partitionBy("band", "bk").orderBy("doc_id")
-    return (
-        bands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= BUCKET_CAP)
-        .drop("rn")
-    )
+    return bucket_rank(bands).filter(F.col("rn") <= BUCKET_CAP).drop("rn")
 
 
 def hashed_sets(shs: DataFrame) -> DataFrame:
     """(doc_id, hs): hashed BIGINT shingle sets for the verify stage —
     array ops over BIGINTs are ~5x cheaper than string sets, and both
     engines hash with the same polyhash so even a collision changes the
-    result identically on both sides (p ~ |union|^2/2p ~ 1e-6)."""
+    result identically on both sides (p ~ |union|^2/2p ~ 1e-6).  Not
+    pinned here; callers that read the sets more than once pin them."""
     return shs.select(
         "doc_id",
         F.array_distinct(F.transform("s", lambda q: _polyhash(q))).alias("hs"),
-    ).localCheckpoint(eager=False)
+    )
 
 
 #: oracle fragment: the band-key CTE over `sig` (expects _duck_sig_cte in scope)
@@ -201,27 +204,26 @@ def n42_minhash_banded_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     d = load_tables(spark, sf_dir, "documents")["documents"]
     toks = d.select("doc_id", _tokens(F.col("text")).alias("ws"))
-    # UNPINNED since OPTIMIZATION r17 (ADVICE r16): after the hash-once
-    # refactor hsets is shs' ONLY consumer here, so checkpointing the
-    # distinct-shingle STRING arrays bought no reuse — the hsets pin
+    # unpinned: hsets is shs' ONLY consumer here, so checkpointing the
+    # distinct-shingle STRING arrays would buy no reuse — the hsets pin
     # below is the shared barrier (it feeds the sketch AND both verify
     # sides); one fused projection per row, no intermediate block write
     shs = toks.select("doc_id", F.array_distinct(_shingles("ws", 2)).alias("s"))
-    # hash-once (OPTIMIZATION r16, sketch_from_hashes docstring): the
-    # verify-stage hashed sets are built FIRST and the sketch explodes
-    # them, instead of polyhashing the exploded strings a second time —
-    # min per (doc, seed) is invariant under the distinct-collapse, so
-    # sig is bit-identical (oracle hash gate re-verified)
-    hsets = hashed_sets(shs)
+    # hash-once (sketch_from_hashes docstring): the verify-stage hashed
+    # sets are built FIRST and the sketch explodes them, instead of
+    # polyhashing the exploded strings a second time — min per (doc,
+    # seed) is invariant under the distinct-collapse, so sig is
+    # bit-identical (oracle hash gate re-verified)
+    hsets = hashed_sets(shs).localCheckpoint(eager=False)
     sig = sketch_from_hashes(
         hsets.select("doc_id", F.explode("hs").alias("x"))
     )
     # shared banding machinery (band_frame / gate_buckets docstrings) —
     # one copy for n42's pipeline and n49's persisted-index layout.
-    # PINNED (OPTIMIZATION r17, guide §1.2 step 1): the bucket self-join
-    # consumes this frame on BOTH sides, and without the barrier the gate
-    # window (Exchange + double Sort + WindowGroupLimit + Window) runs
-    # once per side (the unpinned plan ran it 2x)
+    # PINNED: the bucket self-join consumes this frame on BOTH sides, and
+    # without the barrier the gate window (Exchange + double Sort +
+    # WindowGroupLimit + Window) runs once per side (the unpinned plan
+    # ran it 2x)
     gated = gate_buckets(band_frame(sig)).localCheckpoint(eager=False)
     a = gated.select(
         F.col("doc_id").alias("doc_a"),

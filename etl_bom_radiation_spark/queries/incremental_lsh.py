@@ -45,8 +45,7 @@ and best-Jaccard hash-match DuckDB exactly.
 
 Registered after ``heavy_hitters`` in ``queries.__init__._MODULES`` —
 new entries must not queue-jump the stalest-evidence queries at the
-registry front (VERDICT r3 #1; net-new budget this round: VERDICT r7
-#2 caps it at 5, this is #1).
+registry front.
 
 Reference parity: no reference analog; extends SURVEY §2.H's near-dup
 family (n02 production path, n36 estimator gate, n42 mechanics gate,
@@ -84,9 +83,9 @@ def shard_verdicts(
     spine: DataFrame,
 ) -> DataFrame:
     """The probe/verify/verdict assembly shared by the one-shot n49
-    query and the persisted-index API (``lsh_index.probe_lsh_index``) —
-    ONE implementation so the two paths cannot drift (the banded_lsh
-    helper discipline, code-review r8).
+    query and the persisted-index API (``lsh_index``) — ONE
+    implementation so the two paths cannot drift (the banded_lsh helper
+    discipline).
 
     ``idx_gated``/``inc_gated``: capped (doc_id, band, bk) bucket
     memberships (the index's capped at build time, the shard's within
@@ -95,19 +94,20 @@ def shard_verdicts(
     ``inc_hsets``: the shard-sized slice; ``spine``: the incoming
     doc_ids (one row per arriving doc, preserved into the result).
 
+    The shard-side inputs must be MATERIALIZED (pinned, or driver-local
+    relations): ``inc_gated`` feeds three consumers (the index probe join
+    and both sides of the in-shard pairing), and over a lazy gate
+    Catalyst would re-derive the whole gate-window subtree — Exchange +
+    double Sort + WindowGroupLimit + Window — once per consumer.  n49
+    pins its own; ``lsh_index`` passes relations it already collected to
+    the driver, which no pin could make cheaper.
+
     Plan shape: the shard side broadcasts everywhere — the index is
     probed, never shuffled (no SortMergeJoin anywhere; asserted in
     tests for both callers)."""
     # the incoming band frame is shard-sized: broadcast it so neither the
-    # probe nor the in-shard pairing ever shuffles the index.  PINNED
-    # first (OPTIMIZATION r17, guide §1.2 step 1): this frame feeds THREE
-    # consumers (the index probe join plus both sides of the in-shard
-    # pairing), and without the barrier Catalyst re-derives the whole
-    # gate-window subtree — Exchange + double Sort + WindowGroupLimit +
-    # Window over the band frame — once per consumer (the unpinned n49
-    # plan ran the gate window 3x).  The pin computes the gate once and
-    # lets the identical broadcast builds reuse one exchange.
-    inc_gated = F.broadcast(inc_gated.localCheckpoint(eager=False))
+    # probe nor the in-shard pairing ever shuffles the index
+    inc_gated = F.broadcast(inc_gated)
     inc_a = inc_gated.select(
         F.col("doc_id").alias("doc"),
         F.col("band").alias("nb"),
@@ -138,8 +138,8 @@ def shard_verdicts(
         .withColumn("kind", F.lit("shard"))
         .select("doc", "other", "kind")
     )
-    # ONE distinct after the union instead of one per branch
-    # (OPTIMIZATION r17, guide §2.4): `kind` is constant within a branch
+    # ONE distinct after the union instead of one per branch: `kind` is
+    # constant within a branch
     # and differs across them, so distinct-over-union collapses exactly
     # the same rows the two per-branch distincts did — same candidate
     # set, one candidate shuffle exchange instead of two per probe.
@@ -278,26 +278,30 @@ def n49_incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shs = toks.select(
         "doc_id", F.array_distinct(_shingles("ws", 2)).alias("s")
     ).localCheckpoint(eager=False)
-    # hash-once (OPTIMIZATION r16, sketch_from_hashes docstring): the
-    # hashed shingle sets are built FIRST and the sketch explodes them —
-    # one polyhash per (doc, distinct shingle) instead of two; sig is
-    # bit-identical (min invariant under the distinct-collapse)
-    hsets = hashed_sets(shs)
+    # hash-once (sketch_from_hashes docstring): the hashed shingle sets
+    # are built FIRST and the sketch explodes them — one polyhash per
+    # (doc, distinct shingle) instead of two; sig is bit-identical (min
+    # invariant under the distinct-collapse).  Pinned: the sets feed the
+    # sketch and both verify sides
+    hsets = hashed_sets(shs).localCheckpoint(eager=False)
     sig = sketch_from_hashes(
         hsets.select("doc_id", F.explode("hs").alias("x"))
     )
-    bands = band_frame(sig)
+    # pinned: both gated sides read it, and each would otherwise rebuild
+    # the sketch aggregate
+    bands = band_frame(sig).localCheckpoint(eager=False)
     # `%` (sign-of-dividend), NOT F.pmod: the oracle's `%` is DuckDB's
     # sign-of-dividend remainder, so pmod would route a negative doc_id
     # into the shard on Spark but onto the index side in the oracle — a
-    # row-set divergence under the hash gate (code-review r8)
+    # row-set divergence under the hash gate
     is_inc = (F.col("doc_id") % SHARD_MOD) == SHARD_REM
 
     # capped bucket membership computed over ONE side's docs only: the
     # index cap is fixed at build time (cannot see arrivals), the shard
     # cap sees only the shard (shared gate_buckets — the n42 gate)
     idx_gated = gate_buckets(bands.filter(~is_inc))
-    inc_gated = gate_buckets(bands.filter(is_inc))
+    # pinned: shard_verdicts takes materialized shard-side inputs
+    inc_gated = gate_buckets(bands.filter(is_inc)).localCheckpoint(eager=False)
     # (hsets built above — ONE hashed-set frame feeds sketch and verify)
     return shard_verdicts(
         idx_gated,

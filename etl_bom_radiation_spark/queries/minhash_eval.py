@@ -30,8 +30,8 @@ Scale shape (the part that must survive 100 TB):
   divisions rounded on both engines.
 
 Registered after ``provenance`` in ``queries.__init__._MODULES`` — new
-round-4 entries must not queue-jump the never-driver-verified queries at
-the registry front (VERDICT r3 #1).
+entries must not queue-jump the never-driver-verified queries at the
+registry front.
 
 Reference parity: no reference analog; extends SURVEY §2.H alongside
 n02 (MinHash LSH) and n12 (exact n-gram Jaccard).
@@ -101,11 +101,10 @@ def sketch_from_hashes(based: DataFrame) -> DataFrame:
     affine-permutation + min-aggregation half of :func:`sketch_signatures`
     without the polyhash projection.
 
-    OPTIMIZATION r16 (guide §1.2 step 2 — don't compute things twice):
-    the pipelines that build BOTH the sketch and the verify-stage hashed
-    shingle sets (n42, n49, lsh_index) were polyhashing every
-    (doc, shingle) pair twice — once exploded for the sketch, once inside
-    ``hashed_sets``'s transform.  Feeding the sketch from the EXPLODED
+    Don't compute things twice: the pipelines that build BOTH the sketch
+    and the verify-stage hashed shingle sets (n42, n49, lsh_index) were
+    polyhashing every (doc, shingle) pair twice — once exploded for the
+    sketch, once inside ``hashed_sets``'s transform.  Feeding the sketch from the EXPLODED
     HASHED SET instead halves the dominant interpreted-HOF term and
     explodes BIGINTs instead of strings (measured at sf0.1: the sketch's
     hash pass 0.95 s -> 0.27 s as an explode of the pre-hashed array).
@@ -114,10 +113,14 @@ def sketch_from_hashes(based: DataFrame) -> DataFrame:
     invariant under duplicate removal — a polyhash COLLISION between two
     distinct shingles of one doc collapses to one row here where the old
     frame carried two, but min() over the same value set is unchanged
-    (oracle hash gates re-verified for n42/n49)."""
+    (oracle hash gates re-verified for n42/n49).
+
+    The 16 minima are SQL strings, not Column trees: each Column built in
+    Python is a chain of py4j round trips, and this sketch is rebuilt on
+    every arrival the persisted index admits."""
     mins = based.groupBy("doc_id").agg(
         *[
-            F.min((F.lit(a) * F.col("x") + F.lit(b)) % _POLY_MOD).alias(f"m{i}")
+            F.expr(f"min(({a} * x + {b}) % {_POLY_MOD}) AS m{i}")
             for i, (a, b) in enumerate(AFFINE)
         ]
     )

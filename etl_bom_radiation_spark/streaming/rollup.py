@@ -44,6 +44,14 @@ from ..workspace import _commit_version, _fs, _read_latest, _read_text, _version
 
 KEYS = ["RadiationType", "year", "month", "day", "hour"]
 
+#: The schema of the partial generations as :func:`append_hourly_partials`
+#: writes them from decoded points (``gen`` is the partition column).
+#: Reads pass it, so a read opens no data file to infer a schema.
+PARTIAL_SCHEMA = (
+    "RadiationType STRING, year INT, month INT, day INT, hour INT, "
+    "cnt BIGINT, sum_rad BIGINT, min_rad INT, max_rad INT, gen STRING"
+)
+
 #: fold records live here as ``<n>.json`` (see :func:`compact_rollup`);
 #: the ``_`` prefix keeps the directory out of Spark's partition discovery
 _FOLDS = "_folds"
@@ -102,14 +110,19 @@ def read_hourly_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
     The generations are listed under the latest fold record, and the
     listing is taken again if a compaction committed meanwhile, so the
     record and the listing agree. The filter is on the ``gen`` partition
-    column, so dropped generations are pruned, never opened. A read that
-    runs while a compaction deletes the generations it folded can still
-    fail loudly on a missing file; it never returns a wrong total."""
+    column, so dropped generations are pruned, never opened, and the
+    schema is :data:`PARTIAL_SCHEMA`, so the call itself opens no data
+    file and runs no Spark job (the listing stays on the driver below
+    Spark's parallel-listing threshold).  A read that runs while a
+    compaction deletes the generations it folded can still fail loudly
+    on a missing file when it is collected; it never returns a wrong
+    total."""
     fs, root, jvm = _fs(spark, rollup_dir)
     folds = jvm.org.apache.hadoop.fs.Path(root, _FOLDS)
     while True:
         n, rec = _latest_record(fs, jvm, folds)
-        p = spark.read.parquet(rollup_dir)  # lists every generation's files
+        # lists every generation's files
+        p = spark.read.schema(PARTIAL_SCHEMA).parquet(rollup_dir)
         if max(_versions(fs, jvm, folds), default=-1) == n:
             break
     gen = F.col("gen")
@@ -180,7 +193,8 @@ def compact_rollup(spark: SparkSession, rollup_dir: str) -> None:
         return
     label = f"fold-{n + 1:020d}-{uuid4().hex[:8]}"
     (
-        spark.read.option("basePath", rollup_dir)
+        spark.read.schema(PARTIAL_SCHEMA)
+        .option("basePath", rollup_dir)
         .parquet(*(f"{rollup_dir}/gen={g}" for g in absorbed))
         .groupBy(*KEYS)
         .agg(

@@ -55,3 +55,35 @@ class LyingFS:
             self._fail_deletes -= 1
             return False
         return self._fs.delete(path, recursive)
+
+
+def jobs_run(spark, fn):
+    """``(fn(), ids of the Spark jobs fn ran, SQL plans fn executed)``.
+    Jobs are counted through a job group; the plans are the final
+    physical plans of the SQL executions that started during the call
+    (wall time on a shared box says nothing about the mechanism)."""
+    import uuid
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = store.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    before = set(executions())
+    group = f"jobs-run-{uuid.uuid4().hex}"
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    prev = [sc.getLocalProperty(k) for k in keys]
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k, v in zip(keys, prev):
+            sc.setLocalProperty(k, v)
+    plans = [p for i, p in executions().items() if i not in before]
+    return out, list(sc.statusTracker().getJobIdsForGroup(group)), plans

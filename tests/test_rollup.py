@@ -430,3 +430,30 @@ def test_swap_layout_folded_generation_absorbed(spark, tmp_path):
     (left,) = _gens(rdir)
     assert left.startswith("fold-")
     assert _total(spark, rdir) == (2, 6.0, 5, 7)
+
+
+def test_read_opens_no_data_file(spark, tmp_path):
+    """``read_hourly_rollup`` runs no Spark job: the partials' schema is
+    declared, so the call opens no footer of a generation a concurrent
+    compaction may be about to delete (a few generations stay below
+    Spark's parallel-listing threshold, so the listing is driver-side).
+    The declared schema is the one the appends and the fold write."""
+    from tests.conftest import jobs_run
+
+    rdir = str(tmp_path / "rollup")
+    for rad in (5, 7):
+        R.append_hourly_partials(_one_point(spark, rad), rdir)
+    R.compact_rollup(spark, rdir)
+    R.append_hourly_partials(_one_point(spark, 9), rdir, batch_id=0)
+
+    merged, jobs, _ = jobs_run(spark, lambda: R.read_hourly_rollup(spark, rdir))
+    assert jobs == []
+    assert _total(spark, rdir) == (3, 7.0, 5, 9)
+    assert merged.count() == 1
+    for gen in _gens(rdir):
+        written = spark.read.parquet(f"{rdir}/gen={gen}").schema
+        assert [(f.name, f.dataType.simpleString()) for f in written] == [
+            (f.name, f.dataType.simpleString())
+            for f in spark.read.schema(R.PARTIAL_SCHEMA).parquet(rdir).schema
+            if f.name != "gen"
+        ]

@@ -1409,7 +1409,31 @@ def _kp(df):
     )
 
 
-def test_admit_batch_epoch_replay_idempotent(spark, tmp_path):
+@pytest.fixture(scope="module")
+def _epoch_base(spark, tmp_path_factory):
+    """The ``_EPOCH_SEED`` index, built once for the module."""
+    from etl_bom_radiation_spark.lsh_index import build_lsh_index
+
+    d = str(tmp_path_factory.mktemp("epoch_base") / "idx")
+    build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
+    return d
+
+
+@pytest.fixture()
+def epoch_index(_epoch_base):
+    """``epoch_index(dst)`` copies the shared ``_EPOCH_SEED`` index to
+    ``dst`` and returns its path: each test folds into, crashes and
+    repairs its own copy."""
+    import shutil
+
+    def copy(dst) -> str:
+        shutil.copytree(_epoch_base, dst)
+        return str(dst)
+
+    return copy
+
+
+def test_admit_batch_epoch_replay_idempotent(spark, tmp_path, epoch_index):
     """The foreachBatch exactly-once protocol, full-replay case: after a
     COMPLETE admission, re-admitting the same batch with the same epoch
     (Spark redelivers the last uncommitted micro-batch on restart)
@@ -1420,7 +1444,7 @@ def test_admit_batch_epoch_replay_idempotent(spark, tmp_path):
     import etl_bom_radiation_spark.lsh_index as L
 
     d = str(tmp_path / "idx")
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
+    epoch_index(d)
     batch = _docs_frame(spark, _EPOCH_BATCH)
 
     v1 = _kp(L.admit_batch(spark, d, batch, max_docs=2, epoch=0))
@@ -1441,7 +1465,9 @@ def test_admit_batch_epoch_replay_idempotent(spark, tmp_path):
         L.admit_batch(spark, d, batch, max_docs=2, epoch=0)
 
 
-def test_admit_batch_epoch_replay_mid_subbatch_crash(spark, tmp_path, monkeypatch):
+def test_admit_batch_epoch_replay_mid_subbatch_crash(
+    spark, tmp_path, monkeypatch, epoch_index
+):
     """Crash AFTER the first sub-batch's fold committed: the replay must
     reproduce every sub-batch's verdicts bit-identically (committed
     sub-batches probed against the reconstructed as-of index view, not
@@ -1452,7 +1478,7 @@ def test_admit_batch_epoch_replay_mid_subbatch_crash(spark, tmp_path, monkeypatc
     batch = _docs_frame(spark, _EPOCH_BATCH)
     ctrl, d = str(tmp_path / "ctrl"), str(tmp_path / "idx")
     for p in (ctrl, d):
-        L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), p)
+        epoch_index(p)
     want = _kp(L.admit_batch(spark, ctrl, batch, max_docs=2, epoch=0))
 
     real_fold, calls = L._fold_frames, []
@@ -1481,7 +1507,9 @@ def test_admit_batch_epoch_replay_mid_subbatch_crash(spark, tmp_path, monkeypatc
     assert _index_rows(spark, d) == _index_rows(spark, ctrl)
 
 
-def test_admit_batch_epoch_replay_mid_append_crash(spark, tmp_path, monkeypatch):
+def test_admit_batch_epoch_replay_mid_append_crash(
+    spark, tmp_path, monkeypatch, epoch_index
+):
     """Crash INSIDE the fold (data files appended, mark never published):
     the stored epoch never became this epoch, so the redelivery takes
     the NORMAL path — but because an epoch was given, admit_batch
@@ -1492,7 +1520,7 @@ def test_admit_batch_epoch_replay_mid_append_crash(spark, tmp_path, monkeypatch)
     batch = _docs_frame(spark, _EPOCH_BATCH)
     ctrl, d = str(tmp_path / "ctrl"), str(tmp_path / "idx")
     for p in (ctrl, d):
-        L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), p)
+        epoch_index(p)
     want = _kp(L.admit_batch(spark, ctrl, batch, epoch=0))
 
     real_write = L._write_meta
@@ -1513,7 +1541,7 @@ def test_admit_batch_epoch_replay_mid_append_crash(spark, tmp_path, monkeypatch)
     assert _index_rows(spark, d) == _index_rows(spark, ctrl)
 
 
-def test_admit_batch_vacuum_once_per_process(spark, tmp_path, monkeypatch):
+def test_admit_batch_vacuum_once_per_process(spark, tmp_path, monkeypatch, epoch_index):
     """Epoch-mode's repair pass (vacuum: file listing + stats-pruned
     footer scan over the WHOLE index) is paid once per driver process
     per index, not per micro-batch — a healthy continuous stream must
@@ -1522,7 +1550,7 @@ def test_admit_batch_vacuum_once_per_process(spark, tmp_path, monkeypatch):
     import etl_bom_radiation_spark.lsh_index as L
 
     d = str(tmp_path / "idx")
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
+    epoch_index(d)
     real_vac, vacs = L.vacuum_lsh_index, []
     monkeypatch.setattr(
         L, "vacuum_lsh_index", lambda *a: (vacs.append(1), real_vac(*a))[1]
@@ -1601,7 +1629,9 @@ def test_split_batch_distributed_deterministic_contiguous(spark):
     assert again == sorted((r.doc_id, r._sub) for r in rows)
 
 
-def test_admit_batch_skewed_ids_resplit_recursively(spark, tmp_path, monkeypatch):
+def test_admit_batch_skewed_ids_resplit_recursively(
+    spark, tmp_path, monkeypatch, epoch_index
+):
     """Width-equal cuts over-fill a range when ids CLUSTER (here: 8 low
     ids + 8 high ids, max_docs=4 -> the first width-equal cut holds all
     8 low ids); admit_batch must forward max_docs into the recursion so
@@ -1622,7 +1652,7 @@ def test_admit_batch_skewed_ids_resplit_recursively(spark, tmp_path, monkeypatch
     )
     one, sub = str(tmp_path / "one"), str(tmp_path / "sub")
     for d in (one, sub):
-        L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
+        epoch_index(d)
 
     v_one = _kp(L.admit_batch(spark, one, batch))
 
@@ -1686,7 +1716,7 @@ def test_meta_stray_temp_ignored(spark, tmp_path):
     assert not [f for f in meta.iterdir() if f.name.endswith(".tmp")]
 
 
-def test_write_meta_rename_failure_surfaces(spark, tmp_path, monkeypatch):
+def test_write_meta_rename_failure_surfaces(spark, tmp_path, monkeypatch, epoch_index):
     """``_write_meta`` checks ``fs.rename``'s boolean: on a store where
     the rename fails WITHOUT throwing, a silent commit loss would leave
     the appended keeper rows above a stale mark while the caller reports
@@ -1697,7 +1727,7 @@ def test_write_meta_rename_failure_surfaces(spark, tmp_path, monkeypatch):
     from tests.conftest import LyingFS
 
     d = str(tmp_path / "idx")
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
+    epoch_index(d)
     real_fs = L._fs
 
     def lying(s, path):
@@ -1765,7 +1795,9 @@ def test_meta_reader_during_commits(spark, tmp_path):
     assert L._read_meta(spark, d)["max_doc_id"] == 30
 
 
-def test_compact_missing_live_table_diagnosed(spark, tmp_path, monkeypatch):
+def test_compact_missing_live_table_diagnosed(
+    spark, tmp_path, monkeypatch, epoch_index
+):
     """Hadoop delete returns false for a MISSING path too —
     a live table that vanishes out-of-band right at the swap must
     surface as the missing-table diagnosis, not as a misleading
@@ -1774,7 +1806,7 @@ def test_compact_missing_live_table_diagnosed(spark, tmp_path, monkeypatch):
     from tests.conftest import LyingFS
 
     d = str(tmp_path / "idx")
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
+    epoch_index(d)
     for lo in (100, 200):  # fold generations so compaction has work
         L.admit_batch(
             spark,
@@ -1816,7 +1848,7 @@ def test_compact_missing_live_table_diagnosed(spark, tmp_path, monkeypatch):
     assert fs.exists(bands_p)
 
 
-def test_vacuum_orphans_in_encodable_path(spark, tmp_path, monkeypatch):
+def test_vacuum_orphans_in_encodable_path(spark, tmp_path, monkeypatch, epoch_index):
     """vacuum's file deletes must survive URI-encodable characters in
     the index path (ADVICE r9): ``input_file_name()`` yields a
     percent-ENCODED URI, which fed raw to ``Path(String)`` names a file
@@ -1827,7 +1859,7 @@ def test_vacuum_orphans_in_encodable_path(spark, tmp_path, monkeypatch):
     import etl_bom_radiation_spark.lsh_index as L
 
     d = str(tmp_path / "work space" / "idx")  # encodes to work%20space
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
+    epoch_index(d)
     monkeypatch.setattr(
         L,
         "_write_meta",
@@ -1849,7 +1881,9 @@ def test_vacuum_orphans_in_encodable_path(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.slow
-def test_admit_batch_epoch_replay_across_process(spark, tmp_path, monkeypatch):
+def test_admit_batch_epoch_replay_across_process(
+    spark, tmp_path, monkeypatch, epoch_index
+):
     """The epoch replay in a FRESH DRIVER PROCESS — the deployment shape
     (a restarted stream is a new JVM/Python pair), and precisely the
     scenario the in-process replay tests cannot see: any splitter whose
@@ -1885,7 +1919,7 @@ def test_admit_batch_epoch_replay_across_process(spark, tmp_path, monkeypatch):
     batch = _docs_frame(spark, docs).coalesce(1)
     ctrl, d = str(tmp_path / "ctrl"), str(tmp_path / "idx")
     for p in (ctrl, d):
-        L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), p)
+        epoch_index(p)
     want = _kp(L.admit_batch(spark, ctrl, batch, max_docs=400, epoch=0))
 
     real_fold, calls = L._fold_frames, []
@@ -1953,7 +1987,9 @@ def test_split_batch_refuses_overflowing_id_span(spark, tmp_path):
     ]
 
 
-def test_admit_batch_subbatches_share_one_committed_read(spark, tmp_path, monkeypatch):
+def test_admit_batch_subbatches_share_one_committed_read(
+    spark, tmp_path, monkeypatch, epoch_index
+):
     """Generation reuse (VERDICT r12 #6): a sub-batched admission reads
     the committed index tables ONCE (the _IndexView pin), not once per
     sub-batch cycle — each later cycle sees base ∪ committed deltas.
@@ -1962,7 +1998,7 @@ def test_admit_batch_subbatches_share_one_committed_read(spark, tmp_path, monkey
     import etl_bom_radiation_spark.lsh_index as L
 
     d = str(tmp_path / "idx")
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
+    epoch_index(d)
 
     reads = []
     real = L._committed
@@ -1975,3 +2011,52 @@ def test_admit_batch_subbatches_share_one_committed_read(spark, tmp_path, monkey
     out = _kp(L.admit_batch(spark, d, _docs_frame(spark, _EPOCH_BATCH), max_docs=2))
     assert len(out) == len(_EPOCH_BATCH)
     assert reads.count("bands") == 1 and reads.count("hsets") == 1, reads
+
+
+def test_index_schema_is_the_declared_constant(spark, tmp_path, epoch_index):
+    """Every index read passes ``INDEX_SCHEMAS`` instead of inferring a
+    schema from a footer, so the constant must be exactly what the index
+    writes — field by field, names and types, in order — in every data
+    file: the build's and a fold's appends."""
+    import etl_bom_radiation_spark.lsh_index as L
+
+    d = epoch_index(tmp_path / "idx")
+    L.admit_batch(spark, d, _docs_frame(spark, _EPOCH_BATCH))
+    for name in L.INDEX_SCHEMAS:
+        declared = [
+            (f.name, f.dataType.simpleString())
+            for f in L._table(spark, d, name).schema
+        ]
+        files = sorted((tmp_path / "idx" / f"{name}.parquet").glob("part-*"))
+        assert len(files) > 1  # the build's and the fold's
+        for f in files:
+            written = spark.read.parquet(str(f)).schema
+            assert [(c.name, c.dataType.simpleString()) for c in written] == (
+                declared
+            ), (name, f.name)
+
+
+def test_admit_batch_job_budget(spark, tmp_path, epoch_index):
+    """One warm ``admit_batch(..., epoch=e)`` of a small batch runs a
+    bounded number of Spark jobs, whatever the batch holds: the
+    batch-side frames are collected to the driver once, the stats come
+    from the verdict rows, index reads declare their schema, and the
+    caller's ``collect()`` reads driver-local verdicts.  The fold's
+    occupancy join has no shuffled side, so no executed plan carries a
+    runtime bloom filter (``might_contain``) built by scanning the
+    index bands."""
+    import etl_bom_radiation_spark.lsh_index as L
+    from tests.conftest import jobs_run
+
+    d = epoch_index(tmp_path / "idx")
+    # first call of the index: the epoch-mode vacuum runs here, not below
+    L.admit_batch(
+        spark, d, _docs_frame(spark, [(5, "warm up arrival on plan caches")]), epoch=0
+    )
+    batch = _docs_frame(spark, _EPOCH_BATCH)
+    rows, jobs, plans = jobs_run(
+        spark, lambda: L.admit_batch(spark, d, batch, epoch=1).collect()
+    )
+    assert sorted(r.doc_id for r in rows) == [i for i, _ in _EPOCH_BATCH]
+    assert len(jobs) <= 13, len(jobs)
+    assert plans and not [p for p in plans if "might_contain" in p]
