@@ -20,10 +20,11 @@ Scale design:
   task appending a small file to every partition — at 100 TB this is the
   difference between |partitions| output files and |tasks|x|partitions|
   small files;
-* quarantine detection is header/metadata-based (NULL ncols/Date after
-  ANSI-safe try_cast) — no second decode pass. Each file's text is still
-  read twice, though: once by the classify collect, once by the write
-  (ROADMAP item 2);
+* each arriving file is read once: the write job parses its header,
+  classifies it on decode's own header columns and its filename metadata
+  (NULL after ANSI-safe try_cast = malformed), and decodes only the good
+  files; the per-file verdicts come back through an ``Observation`` of
+  that job;
 * file moves are Hadoop FS renames (server-side copy+delete in the
   reference, bom.py:16-25); the list of files per batch is small (one
   driver-side loop over file names, never over rows).
@@ -61,13 +62,23 @@ path; only recovery reads a manifest back.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .grid.decode import decode_grids, read_grid_files, with_filename_metadata
+from .grid.decode import (
+    HEADER_COLS,
+    decode_body,
+    decode_grids,
+    decode_header,
+    read_grid_files,
+    with_filename_metadata,
+)
+from .session import filter_cached, select_cached
 from .workspace import (
     Workspace,
     _fs,
@@ -96,29 +107,28 @@ class IngestResult:
     partitions: list[dict] = field(default_factory=list)
 
 
-def _classify_files(meta: DataFrame) -> DataFrame:
-    """Mark each file good/bad from header + filename metadata only (G1/S2
-    columns; no full decode): bad = unparseable header or filename grammar.
-    Emits a reason code per bad file."""
-    from .grid.decode import _header_field
-
-    lines = F.split(F.col("_content"), r"\r?\n")
-    header_ok = (
-        _header_field(lines, 1).try_cast("int").isNotNull()
-        & _header_field(lines, 2).try_cast("int").isNotNull()
-        & _header_field(lines, 3).try_cast("double").isNotNull()
-        & _header_field(lines, 4).try_cast("double").isNotNull()
-        & _header_field(lines, 5).try_cast("double").isNotNull()
-        & _header_field(lines, 6).try_cast("int").isNotNull()
+def _classify_columns() -> list:
+    header_ok = functools.reduce(
+        operator.and_, (F.col(c).isNotNull() for c in HEADER_COLS)
     )
     name_ok = F.col("Date").isNotNull() & F.col("RadiationType").isNotNull()
-    return meta.select(
-        "_path",
+    return [
+        "*",
         (header_ok & name_ok).alias("_ok"),
+        # a bad header wins over a bad filename
         F.when(~header_ok, "bad_header")
         .when(~name_ok, "bad_filename")
         .alias("_reason"),
-    )
+    ]
+
+
+def _classify_files(headed: DataFrame) -> DataFrame:
+    """Mark each file of :func:`decode_header`'s output good or bad: bad =
+    a header scalar that decode cannot parse (the very columns the decode
+    uses, so a header the classification passes never decodes to NULL
+    coordinates) or a filename off the grammar. Adds ``_ok`` (never NULL)
+    and ``_reason`` (the reason code of a bad file)."""
+    return select_cached(headed, "ingest.classify", _classify_columns)
 
 
 def _move(spark: SparkSession, src_uri: str, dst_dir: str) -> None:
@@ -128,7 +138,7 @@ def _move(spark: SparkSession, src_uri: str, dst_dir: str) -> None:
     ``FileSystem.rename`` returns False instead of raising when the
     destination already exists (e.g. a re-delivered input file whose name
     is already in done/). Silently ignoring that left the file in in/ to
-    be re-ingested next batch (ADVICE r2); instead the destination is
+    be re-ingested next batch; instead the destination is
     replaced — S3 copy semantics, matching the reference — and a rename
     that still fails raises."""
     fs, src, jvm = _fs(spark, src_uri)
@@ -153,7 +163,7 @@ def _move_all(
 
     Failures are isolated per file: every path gets its rename attempt and
     the failed ones come back as ``{path: error}`` instead of an exception
-    aborting the batch mid-move (ADVICE r3: raising here AFTER points were
+    aborting the batch mid-move (raising here AFTER points were
     appended and partitions registered stranded the not-yet-moved files in
     ``in/`` to be re-decoded — and re-appended — next batch)."""
     if not paths:
@@ -225,8 +235,8 @@ def write_points(
         # the partition columns MUST lead the sort: the partitioned V1
         # writer requires an ordering on them and inserts its own Sort if
         # unsatisfied — and Catalyst's EliminateSorts then removes this one
-        # entirely, silently writing un-clustered files (code-review r6,
-        # verified on a two-hour batch). Leading with the partition cols
+        # entirely, silently writing un-clustered files (verified on a
+        # two-hour batch). Leading with the partition cols
         # makes this sort satisfy the writer's requirement, so the Morton
         # key survives as the intra-partition order. Caveat: the satisfies
         # check compares post-folding orderings, so it holds when the
@@ -298,21 +308,54 @@ def ingest_batch(
     move good files to ``done/`` and bad files to ``quarantine/``, register
     partitions (T8). Mirrors process_file (bom.py:35-84) at batch scale.
 
-    Driver-side state is one entry per FILE per batch (the classify
-    collect and the move lists) — bounded by arrival rate, never by row
-    count. For a millions-of-files backlog, shard the in/ prefix across
-    ingest jobs; the decode/write data path itself is fully distributed."""
+    Driver-side state is one entry per FILE per batch (the observed
+    per-file flags and the move lists) — bounded by arrival rate, never by
+    row count. Files move only after the write has succeeded. For a
+    millions-of-files backlog, shard the in/ prefix across ingest jobs; the
+    decode/write data path itself is fully distributed."""
     res = IngestResult()
     readable, oversized = _split_by_size(spark, ws.in_dir, max_file_bytes)
     if not readable and not oversized:
         return res
+    flags = []
     if readable:
-        meta = with_filename_metadata(read_grid_files(spark, readable))
-        flags = _classify_files(meta).collect()  # one row per FILE (small)
-    else:
-        meta, flags = None, []
-    # Path reconciliation (weird-grid net r14), by basename — the in/
-    # listing is flat so basenames are unique within a batch:
+        # one pass: every file is read, classified and (if good) decoded by
+        # the write job; the flags come back through an Observation taken
+        # before the filter, while the file is still one row
+        flagged = _classify_files(
+            decode_header(with_filename_metadata(read_grid_files(spark, readable)))
+        )
+        files_obs = Observation("ingest_batch_files")
+        observed = flagged.observe(
+            files_obs, F.collect_list(F.struct("_path", "_ok", "_reason")).alias("files")
+        )
+        points = decode_body(filter_cached(observed, "ingest.ok", lambda: F.col("_ok")))
+        # row count + distinct partition tuples (bounded by |files| — one
+        # hour partition per file), observed in the same write job
+        obs = Observation("ingest_batch")
+        points = points.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.collect_set(F.struct(*PARTITION_COLS)).alias("parts"),
+        )
+        # runs even when no file is good: it writes no data file then
+        write_points(points, ws.data_dir, cluster_spatial=cluster_spatial)
+        if obs._jo.getRow().length() > 0:
+            flags = files_obs.get["files"]  # one row per FILE (small)
+            metrics = obs.get
+            res.rows_written = metrics["rows"]
+            res.partitions = sorted(
+                (p.asDict() for p in metrics["parts"]),
+                key=lambda d: tuple(d[c] for c in PARTITION_COLS),
+            )
+        else:
+            # no point reached the write's shuffle, and AQE replaced that
+            # empty stage by an empty relation, dropping both observations
+            # taken inside it (Spark 4.1): nothing was written, so classify
+            # in a second job
+            flags = flagged.select("_path", "_ok", "_reason").collect()
+    # Path reconciliation, by basename — the in/ listing is flat so
+    # basenames are unique within a batch:
     # * the wholetext reader emits NO row for a zero-length file, so an
     #   empty file would never be classified — and would sit in in/
     #   forever, re-listed by every batch: any listed readable file that
@@ -322,8 +365,7 @@ def ingest_batch(
     #   raises FileNotFoundException), so a URI-special char in a
     #   filename left the file in in/ to re-ingest — DUPLICATE rows —
     #   every later batch. All FS operations and reported paths use the
-    #   listing's REAL paths; only the decode-side isin filter keeps the
-    #   reader's encoded spelling.
+    #   listing's REAL paths, never the reader's encoded spelling.
     from urllib.parse import unquote
 
     by_name = {os.path.basename(p): p for p in readable}
@@ -333,8 +375,7 @@ def ingest_batch(
 
     seen = {os.path.basename(unquote(r["_path"])) for r in flags}
     empty_files = [p for p in readable if os.path.basename(p) not in seen]
-    ok_raw = {r["_path"] for r in flags if r["_ok"]}  # reader spelling
-    ok_files = {_canon(p) for p in ok_raw}
+    ok_files = {_canon(r["_path"]) for r in flags if r["_ok"]}
     bad_files = (
         {_canon(r["_path"]) for r in flags if not r["_ok"]}
         | oversized
@@ -349,28 +390,6 @@ def ingest_batch(
     }
 
     if ok_files:
-        from pyspark.sql import Observation
-
-        # the reader's own (encoded) spelling, NOT the canonical paths —
-        # _path inside the frame is input_file_name()'s form
-        good = meta.filter(F.col("_path").isin(*ok_raw))
-        points = decode_grids(good)
-        # Observation: row count + distinct partition tuples (bounded by
-        # |files| — one hour partition per file) collected DURING the write
-        # pass, so the batch is decoded exactly once
-        obs = Observation("ingest_batch")
-        points = points.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.collect_set(F.struct(*PARTITION_COLS)).alias("parts"),
-        )
-        write_points(points, ws.data_dir, cluster_spatial=cluster_spatial)
-        metrics = obs.get
-        res.rows_written = metrics["rows"]
-        res.partitions = sorted(
-            (p.asDict() for p in metrics["parts"]),
-            key=lambda d: tuple(d[c] for c in PARTITION_COLS),
-        )
         if fq_table is not None:
             register_batch_partitions(spark, fq_table, ws, res.partitions)
         if stats_manifest_cols:
@@ -596,7 +615,7 @@ def archived_glob_for_partition(
     seconds at 1000 files, unusable at millions; a path-level glob turns
     every match into its own listing root, ~6x slower). Without any prune,
     rebuilding one hour read the entire ``done/`` archive's wholetext bytes
-    just to discard them post-decode (VERDICT r3).
+    just to discard them post-decode.
 
     Returns the name pattern (``{a,b}`` alternation covers the two UTC
     candidates of the DST fall-back hour), or None when the hour cannot
@@ -632,8 +651,6 @@ def reprocess_partition(
     (:func:`archived_glob_for_partition`); the row-level partition filter
     makes the glob superset exact and guards the write against any parse
     divergence."""
-    from pyspark.sql import Observation
-
     pat = archived_glob_for_partition(spark, ws.done_dir, year, month, day, hour)
     if pat is None:
         return 0
@@ -768,10 +785,10 @@ def ingest_stream(
         # stream cannot quarantine (the source tracks its inputs), so the
         # rows publish there — quarantine-in-place, visible to direct
         # parquet reads — but they CANNOT be catalog-registered in an
-        # int-typed partition scheme. Before r14 the int() parse below
-        # aborted the sink on them; foreachBatch then replayed the same
-        # batch forever: one bad filename poison-pilled the whole stream
-        # (weird-grid net).
+        # int-typed partition scheme. An int() parse of them would abort
+        # the sink, and foreachBatch would then replay the same batch
+        # forever: one bad filename would poison-pill the whole stream
+        # (found by the weird-grid net).
         part_dicts = [
             dict(zip(PARTITION_COLS, (int(v) for v in p)))
             for p in parts

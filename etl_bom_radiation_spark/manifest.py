@@ -49,6 +49,7 @@ absent from pruned reads until the next refresh picks it up.
 
 from __future__ import annotations
 
+import json
 import os
 from urllib.parse import unquote
 
@@ -71,16 +72,41 @@ def _file_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.groupBy(F.input_file_name().alias("file")).agg(*aggs)
 
 
+#: footer key under which Spark's parquet writer records the row schema
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(spark: SparkSession, part: str) -> StructType:
+    """The schema Spark's writer recorded in the footer of the parquet file
+    *part*, read on the driver: one footer, no Spark job."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    src = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jvm.org.apache.hadoop.fs.Path(part), conf
+    )
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(src)
+    try:
+        meta = reader.getFooter().getFileMetaData().getKeyValueMetaData()
+        js = meta.get(_SPARK_ROW_METADATA)
+    finally:
+        reader.close()
+    return StructType.fromJson(json.loads(js))
+
+
 def _read_manifest(
     spark: SparkSession, data_dir: str, schema: StructType | None = None
 ) -> DataFrame | None:
     """The manifest of *data_dir* read from its listed part files, or None
-    if it has none; a known *schema* skips the schema-inference job."""
+    if it has none. Without a known *schema* the one recorded in the first
+    part's footer is used: every part is written by this module's Spark
+    writes with the same columns, and reading one footer on the driver
+    costs a fraction of Spark's schema-inference job."""
     parts = _dir_files(spark, os.path.join(data_dir, MANIFEST_DIR))
     if not parts:
         return None
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*parts)
+    if schema is None:
+        schema = _footer_schema(spark, parts[0])
+    return spark.read.schema(schema).parquet(*parts)
 
 
 def _swap_in(spark: SparkSession, tmp: str, out: str) -> None:

@@ -18,8 +18,10 @@ Design notes for scale (local[32] here; 1000-executor cluster in prod):
 from __future__ import annotations
 
 import os
+import weakref
+from typing import Callable, Hashable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -50,3 +52,48 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: live JVM gateway -> {key: JVM Column or Seq[Column]}. Weakly keyed by the
+#: gateway object itself, never by an id(): a relaunched JVM gets a new
+#: gateway and so an empty cache, never another JVM's object ids.
+_JVM_COLUMNS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _per_jvm(spark: SparkSession, key: Hashable, make: Callable[[], object]):
+    cache = _JVM_COLUMNS.setdefault(spark.sparkContext._gateway, {})
+    if key not in cache:
+        cache[key] = make()
+    return cache[key]
+
+
+def select_cached(
+    df: DataFrame, key: Hashable, build: Callable[[], list[Column | str]]
+) -> DataFrame:
+    """``df.select(*build())``, with the column list built once per live JVM
+    and kept there as a ``Seq[Column]``.
+
+    Building a Column costs several py4j round trips per function call, so
+    a hot path that rebuilds a static projection on every call pays for
+    the construction, not for Catalyst. Only *static* expressions belong
+    here: *key* must name every parameter that changes what *build*
+    returns, and a column carrying a per-call value (a literal path list,
+    a partition value) stays per call. A Column is unresolved, so one
+    instance serves every plan and session on its JVM."""
+    from pyspark.sql.classic.column import _to_java_column, _to_seq
+
+    spark = df.sparkSession
+    seq = _per_jvm(
+        spark,
+        ("select", key),
+        lambda: _to_seq(spark.sparkContext, build(), _to_java_column),
+    )
+    return DataFrame(df._jdf.select(seq), spark)
+
+
+def filter_cached(df: DataFrame, key: Hashable, build: Callable[[], Column]) -> DataFrame:
+    """``df.filter(build())`` with the condition built once per live JVM;
+    the rules of :func:`select_cached` apply."""
+    spark = df.sparkSession
+    cond = _per_jvm(spark, ("filter", key), lambda: build()._jc)
+    return DataFrame(df._jdf.filter(cond), spark)

@@ -169,10 +169,12 @@ def test_ingest_quarantine_routes_weird_corpus(spark, tmp_path, weird_dir, binar
     reasons = {os.path.basename(p): r for p, r in res.quarantine_reasons.items()}
 
     # header casualties: truncated / garbage / float-typed int headers /
-    # empty and NUL-only files / corrupt header byte
+    # empty and NUL-only files / corrupt header byte / Java-literal header
+    # doubles that decode's pinned grammar turns into NULL coordinates
     for f in ("WG12_GLOBAL_20180401_1200.txt", "WG15_GLOBAL_20180401_1500.txt",
               "WG19_GLOBAL_20180401_1900.txt", "WG11_GLOBAL_20180401_1100.txt",
-              "WB02_GLOBAL_20180401_0200.txt", "WB04_GLOBAL_20180401_0400.txt"):
+              "WB02_GLOBAL_20180401_0200.txt", "WB04_GLOBAL_20180401_0400.txt",
+              "WG47_GLOBAL_20180401_0108.txt", "WG48_GLOBAL_20180401_0109.txt"):
         assert reasons.get(f) == "bad_header", (f, reasons.get(f))
     # a ZERO-length file produces no row from the wholetext reader at all;
     # before r14 it was never classified and sat in in/ forever, re-listed
@@ -188,6 +190,13 @@ def test_ingest_quarantine_routes_weird_corpus(spark, tmp_path, weird_dir, binar
               "WG06_GLOBAL_20180401_0600.txt", "WG07_GLOBAL_20180401_0700.txt"):
         assert f in ok, f
     assert res.rows_written > 100
+    # a file that passes the classification decodes to real coordinates
+    from pyspark.sql import functions as F
+
+    written = spark.read.parquet(ws.data_dir)
+    assert written.filter(
+        F.col("Longitude").isNull() | F.col("Latitude").isNull()
+    ).count() == 0
     # every staged file left in/: moved to done/ or quarantine/
     assert os.listdir(indir) == []
 

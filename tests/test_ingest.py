@@ -10,7 +10,9 @@ stream restarts.
 
 from __future__ import annotations
 
+import gc
 import os
+import re
 import shutil
 
 import pytest
@@ -28,6 +30,7 @@ GOOD_FILES = [
 
 BAD_GRID = "IDCJ0000_GLOBAL_20180401_0200.txt"  # malformed header
 BAD_NAME = "notagridfile.txt"  # filename grammar miss
+EMPTY_GRID = "IDCJ0000_GLOBAL_20180401_0300.txt"  # zero bytes
 
 
 def _stage_inputs(ws_dir: str, include_bad: bool = True) -> None:
@@ -990,3 +993,107 @@ def test_ingest_stream_fuzz_filenames_no_abort_exactly_once(spark, ws, tmp_path)
     q.awaitTermination(300)
     assert spark.table(table).count() == want_all + 2
     assert spark.read.parquet(ws.data_dir).count() == want_all + 2
+
+
+def test_ingest_batch_reads_each_file_once(spark, ws):
+    """A warm arrival is one pass over its files: the classification rides
+    in the write job and its per-file flags come back through an
+    Observation, so ingest_batch runs at most 2 Spark jobs and its executed
+    plans hold exactly one text scan."""
+    from tests.conftest import jobs_run
+
+    _stage_inputs(ws.base)
+    ingest_batch(spark, ws)  # warm: the first write into this sink
+    _stage_inputs(ws.base)  # the same arrival re-delivered
+    res, jobs, plans = jobs_run(spark, lambda: ingest_batch(spark, ws))
+    assert res.rows_written == 18 and len(res.files_quarantined) == 2
+    assert len(jobs) <= 2, len(jobs)
+    # one "(<id>) Scan text" operator detail per text scan in the plans
+    scans = [s for p in plans for s in re.findall(r"^\(\d+\) Scan text", p, re.M)]
+    assert len(scans) == 1, plans
+
+
+def test_arrival_plan_build_sends_few_py4j_commands(spark, monkeypatch):
+    """A warm build of read -> filename metadata -> classification ->
+    decode reuses the column lists cached on the JVM, so it sends a few
+    dozen py4j gateway commands; rebuilding every Column per call sent
+    about 1,600."""
+    from etl_bom_radiation_spark.grid.decode import (
+        decode_body,
+        decode_header,
+        read_grid_files,
+        with_filename_metadata,
+    )
+    from etl_bom_radiation_spark.ingest import _classify_files
+
+    paths = [os.path.join(FIXTURES, f) for f in GOOD_FILES]
+
+    def build():
+        files = with_filename_metadata(read_grid_files(spark, paths))
+        return decode_body(_classify_files(decode_header(files)))
+
+    build()  # warm: the first build on this JVM fills the cache
+    client = spark._jvm._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(*a, **kw):
+        sent.append(1)
+        return send(*a, **kw)
+
+    # collect earlier tests' garbage first: py4j releases each collected
+    # JVM object with a command of its own, which is not construction
+    gc.collect()
+    gc.disable()
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        points = build()
+    finally:
+        monkeypatch.undo()
+        gc.enable()
+    assert len(sent) <= 60, len(sent)
+    assert points.count() == 18
+
+
+def test_ingest_batch_all_malformed_arrival(spark, ws):
+    """An arrival of only malformed files still runs the fused write job,
+    which writes nothing: every file is quarantined with its reason, no
+    data file or partition dir appears, nothing is registered and no
+    manifest is written. The next good arrival then ingests normally."""
+    from etl_bom_radiation_spark import manifest as mf
+
+    cols = ["Longitude", "Latitude"]
+    db = W.create_database(spark, "bom-bad-only")
+    table = W.register_table(spark, db, "radiation", ws)
+    indir = ws.prefix("in")
+    _stage_inputs(ws.base)
+    for f in GOOD_FILES:
+        os.remove(os.path.join(indir, f))
+    open(os.path.join(indir, EMPTY_GRID), "w").close()
+
+    res = ingest_batch(spark, ws, fq_table=table, stats_manifest_cols=cols)
+    reasons = {os.path.basename(p): r for p, r in res.quarantine_reasons.items()}
+    assert reasons == {
+        BAD_GRID: "bad_header",
+        BAD_NAME: "bad_filename",
+        EMPTY_GRID: "empty",
+    }
+    assert res.files_ok == [] and res.rows_written == 0 and res.partitions == []
+    assert sorted(os.listdir(ws.prefix("quarantine"))) == sorted(reasons)
+    written = [
+        os.path.join(d, f)
+        for d, subdirs, files in os.walk(ws.data_dir)
+        for f in files + subdirs
+        if not f.startswith(("_", "."))
+    ]
+    assert written == []
+    assert not os.path.exists(os.path.join(ws.data_dir, mf.MANIFEST_DIR))
+    assert not W.msck_completed(spark, ws, table)
+    assert spark.sql(f"SHOW PARTITIONS {table}").collect() == []
+
+    _stage_inputs(ws.base, include_bad=False)
+    res2 = ingest_batch(spark, ws, fq_table=table, stats_manifest_cols=cols)
+    assert res2.rows_written == 18 and res2.files_quarantined == []
+    assert spark.table(table).count() == 18
+    assert len(spark.sql(f"SHOW PARTITIONS {table}").collect()) == 2
+    man = spark.read.parquet(os.path.join(ws.data_dir, mf.MANIFEST_DIR))
+    assert man.agg({"row_count": "sum"}).collect()[0][0] == 18

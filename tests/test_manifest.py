@@ -241,10 +241,10 @@ def _rows(df) -> set:
 
 
 def test_refresh_append_writes_one_delta_part(spark, tmp_path):
-    """An append refresh costs the batch: at most 4 Spark jobs (no schema
-    inference over the data, no manifest re-read), one new part file, and
-    the existing part files left byte-identical; the rows still equal a
-    full rebuild."""
+    """An append refresh costs the batch: at most 3 Spark jobs (no schema
+    inference over the data or the manifest, no manifest re-read), one new
+    part file, and the existing part files left byte-identical; the rows
+    still equal a full rebuild."""
     d = str(tmp_path / "delta")
     _append(spark, d, 0, 1000, files=2)
     mf.build_manifest(spark, d, ["lon", "lat"])
@@ -253,7 +253,7 @@ def test_refresh_append_writes_one_delta_part(spark, tmp_path):
 
     _append(spark, d, 1000, 1500)
     man, jobs = _jobs_run(spark, lambda: mf.refresh_manifest(spark, d, ["lon", "lat"]))
-    assert jobs <= 4, jobs
+    assert jobs <= 3, jobs
     got = _rows(man)
     after = _parts(d)
     assert len(after) == 2
@@ -264,6 +264,21 @@ def test_refresh_append_writes_one_delta_part(spark, tmp_path):
     parts = _parts(d)
     mf.refresh_manifest(spark, d, ["lon", "lat"])
     assert _parts(d) == parts
+
+
+def test_manifest_opens_with_its_footer_schema(spark, tmp_path):
+    """Without a caller's schema the manifest is opened with the schema its
+    Spark writer recorded in the first part's footer: no inference job,
+    and the same StructType that inference gives."""
+    from etl_bom_radiation_spark.workspace import _dir_files
+
+    d = str(tmp_path / "footer")
+    _append(spark, d, 0, 100)
+    mf.build_manifest(spark, d, ["lon", "lat"])
+    parts = _dir_files(spark, os.path.join(d, mf.MANIFEST_DIR))
+    man, jobs = _jobs_run(spark, lambda: mf._read_manifest(spark, d))
+    assert jobs == 0
+    assert man.schema == spark.read.parquet(*parts).schema
 
 
 def test_refresh_retire_folds_to_one_part(spark, tmp_path):
