@@ -68,22 +68,31 @@ file-prunes to the generations that hold candidates.  Not implemented:
 at bench scale both tables are sub-MB and the win is unmeasurable, so
 the cut would be speculative code.
 
-Crash consistency: an update appends data files FIRST and commits
-the meta high-water mark LAST.  The commit ADDS a numbered meta
-version (``_meta/<n>.json``, written under a dot-temp name and renamed
-onto the fresh name; no file is ever replaced), so a committed meta
-exists at every instant and a crash leaves either the new version or
-only an unlisted temp — readers take the highest committed version and
-there is nothing to repair (the commit-log idea of Delta Lake, VLDB
-2020, reduced to one small file per commit, two kept).  Every read
-filters to the committed snapshot (ids at or below the mark; parquet
-min/max stats skip uncommitted append files outright, so the filter is
-free on a healthy index), and ``vacuum_lsh_index`` deletes the
-leftover FILES (orphan rows never share a file with committed ones,
-so the repair rewrites nothing) so a crashed batch can be retried.
-``compact_lsh_index`` periodically folds the accumulated per-update
-generation files back into a few id-sorted files per table — layout
-only, content and probe results identical.
+Layout and commit: every write to the index — the build, each fold,
+each compaction — puts its rows in a fresh GENERATION directory,
+``bands.parquet/gen=<label>/`` and ``hsets.parquet/gen=<label>/`` (one
+label for both tables), and then commits by ADDING the next numbered
+meta version ``_meta/<n>.json`` (written under a dot-temp name and
+renamed onto the fresh name; no file is ever replaced).  The version
+names every live generation with its doc count, beside the high-water
+mark and the admission epoch.  A label is ``<n>-<uuid8>`` with ``n`` the
+version that commits it, so a retry never writes into a directory a
+crashed attempt left.  Readers open only the generations the highest
+committed version names: rows a crashed call wrote are never read, and
+a crashed fold is retried as it is (the commit-log idea of Delta Lake,
+VLDB 2020, reduced to one small file per commit, two kept).  No
+directory is deleted or renamed while the latest version names it.
+
+Compaction (:func:`compact_lsh_index`) is size-tiered merging of
+immutable runs (O'Neil et al., "The Log-Structured Merge-Tree", Acta
+Informatica 1996): once the live generations outnumber
+``N.bit_length()`` (N = the docs the meta names), the newest small
+generations are rewritten into one id-sorted generation, and a version
+naming it in their place commits — layout only, content and probe
+results identical.  Equal-sized folds then rewrite each doc O(log N)
+times and keep O(log N) generations live (:func:`_absorb_from`).
+:func:`vacuum_lsh_index` deletes the generation directories the latest
+version does not name.
 
 Exactly-once streaming admission: ``admit_batch(..., epoch=N)`` is an
 idempotent ``foreachBatch`` sink — fold commits record the epoch
@@ -120,9 +129,9 @@ the ``_IndexView`` base (``persist``, recomputable).  A
 ``localCheckpoint`` block is NOT recomputable: on a cluster, a job that
 reads one after its executor is lost fails (in ``local[*]`` the
 executor is the driver; moot).  No pin is the durability story — the
-crash/retry protocol re-reads the PERSISTED parquet tables plus the
-committed meta, so a failed call is retried from storage (vacuum +
-replay), never from cached blocks.
+crash/retry protocol re-reads the PERSISTED generations the committed
+meta names, so a failed call is retried from storage, never from
+cached blocks.
 
 Reference parity: no reference analog (the reference's pipeline has no
 dedup at all); this is the LLM-training-corpus maintenance workflow
@@ -132,6 +141,7 @@ SURVEY §2.H's near-dup family exists to serve.
 from __future__ import annotations
 
 import json
+from uuid import uuid4
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -158,14 +168,6 @@ INDEX_SCHEMAS = {
     "bands": "doc_id BIGINT, band INT, bk STRING",
     "hsets": "doc_id BIGINT, hs ARRAY<BIGINT>",
 }
-
-#: Index dirs this DRIVER PROCESS has vacuumed and not since seen a fold
-#: fail on.  Orphan rows can only be created by a fold that died
-#: mid-append, so :func:`admit_batch`'s epoch-mode repair pass runs once
-#: per process per index instead of per micro-batch; a failed fold
-#: evicts its dir (``_fold_frames``) and a process crash loses the cache
-#: entirely — either way the next epoch-bearing call re-vacuums.
-_KNOWN_CLEAN: set[str] = set()
 
 
 def _local(df: DataFrame) -> DataFrame:
@@ -223,38 +225,46 @@ def _batch_frames(batch: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
 
 
 def _write_meta(
-    spark: SparkSession, index_dir: str, max_doc_id: int, epoch=None
+    spark: SparkSession,
+    index_dir: str,
+    n: int,
+    max_doc_id: int,
+    gens: list,
+    epoch=None,
 ) -> None:
-    """Publish the high-water mark — the COMMIT of an update (see
-    ``update_lsh_index``) — as the next numbered version
-    ``_meta/<latest + 1>.json``: written complete under a dot-temp name,
-    then renamed onto that fresh name (a rename that returns false raises
-    and the previous version stays authoritative).  No file is ever
-    replaced, so there is no moment without a committed meta and nothing
-    for a reader to repair; a crash before the rename leaves only a temp
-    that no reader lists.  Versions older than the new one's predecessor
-    are then deleted, so at most two remain.  ``epoch`` is the
-    admission-transaction id :func:`admit_batch` uses for replay
-    detection — recorded in the SAME file as the mark, so a commit and
-    its epoch are indivisible."""
+    """Commit version ``n`` of the index meta — the COMMIT of every write
+    to the index — as ``_meta/<n>.json``: written complete under a
+    dot-temp name, then renamed onto that fresh name (a rename that
+    returns false raises, and the previous version stays authoritative).
+    A writer passes ``n`` = the version it read + 1, never a number
+    listed again at commit time.  No file is ever replaced, so there is
+    no moment without a committed meta and nothing for a reader to
+    repair; a crash before the rename leaves only a temp that no reader
+    lists.  Versions older than ``n - 1`` are then deleted, so at most
+    two remain.
+
+    The payload is the high-water mark, ``epoch`` (the admission
+    transaction id :func:`admit_batch` uses for replay detection, in the
+    SAME file as the mark, so a commit and its epoch are indivisible) and
+    ``gens``: ``[label, docs]`` of every live generation, oldest first."""
     fs, meta_dir, jvm = _fs(spark, f"{index_dir}/{_META_DIR}")
-    versions = _versions(fs, jvm, meta_dir)
-    n = max(versions, default=-1) + 1
-    payload = json.dumps({"max_doc_id": max_doc_id, "epoch": epoch})
+    payload = json.dumps({"max_doc_id": max_doc_id, "epoch": epoch, "gens": gens})
     _commit_version(fs, jvm, meta_dir, n, payload, "LSH index meta")
-    for v, old in versions.items():
+    for v, old in _versions(fs, jvm, meta_dir).items():
         if v < n - 1:
             fs.delete(old, False)  # best-effort: superseded; the next commit retries
 
 
 def _read_meta(spark: SparkSession, index_dir: str) -> dict:
     """The committed index meta, read from the highest version under
-    ``_meta/``: ``max_doc_id`` (the high-water mark) and ``epoch`` (last
-    admission-transaction id, None when the commit recorded none).  If
-    that version vanished before it was opened — only possible when two
-    commits landed during this read, the second deleting it — the listing
-    is taken again.  Raises ``FileNotFoundError`` when the index holds no
-    committed version."""
+    ``_meta/``: ``version`` (its number), ``max_doc_id`` (the high-water
+    mark), ``epoch`` (last admission-transaction id, None when the commit
+    recorded none) and ``gens`` (the live generations).  If that version
+    vanished before it was opened — only possible when two commits landed
+    during this read, the second deleting it — the listing is taken
+    again.  Raises ``FileNotFoundError`` when the index holds no
+    committed version, and ``ValueError`` when that version predates the
+    generation layout."""
     fs, meta_dir, jvm = _fs(spark, f"{index_dir}/{_META_DIR}")
     latest = _read_latest(fs, jvm, meta_dir)
     if latest is None:
@@ -262,60 +272,62 @@ def _read_meta(spark: SparkSession, index_dir: str) -> dict:
             f"no committed LSH index meta under {index_dir}/{_META_DIR}"
         )
     meta = json.loads(latest[1])
+    if "gens" not in meta:
+        raise ValueError(
+            f"LSH index {index_dir} has a flat layout (its meta names no "
+            "generations): rebuild it, or follow the UPGRADE note on the "
+            "generation layout in CHANGES.md"
+        )
+    meta["version"] = latest[0]
     meta["max_doc_id"] = int(meta["max_doc_id"])
     return meta
 
 
-def _part_file_count(fs, path) -> int:
-    """Number of ``part-*`` data files under a table dir (Hadoop FS) —
-    the one counting convention, shared by :func:`compact_lsh_index`'s
-    threshold check and d04's layout fences (queries/lsh_lifecycle)."""
-    return sum(
-        1
-        for f in fs.listStatus(path)
-        if f.getPath().getName().startswith("part-")
-    )
+def _new_label(n: int) -> str:
+    """A fresh generation label for a write that commits version ``n``."""
+    return f"{n:020d}-{uuid4().hex[:8]}"
 
 
-def _table(spark: SparkSession, index_dir: str, name: str) -> DataFrame:
-    """An index table read with its declared schema: opening it lists the
-    files and reads no footer."""
+def _gen_dir(index_dir: str, name: str, label: str) -> str:
+    return f"{index_dir}/{name}.parquet/gen={label}"
+
+
+def _committed(
+    spark: SparkSession, index_dir: str, name: str, gens: list
+) -> DataFrame:
+    """The rows of index table ``name`` in the generations ``gens`` (the
+    ``[label, docs]`` pairs of a committed meta, or a subset of them),
+    read with the declared schema: opening them lists those directories
+    only and reads no footer.  Generations no committed version names —
+    a crashed write's — are never listed.  The leaf directories are
+    named, not the table root, so no ``gen`` column appears."""
     return spark.read.schema(INDEX_SCHEMAS[name]).parquet(
-        f"{index_dir}/{name}.parquet"
+        *(_gen_dir(index_dir, name, label) for label, _ in gens)
     )
-
-
-def _committed(spark: SparkSession, index_dir: str, name: str, hw: int) -> DataFrame:
-    """The COMMITTED snapshot of an index table: rows at or below the
-    meta high-water mark.  ``update_lsh_index`` appends data files FIRST
-    and publishes the new high-water LAST, so rows above it are exactly
-    the leftovers of a crashed update — this filter makes every read
-    crash-consistent with zero rewrite, and since an append's files
-    contain ONLY ids above the pre-crash mark, parquet min/max stats
-    skip those files entirely (the filter costs no IO on a healthy
-    index either)."""
-    return _table(spark, index_dir, name).filter(F.col("doc_id") <= hw)
 
 
 def build_lsh_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> None:
     """Sketch ``docs`` (doc_id, text, ...) and persist the two index
     tables an arrival probe reads — ``bands.parquet`` (capped bucket
-    membership) and ``hsets.parquet`` (hashed shingle sets) — plus the
-    committed meta high-water mark ``update_lsh_index`` checks its
-    append-only id precondition against.  The written schemas are
-    :data:`INDEX_SCHEMAS`."""
+    membership) and ``hsets.parquet`` (hashed shingle sets) — as one
+    generation, then commit the meta version that names it with the
+    high-water mark ``update_lsh_index`` checks its append-only id
+    precondition against.  The written schemas are :data:`INDEX_SCHEMAS`.
+    Built into an existing index dir, the new version names only the new
+    generation; the next :func:`vacuum_lsh_index` deletes the old ones."""
+    fs, meta_dir, jvm = _fs(spark, f"{index_dir}/{_META_DIR}")
+    n = max(_versions(fs, jvm, meta_dir), default=-1) + 1
+    label = _new_label(n)
     # pinned: the sets feed the sketch, their own write and the mark
     hsets = _hashed_sets(docs).localCheckpoint(eager=False)
-    gate_buckets(_band_rows(hsets)).write.mode("overwrite").parquet(
-        f"{index_dir}/bands.parquet"
-    )
-    hsets.write.mode("overwrite").parquet(f"{index_dir}/hsets.parquet")
-    # high-water mark from the ALREADY-MATERIALIZED hset frame — one row
-    # per input doc (hashed_sets neither filters nor explodes), so
-    # max(doc_id) is identical to an agg over ``docs``, without a second
-    # scan of the corpus
-    mx = hsets.agg(F.max("doc_id")).first()[0]
-    _write_meta(spark, index_dir, -(2**62) if mx is None else int(mx))
+    gate_buckets(_band_rows(hsets)).write.parquet(_gen_dir(index_dir, "bands", label))
+    hsets.write.parquet(_gen_dir(index_dir, "hsets", label))
+    # mark and doc count from the ALREADY-MATERIALIZED hset frame — one row
+    # per input doc (hashed_sets neither filters nor explodes), so they
+    # equal an agg over ``docs``, without a second scan of the corpus
+    mx, docs_n = hsets.agg(F.max("doc_id"), F.count("*")).first()
+    mark = -(2**62) if mx is None else int(mx)
+    _write_meta(spark, index_dir, n, mark, [[label, docs_n]])
 
 
 class _IndexView:
@@ -367,9 +379,9 @@ class _IndexView:
     default) and released at call end."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        hw = _read_meta(spark, index_dir)["max_doc_id"]
-        self._bands = _committed(spark, index_dir, "bands", hw).persist()
-        self._hsets = _committed(spark, index_dir, "hsets", hw).persist()
+        gens = _read_meta(spark, index_dir)["gens"]
+        self._bands = _committed(spark, index_dir, "bands", gens).persist()
+        self._hsets = _committed(spark, index_dir, "hsets", gens).persist()
         self._delta_bands: list[DataFrame] = []
         self._delta_hsets: list[DataFrame] = []
 
@@ -410,9 +422,9 @@ def _index_frames(
     if idx_view is not None:
         bands, hsets = idx_view.current()
     else:
-        hw = _read_meta(spark, index_dir)["max_doc_id"]
-        bands = _committed(spark, index_dir, "bands", hw)
-        hsets = _committed(spark, index_dir, "hsets", hw)
+        gens = _read_meta(spark, index_dir)["gens"]
+        bands = _committed(spark, index_dir, "bands", gens)
+        hsets = _committed(spark, index_dir, "hsets", gens)
     if as_of_id is not None:
         bands = bands.filter(F.col("doc_id") < as_of_id)
         hsets = hsets.filter(F.col("doc_id") < as_of_id)
@@ -454,9 +466,9 @@ def probe_lsh_index(
     drop its index-side band rows and hset before the union, so the
     verify join cannot fan out across generations.
 
-    Reads are the COMMITTED snapshot (ids at or below the meta
-    high-water mark): leftovers of a crashed ``update_lsh_index`` are
-    invisible until :func:`vacuum_lsh_index` repairs them."""
+    Reads are the COMMITTED snapshot (the generations the latest meta
+    version names): a crashed ``update_lsh_index``'s generation is never
+    opened."""
     hsets, _, gated = _batch_frames(batch)
     ids = F.broadcast(hsets.select("doc_id"))
     idx_bands, idx_hsets = (
@@ -493,12 +505,12 @@ def update_lsh_index(
     persisted row — a rewrite, which is the rebuild this API exists to
     avoid.
 
-    Crash protocol: data files append FIRST, the meta high-water mark
-    publishes LAST — the mark IS the commit.  A crash anywhere in
-    between leaves rows above the mark that every read filters out
-    (``_committed``); run :func:`vacuum_lsh_index` before RETRYING the
-    crashed batch, or the retry's append would double the uncommitted
-    rows and the commit would expose both copies."""
+    Crash protocol: the rows land FIRST, in a new generation, and the
+    meta version that names it (with the new mark) commits LAST — that
+    version IS the commit.  A crash anywhere in between leaves a
+    generation no version names, which no read opens: retry the crashed
+    batch as it is (its retry writes a generation of its own), and
+    :func:`vacuum_lsh_index` deletes the leftover whenever convenient."""
     hsets, bands, _ = _batch_frames(kept_batch)
     return _fold_frames(spark, index_dir, hsets.select("doc_id"), bands, hsets)
 
@@ -521,7 +533,8 @@ def _fold_frames(
     ids = [r[0] for r in kept_ids.collect()]
     if not ids:
         return 0
-    high_water = _read_meta(spark, index_dir)["max_doc_id"]
+    meta = _read_meta(spark, index_dir)
+    high_water = meta["max_doc_id"]
     if min(ids) <= high_water:
         raise ValueError(
             f"update_lsh_index requires append-only doc_ids: batch min "
@@ -531,16 +544,15 @@ def _fold_frames(
     # the gate over each touched bucket's committed members plus the
     # keepers: append-only ids rank every committed member first, so a
     # keeper's rank is the bucket's occupancy plus its rank among the
-    # keepers — the rebuild's cap test, on touched buckets only.
-    # Committed snapshot: a crashed update's leftovers must not count
-    # toward the cap.  The semi-join's build side is the local keeper
-    # rows as they are (a semi-join needs no unique keys); with no
-    # shuffle on either join side, Catalyst injects no runtime bloom
-    # filter that would scan the index bands to build it.
+    # keepers — the rebuild's cap test, on touched buckets only.  The
+    # semi-join's build side is the local keeper rows as they are (a
+    # semi-join needs no unique keys); with no shuffle on either join
+    # side, Catalyst injects no runtime bloom filter that would scan the
+    # index bands to build it.
     committed_bands = (
         idx_view.current()[0]
         if idx_view is not None
-        else _committed(spark, index_dir, "bands", high_water)
+        else _committed(spark, index_dir, "bands", meta["gens"])
     )
     occupants = committed_bands.join(
         F.broadcast(new_bands.select("band", "bk")), ["band", "bk"], "left_semi"
@@ -553,22 +565,17 @@ def _fold_frames(
     if idx_view is not None:
         # later sub-batch cycles read this delta: hold it on the driver
         admitted = _local(admitted)
-    try:
-        # one file per table per fold: the rows are batch-sized
-        for rows, name in ((admitted, "bands"), (new_hsets, "hsets")):
-            rows.coalesce(1).write.mode("append").parquet(
-                f"{index_dir}/{name}.parquet"
-            )
-        _write_meta(spark, index_dir, max(ids), epoch)  # <- the commit
-    except BaseException:
-        # the fold may have appended rows it never committed — the next
-        # epoch-bearing admit_batch must re-vacuum, not trust the cache
-        _KNOWN_CLEAN.discard(index_dir)
-        raise
+    n = meta["version"] + 1
+    label = _new_label(n)
+    # one file per table per fold: the rows are batch-sized
+    for rows, name in ((admitted, "bands"), (new_hsets, "hsets")):
+        rows.coalesce(1).write.parquet(_gen_dir(index_dir, name, label))
+    gens = meta["gens"] + [[label, len(ids)]]
+    _write_meta(spark, index_dir, n, max(ids), gens, epoch)  # <- the commit
     if idx_view is not None:
         # registered only AFTER the commit: a crashed fold's rows must
-        # stay invisible to later cycles, exactly as _committed's
-        # high-water filter would keep them
+        # stay invisible to later cycles, as its unnamed generation is
+        # to every read
         idx_view.add_delta(admitted, new_hsets)
     return len(ids)
 
@@ -688,19 +695,12 @@ def admit_batch(
     precondition).  Every fold commit records the epoch atomically
     with the high-water mark, so on entry:
 
-    * epoch given at all -> ``vacuum_lsh_index`` first, making a fold
-      that crashed MID-APPEND (orphan rows, no commit) retryable
-      without double-appending.  Paid ONCE per driver process per
-      index, not per micro-batch: orphans only appear when a fold
-      dies, so after one repair the dir is cached clean
-      (``_KNOWN_CLEAN``) until a fold fails in-process (evicts the
-      entry) or the process itself dies (loses the cache — the
-      restarted driver's first batch re-vacuums).  Without the cache
-      every arrival would pay the repair's file listing + stats-pruned
-      footer scan over the WHOLE index — a real per-arrival IO floor
-      at the module's 100 TB posture.  Single-writer assumption as
-      everywhere in this module: another process folding into the same
-      dir concurrently is out of contract;
+    * stored epoch != this epoch -> the normal path.  A fold that
+      crashed MID-WRITE (a generation written, no version naming it)
+      left nothing any read opens, so its redelivery needs no repair
+      first.  Single-writer assumption as everywhere in this module:
+      another process folding into the same dir concurrently is out of
+      contract;
     * stored epoch == this epoch -> REPLAY: some sub-batches may have
       committed before the crash.  Each sub-batch's probe reconstructs
       the index view its ORIGINAL run saw — ``as_of_id = min(sub-batch
@@ -724,10 +724,7 @@ def admit_batch(
     micro-batch commit) before deploying a splitter change, or complete
     a dirty checkpoint's replay on the old build first."""
     if _replay is None and epoch is not None:
-        _replay = _read_meta(spark, index_dir).get("epoch") == epoch
-        if index_dir not in _KNOWN_CLEAN:
-            vacuum_lsh_index(spark, index_dir)
-            _KNOWN_CLEAN.add(index_dir)
+        _replay = _read_meta(spark, index_dir)["epoch"] == epoch
     if _stats is None and max_docs is not None:
         # the split decision must precede any collect of the batch
         row = batch.agg(
@@ -861,204 +858,95 @@ def _admit_leaf(
     return verdicts
 
 
-def compact_lsh_index(
-    spark: SparkSession, index_dir: str, files_per_table: int = 8
-) -> dict[str, int]:
-    """Fold the per-update append generations back into ``files_per_table``
-    id-sorted files per index table — the ``compact_partitions``
-    discipline applied to the LSH index.  Daily folds accumulate one-plus
-    small files each; after years of arrivals every probe pays listing +
-    footer overhead per generation.  Compaction is the deliberate,
-    amortized rewrite (the opposite trade from ``vacuum_lsh_index``'s
-    surgical file deletes): read the COMMITTED snapshot, rewrite it
-    range-partitioned and sorted on doc_id, swap in.  Returns
-    ``{table: files_before}``.
+def _absorb_from(docs: list[int]) -> int | None:
+    """Where a compaction starts, given the doc counts of the live
+    generations, oldest first: it absorbs ``docs[start:]`` into one
+    generation, or nothing when None.
 
-    Invariants preserved:
+    It compacts only when the generations outnumber ``N.bit_length()``
+    (N = ``sum(docs)``), and then starts at the oldest generation holding
+    no more docs than all newer ones together (the newest alone is never
+    a merge).  If every generation held more than all newer ones
+    together, sizes would at least double going back, so there could be
+    at most ``N.bit_length()`` of them: the trigger and the rule agree,
+    and equal-sized folds keep O(log N) generations and rewrite each doc
+    O(log N) times (size-tiered merging, O'Neil et al. 1996)."""
+    if len(docs) <= sum(docs).bit_length():
+        return None
+    newer, start = docs[-1], None
+    for i in range(len(docs) - 2, -1, -1):
+        if docs[i] <= newer:
+            start = i
+        newer += docs[i]
+    return start
 
-    * only committed rows are rewritten, so compacted files hold only
-      ids at or below the high-water mark — a LATER crashed update's
-      orphans still sit in their own files above the mark, keeping the
-      file-exclusivity property ``vacuum_lsh_index`` relies on (any
-      orphans present NOW are dropped, which is vacuum's repair);
-    * the id-sorted layout keeps per-file min/max stats tight, so the
-      committed-snapshot filter and any future candidate-id pushdown
-      stay file-prunable;
-    * the meta is untouched — compaction changes layout, never
-      content (probe results bit-identical, pytest-locked).
 
-    Like ``compact_partitions``, the swap (delete-old, rename-new) wants
-    a read-quiesced window: a reader that listed files before the swap
-    can hit vanished files.  Crash protocol (the d03 repair discipline):
-    the rewrite lands complete in a dot-prefixed temp dir (Spark's
-    ``_SUCCESS`` marker) BEFORE the live dir is deleted, so a crash
-    inside the swap leaves a finished replacement next to the missing
-    table — :func:`_repair_compaction` (run at the head of every
-    compact AND of :func:`vacuum_lsh_index`) renames it in; a crash
-    before the delete leaves the live table authoritative and the temp
-    is discarded.  In between, probes fail loudly on the missing path —
-    never a torn read (content is identical either way: compaction is
-    layout-only)."""
-    import uuid
+def compact_lsh_index(spark: SparkSession, index_dir: str) -> int:
+    """Merge the index's newest small generations into one — the
+    ``compact_partitions`` discipline applied to the LSH index, so a
+    probe's listing and footer reads stay O(log N) generations however
+    many folds arrived.  Returns the number of generations absorbed (0:
+    the layout already met the bound, nothing written).
 
-    _repair_compaction(spark, index_dir)
-    hw = _read_meta(spark, index_dir)["max_doc_id"]
+    :func:`vacuum_lsh_index` runs first.  :func:`_absorb_from` picks the
+    generations from the doc counts the latest meta version records;
+    their rows are rewritten sorted on doc_id (AQE sizes the files) into
+    a new generation, and the next version commits naming it in their
+    place, with the mark and the epoch carried over.  Content never
+    changes (probe results bit-identical, pytest-locked) and no live
+    directory is renamed or deleted: a crash before the commit leaves an
+    unnamed generation, one after it leaves unnamed absorbed ones —
+    vacuum's to delete either way.  After the commit the absorbed
+    directories are deleted at once (best-effort), so a reader that
+    listed them before can fail loudly on a missing file; it never
+    returns different verdicts.  Single writer: do not run it beside a
+    fold into the same index."""
+    vacuum_lsh_index(spark, index_dir)
+    meta = _read_meta(spark, index_dir)
+    gens = meta["gens"]
+    start = _absorb_from([docs for _, docs in gens])
+    if start is None:
+        return 0
+    absorbed = gens[start:]
+    n = meta["version"] + 1
+    label = _new_label(n)
+    for name in INDEX_SCHEMAS:
+        _committed(spark, index_dir, name, absorbed).orderBy("doc_id").write.parquet(
+            _gen_dir(index_dir, name, label)
+        )
+    merged = [label, sum(docs for _, docs in absorbed)]
+    _write_meta(
+        spark, index_dir, n, meta["max_doc_id"], gens[:start] + [merged], meta["epoch"]
+    )
     fs, _, jvm = _fs(spark, index_dir)
-    out = {}
-    for name in ("bands", "hsets"):
-        live = f"{index_dir}/{name}.parquet"
-        live_p = jvm.org.apache.hadoop.fs.Path(live)
-        n_before = _part_file_count(fs, live_p)
-        out[name] = n_before
-        if n_before <= files_per_table:
-            continue
-        tmp = f"{index_dir}/.{name}.compact-{uuid.uuid4().hex[:8]}"
-        try:
-            (
-                _committed(spark, index_dir, name, hw)
-                .repartitionByRange(files_per_table, "doc_id")
-                .sortWithinPartitions("doc_id")
-                .write.parquet(tmp)
-            )
-            # the boolean-return discipline (applied module-wide): a false
-            # delete means the live dir still exists and the rename below
-            # cannot land — the compaction would report success having
-            # changed nothing; a false rename after a successful delete
-            # would leave the table missing until the NEXT entry point's
-            # _repair_compaction, so repair inline.
-            if not fs.delete(live_p, True):
-                # Hadoop delete ALSO returns false when the path does not
-                # exist — a live table that vanished after
-                # _repair_compaction (out-of-band delete) must surface as
-                # the missing-table diagnosis, not a misleading
-                # 'could not delete'.
-                if not fs.exists(live_p):
-                    # no data is at risk: this rewrite's COMPLETE
-                    # _SUCCESS-marked temp is already on disk, and the
-                    # next entry point's _repair_compaction promotes it
-                    # (live-missing + complete temp is exactly the
-                    # crashed-swap state it repairs) — so the remediation
-                    # is a re-run, never a rebuild
-                    raise RuntimeError(
-                        f"compact_lsh_index: live table {live_p} vanished "
-                        "at the swap (deleted out-of-band or by a "
-                        "concurrent compactor); re-run compact_lsh_index — "
-                        "it will resume from this rewrite's completed temp"
-                    )
-                raise RuntimeError(
-                    f"compact_lsh_index: could not delete {live_p} for the swap"
-                )
-            if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), live_p):
-                _repair_compaction(spark, index_dir)
-                raise RuntimeError(
-                    f"compact_lsh_index: could not swap {tmp} into {live_p}; "
-                    "the completed temp was repaired back in"
-                )
-        except BaseException:
-            # a crashed swap needs _repair_compaction before the next
-            # probe — don't let admit_batch's clean-cache skip it
-            _KNOWN_CLEAN.discard(index_dir)
-            raise
-    return out
-
-
-def _repair_compaction(spark: SparkSession, index_dir: str) -> bool:
-    """Complete or discard a crashed :func:`compact_lsh_index` swap;
-    returns whether anything was repaired.  The swap's invariant makes
-    this unambiguous: the rewrite is COMPLETE (``_SUCCESS``-marked temp
-    dir) before the live dir is deleted, so
-
-    * live table present -> it is authoritative; any ``.{name}.compact-*``
-      temp is partial or superseded — discard it (compaction is
-      layout-only, so finishing vs. discarding give identical content;
-      discarding is the conservative, idempotent choice);
-    * live table MISSING -> the crash happened between delete and
-      rename, therefore a complete temp exists — rename it in.  A
-      missing live with no complete temp is real corruption (someone
-      deleted data out-of-band) and raises instead of guessing."""
-    fs, root, jvm = _fs(spark, index_dir)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    repaired = False
-    for name in ("bands", "hsets"):
-        live = HPath(f"{index_dir}/{name}.parquet")
-        tmps = [
-            f.getPath()
-            for f in fs.listStatus(root)
-            if f.getPath().getName().startswith(f".{name}.compact-")
-        ]
-        if fs.exists(live):
-            for t in tmps:
-                fs.delete(t, True)  # best-effort: superseded scratch only
-        else:
-            done = [t for t in tmps if fs.exists(HPath(t, "_SUCCESS"))]
-            if not done:
-                raise RuntimeError(
-                    f"LSH index table {name}.parquet is missing and no "
-                    f"completed compaction temp exists under {index_dir} — "
-                    f"not a crashed swap; restore from a rebuild"
-                )
-            if not fs.rename(done[0], live):
-                raise RuntimeError(
-                    f"_repair_compaction: could not rename completed temp "
-                    f"{done[0]} to {live} — index table still missing"
-                )
-            for t in done[1:]:
-                fs.delete(t, True)  # best-effort: superseded scratch only
-            repaired = True
-    return repaired
+    for name in INDEX_SCHEMAS:
+        for g, _ in absorbed:
+            # best-effort: no version names it now; the next vacuum retries
+            fs.delete(jvm.org.apache.hadoop.fs.Path(_gen_dir(index_dir, name, g)), True)
+    return len(absorbed)
 
 
 def vacuum_lsh_index(spark: SparkSession, index_dir: str) -> int:
-    """Repair a crashed :func:`update_lsh_index`: DELETE the uncommitted
-    append files (rows above the meta high-water mark), so the crashed
-    batch can be retried without double-appending.  Returns the number
-    of uncommitted rows removed (0 = healthy index, nothing touched).
-    Also completes a crashed :func:`compact_lsh_index` swap first
-    (:func:`_repair_compaction`) — vacuum is the index's one repair
-    entry point.
+    """Delete every generation directory, in either table, that the latest
+    meta version does not name: what a write left when it crashed before
+    its commit, or a compaction after its commit but before its deletes.
+    Returns the number of generations removed (0 = nothing to remove).
+    A delete that returns false while the directory still exists raises.
 
-    Orphans are FILE-exclusive by construction: the append-only id
-    guard means every committed file holds only ids at or below some
-    past high-water mark, and a crashed append's files hold only ids
-    ABOVE the current one — no file ever mixes the two.  So the repair
-    is file-granular: scan ``doc_id > hw`` (parquet min/max stats prune
-    the committed files, so only the orphan files are read), collect
-    the offending file paths via ``input_file_name``, and delete
-    exactly those — the committed table bytes are never rewritten,
-    which at the module's posture is the difference between deleting a
-    crashed batch's few files and rewriting a 100 TB table.
-
-    Concurrent readers are already blind to these files' ROWS
-    (``_committed`` filters above the mark); a reader that listed the
-    directory before the delete can still hit a vanished-file error on
-    the orphan itself — retry, or set
-    ``spark.sql.files.ignoreMissingFiles`` during repair windows."""
-    _repair_compaction(spark, index_dir)
-    hw = _read_meta(spark, index_dir)["max_doc_id"]
-    fs, _, jvm = _fs(spark, index_dir)
-    removed = 0
-    for name in ("bands", "hsets"):
-        orphan_files = (
-            _table(spark, index_dir, name)
-            .filter(F.col("doc_id") > hw)
-            .groupBy(F.input_file_name().alias("path"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        for r in orphan_files:
-            # input_file_name() yields a percent-ENCODED URI string; fed
-            # straight to Path(String) the encoding is kept literal, so a
-            # path with encodable characters (a space in a workspace dir)
-            # would miss the real file — and a missed delete that still
-            # counted its rows would tell the caller the index is clean,
-            # the crashed batch would be retried, and the double-append
-            # would commit duplicates.  Route through
-            # java.net.URI (decodes) and fail LOUDLY on a false delete.
-            p = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r["path"]))
-            if not fs.delete(p, False):
-                raise RuntimeError(
-                    f"vacuum_lsh_index failed to delete orphan file {p} — "
-                    "index NOT clean; do not retry the crashed batch"
-                )
-            removed += r["n"]
-    return removed
+    No read opens an unnamed generation, so vacuum never changes what a
+    probe sees, and a crashed fold needs no vacuum before its retry.
+    Single writer: a fold in flight has written a generation no version
+    names yet, so do not vacuum beside one."""
+    named = {g for g, _ in _read_meta(spark, index_dir)["gens"]}
+    fs, root, jvm = _fs(spark, index_dir)
+    removed = set()
+    for name in INDEX_SCHEMAS:
+        pattern = jvm.org.apache.hadoop.fs.Path(root, f"{name}.parquet/gen=*")
+        for st in fs.globStatus(pattern) or []:
+            g = st.getPath().getName()[len("gen="):]
+            if g in named:
+                continue
+            if not fs.delete(st.getPath(), True) and fs.exists(st.getPath()):
+                raise OSError(f"vacuum_lsh_index: could not delete {st.getPath()}")
+            removed.add(g)
+    return len(removed)

@@ -29,7 +29,7 @@ def oracle_sf_dir() -> str:
 class LyingFS:
     """Delegates to a real Hadoop FileSystem but makes chosen operations
     fail BY RETURNING FALSE — the Hadoop boolean contract (no exception),
-    i.e. the silent failure mode the ADVICE r10 boolean-return discipline
+    i.e. the silent failure mode the boolean-return discipline
     exists to surface.  ``fail_renames`` / ``fail_deletes`` are counts of
     matching operations to lie about (the real operation is NOT
     performed); ``path_match`` optionally scopes the lie to paths whose
@@ -55,6 +55,26 @@ class LyingFS:
             self._fail_deletes -= 1
             return False
         return self._fs.delete(path, recursive)
+
+
+def index_rows(spark, index_dir):
+    """Sorted ``(bands, hsets)`` rows of an LSH index's committed snapshot:
+    the generations its latest meta version names, read the way every
+    index read is (``lsh_index._committed``), so rows a crashed write left
+    are not counted and two indexes compare by content, whatever their
+    generation labels."""
+    from etl_bom_radiation_spark import lsh_index as L
+
+    gens = L._read_meta(spark, index_dir)["gens"]
+    bands = sorted(
+        (r.doc_id, r.band, r.bk)
+        for r in L._committed(spark, index_dir, "bands", gens).collect()
+    )
+    hsets = sorted(
+        (r.doc_id, tuple(sorted(r.hs)))
+        for r in L._committed(spark, index_dir, "hsets", gens).collect()
+    )
+    return bands, hsets
 
 
 def jobs_run(spark, fn):

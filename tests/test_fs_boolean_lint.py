@@ -43,6 +43,14 @@ waiting, or by how old a marker file is, is only as safe as its guess of
 how long a live owner can pause; the commit protocols here decide by what
 is committed (a numbered version, a manifest), never by time
 (``test_wall_clock_lint_is_live`` covers it).
+
+Fifth rule, index paths in one module: the LSH index's table paths are
+built only in ``lsh_index.py``.  No other package module contains
+``bands.parquet`` or ``hsets.parquet``, and a module that imports
+``lsh_index`` builds no ``.parquet`` path with an f-string: a raw read of
+a table directory would open generations no committed version names
+(and add a ``gen`` column), so every index read goes through
+``lsh_index._committed`` (``test_index_path_lint_is_live`` covers it).
 """
 
 from __future__ import annotations
@@ -349,3 +357,74 @@ def test_wall_clock_lint_is_live():
         "    fs.getFileStatus(p).getLen()\n"
     )
     assert clean == []
+
+
+INDEX_TABLES = ("bands.parquet", "hsets.parquet")
+
+
+def index_path_sites(source: str, filename: str = "<mem>") -> list[str]:
+    """``(file:line)`` of every line of a module other than
+    ``lsh_index.py`` that names an index table (``bands.parquet`` or
+    ``hsets.parquet``), and — in a module that imports ``lsh_index`` —
+    of every f-string holding ``.parquet``."""
+    if os.path.basename(filename) == "lsh_index.py":
+        return []
+    lines = {
+        i
+        for i, line in enumerate(source.splitlines(), 1)
+        if any(t in line for t in INDEX_TABLES)
+    }
+    tree = ast.parse(source)
+    imported = [
+        name
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        for name in [getattr(n, "module", None) or ""] + [a.name for a in n.names]
+    ]
+    if any(name.split(".")[-1] == "lsh_index" for name in imported):
+        lines |= {
+            n.lineno
+            for n in ast.walk(tree)
+            if isinstance(n, ast.JoinedStr)
+            and any(
+                isinstance(v, ast.Constant) and ".parquet" in str(v.value)
+                for v in n.values
+            )
+        }
+    return [f"{filename}:{line}" for line in sorted(lines)]
+
+
+def test_package_reads_index_tables_through_lsh_index():
+    offenders = _package_offenders(index_path_sites)
+    assert not offenders, (
+        "LSH index table paths built outside lsh_index.py (read through "
+        "lsh_index._committed and the committed meta instead): "
+        + ", ".join(offenders)
+    )
+
+
+def test_index_path_lint_is_live():
+    """The index-path rule flags a raw table read — by literal name, or by
+    an f-string in a module that imports ``lsh_index``, the shape of a
+    lifecycle check comparing two indexes — and passes ``lsh_index.py``
+    itself and other modules' ``.parquet`` f-strings."""
+    flagged = index_path_sites(
+        "from ..lsh_index import build_lsh_index\n"
+        "def rows(spark, d, name):\n"
+        "    a = spark.read.parquet(f'{d}/bands.parquet')\n"
+        "    return spark.read.parquet(f'{d}/{name}.parquet')\n",
+        "pkg/queries/lsh_lifecycle.py",
+    )
+    assert flagged == [
+        "pkg/queries/lsh_lifecycle.py:3",
+        "pkg/queries/lsh_lifecycle.py:4",
+    ]
+    assert index_path_sites(
+        "import etl_bom_radiation_spark.lsh_index as L\n"
+        "p = f'{d}/{n}.parquet'\n"
+    ) == ["<mem>:2"]
+    assert index_path_sites("p = f'{d}/hsets.parquet'\n", "pkg/lsh_index.py") == []
+    assert index_path_sites(
+        "def load(spark, sf_dir, n):\n"
+        "    return spark.read.parquet(f'{sf_dir}/{n}.parquet')\n"
+    ) == []

@@ -8,6 +8,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from etl_bom_radiation_spark import scale
+from tests.conftest import index_rows
 
 
 @pytest.fixture()
@@ -777,18 +778,6 @@ def _docs_frame(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def _index_rows(spark, d):
-    bands = sorted(
-        (r.doc_id, r.band, r.bk)
-        for r in spark.read.parquet(f"{d}/bands.parquet").collect()
-    )
-    hsets = sorted(
-        (r.doc_id, tuple(sorted(r.hs)))
-        for r in spark.read.parquet(f"{d}/hsets.parquet").collect()
-    )
-    return bands, hsets
-
-
 def test_update_lsh_index_rebuild_parity(spark, tmp_path, sf_dir):
     """Folding an admitted batch into the persisted index (append + local
     cap gate) must produce EXACTLY the tables a from-scratch rebuild over
@@ -812,7 +801,7 @@ def test_update_lsh_index_rebuild_parity(spark, tmp_path, sf_dir):
     build_lsh_index(spark, initial, inc_dir)
     assert update_lsh_index(spark, inc_dir, batch) == batch.count()
     build_lsh_index(spark, initial.unionByName(batch), full_dir)
-    assert _index_rows(spark, inc_dir) == _index_rows(spark, full_dir)
+    assert index_rows(spark, inc_dir) == index_rows(spark, full_dir)
 
     # saturated bucket: 70 identical docs, cap is 64 — update must admit
     # only ids 61..64 into each band bucket (occupancy 60 + rank <= 4)
@@ -823,10 +812,11 @@ def test_update_lsh_index_rebuild_parity(spark, tmp_path, sf_dir):
     build_lsh_index(spark, first, sat_inc)
     update_lsh_index(spark, sat_inc, extra)
     build_lsh_index(spark, first.unionByName(extra), sat_full)
-    assert _index_rows(spark, sat_inc) == _index_rows(spark, sat_full)
-    got = spark.read.parquet(f"{sat_inc}/bands.parquet")
-    assert got.filter(F.col("doc_id") > 64).count() == 0  # cap respected
-    assert got.filter(F.col("doc_id").isin(61, 62, 63, 64)).count() > 0
+    got = index_rows(spark, sat_inc)
+    assert got == index_rows(spark, sat_full)
+    banded = {doc_id for doc_id, _, _ in got[0]}
+    assert max(banded) == 64  # cap respected
+    assert banded & {61, 62, 63, 64}
 
     # and the probe sees the same world through either index
     probe = _docs_frame(spark, [(1000, same)])
@@ -902,10 +892,10 @@ def test_update_lsh_index_rejects_out_of_order_ids(spark, tmp_path):
             (12, "another perfectly foldable arrival text"),
         ],
     )
-    pre = _index_rows(spark, d)
+    pre = index_rows(spark, d)
     with pytest.raises(ValueError, match="append-only"):
         admit_batch(spark, d, mixed, max_docs=1)
-    assert _index_rows(spark, d) == pre  # nothing folded
+    assert index_rows(spark, d) == pre  # nothing folded
 
 
 def test_probe_lsh_index_rearrival_not_inflated(spark, tmp_path):
@@ -913,7 +903,7 @@ def test_probe_lsh_index_rearrival_not_inflated(spark, tmp_path):
     judged against the index MINUS itself: without the defensive
     anti-joins the verify join would pair the doc with its own indexed
     generation (self-Jaccard 1.0 -> spurious drop_index_dup) and fan out
-    candidate counts (ADVICE r8)."""
+    candidate counts."""
     from etl_bom_radiation_spark.lsh_index import build_lsh_index, probe_lsh_index
 
     base = _docs_frame(
@@ -938,7 +928,8 @@ def test_d04_lsh_index_lifecycle_fences(spark, oracle_sf_dir):
     the driver sees it (the d03 convention): fold==keeps, band+hset
     rebuild parity, probe equivalence on folded vs rebuilt, refold
     refused by the append-only id guard, compaction layout-only
-    (one file per table, rows conserved, probe bit-identical) and
+    (generations within the log bound, rows conserved, probe
+    bit-identical) and
     vacuum a no-op on the healthy compacted index."""
     from etl_bom_radiation_spark.queries import load_all
 
@@ -954,7 +945,7 @@ def test_d04_lsh_index_lifecycle_fences(spark, oracle_sf_dir):
         "09_hsets_parity_with_rebuild",
         "11_probe2_equal_on_folded_vs_rebuilt",
         "12_refold_refused_by_id_guard",
-        "13_compact_to_one_file_per_table",
+        "13_compact_generations_within_log_bound",
         "14_compact_rows_conserved",
         "15_probe2_equal_after_compaction",
         "16_vacuum_after_compaction_noop",
@@ -1009,8 +1000,8 @@ def test_admit_batch_subbatching_matches_oneshot_on_real_corpus(
         r.doc_id for r in v.filter("decision = 'keep'").collect()
     )
     assert keeps(v_sub) == keeps(v_one)
-    assert _index_rows(spark, sub) == _index_rows(spark, one)
-    assert _index_rows(spark, man) == _index_rows(spark, one)
+    assert index_rows(spark, sub) == index_rows(spark, one)
+    assert index_rows(spark, man) == index_rows(spark, one)
 
 
 def test_admit_batch_chain_divergence_is_admissive_never_lossy(spark, tmp_path):
@@ -1051,10 +1042,7 @@ def test_admit_batch_chain_divergence_is_admissive_never_lossy(spark, tmp_path):
         d for d, v in d_sub.items() if v == "keep"
     }
     # the folded index reflects exactly the sub-batched admission
-    bands = spark.read.parquet(f"{sub}/bands.parquet")
-    assert sorted(
-        r.doc_id for r in bands.select("doc_id").distinct().collect()
-    ) == [1, 20]
+    assert sorted({doc_id for doc_id, _, _ in index_rows(spark, sub)[0]}) == [1, 20]
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
@@ -1113,278 +1101,6 @@ def test_admit_batch_invariant_randomized(spark, tmp_path, seed):
         )
 
 
-def test_compact_lsh_index_layout_only(spark, tmp_path):
-    """Compaction folds the per-update generation files into a few
-    id-sorted files without changing CONTENT: rows identical, a probe
-    bit-identical across the rewrite, the meta mark untouched, and
-    below-threshold tables are left alone (second run no-op)."""
-    from etl_bom_radiation_spark.lsh_index import (
-        admit_batch,
-        build_lsh_index,
-        compact_lsh_index,
-        probe_lsh_index,
-    )
-
-    seed = _docs_frame(
-        spark,
-        [(i, f"seed doc w{i} about topic t{i % 5} with shared filler words")
-         for i in range(10)],
-    )
-    d = str(tmp_path / "idx")
-    build_lsh_index(spark, seed, d)
-    for lo in (100, 200, 300):  # three fold generations
-        batch = _docs_frame(
-            spark,
-            [(lo + j, f"arrival doc w{lo + j} on fresh topic f{lo + j}")
-             for j in range(3)],
-        )
-        admit_batch(spark, d, batch)
-
-    def n_files(name):
-        p = Path(d) / f"{name}.parquet"
-        return sum(1 for f in p.iterdir() if f.name.startswith("part-"))
-
-    probe = _docs_frame(
-        spark, [(999, "arrival doc w100 on fresh topic f100")]  # near-dup of 100
-    )
-    kp = lambda: sorted(
-        (r.doc_id, r.n_index_cand, r.n_shard_cand, r.best_jaccard, r.decision)
-        for r in probe_lsh_index(spark, d, probe).collect()
-    )
-    before_rows, before_verdict = _index_rows(spark, d), kp()
-    assert any(v[4] == "drop_index_dup" for v in before_verdict)  # dup of a FOLDED doc
-    assert n_files("bands") > 2 and n_files("hsets") > 2
-
-    counts = compact_lsh_index(spark, d, files_per_table=2)
-    assert counts["bands"] > 2 and counts["hsets"] > 2
-    assert n_files("bands") <= 2 and n_files("hsets") <= 2
-    assert _index_rows(spark, d) == before_rows
-    assert kp() == before_verdict
-
-    # second run: already at/below threshold -> layout untouched
-    pre = {f.name for f in (Path(d) / "bands.parquet").iterdir()}
-    compact_lsh_index(spark, d, files_per_table=2)
-    assert {f.name for f in (Path(d) / "bands.parquet").iterdir()} == pre
-
-    # the lifecycle continues across the rewrite: another fold + probe
-    nxt = _docs_frame(spark, [(1000, "post compaction arrival on topic g1")])
-    assert {r.decision for r in admit_batch(spark, d, nxt).collect()} == {"keep"}
-    redup = _docs_frame(spark, [(1001, "post compaction arrival on topic g1")])
-    assert {r.decision for r in probe_lsh_index(spark, d, redup).collect()} == {
-        "drop_index_dup"
-    }
-
-
-def test_compact_lsh_index_swap_boolean_failures_surface(
-    spark, tmp_path, monkeypatch
-):
-    """The boolean-return discipline on the index-compaction swap: a delete or
-    rename that fails BY RETURNING FALSE (Hadoop boolean contract) must
-    raise, not proceed.  A lying delete used to make the compaction a
-    silent no-op that reported success; a lying rename left the table
-    missing until the NEXT entry point's repair — now the swap repairs
-    inline and still raises, and content survives either way."""
-    import etl_bom_radiation_spark.lsh_index as L
-    from tests.conftest import LyingFS
-
-    seed = _docs_frame(
-        spark,
-        [(i, f"seed doc w{i} about topic t{i % 5} with shared filler words")
-         for i in range(10)],
-    )
-    d = str(tmp_path / "idx")
-    L.build_lsh_index(spark, seed, d)
-    for lo in (100, 200):  # fold generations so compaction has work
-        L.admit_batch(
-            spark,
-            d,
-            _docs_frame(
-                spark,
-                [(lo + i, f"novel doc n{lo + i} topic u{i} unique words here")
-                 for i in range(5)],
-            ),
-        )
-    before_rows = _index_rows(spark, d)
-    real_fs = L._fs
-
-    def lie(**kw):
-        # ONE lying instance shared across _fs calls, so the lie
-        # count is consumed process-wide (the inline repair must see an
-        # honest FS once the single lie has fired)
-        state: dict = {}
-
-        def patched(s, i):
-            fs, p, jvm = real_fs(s, i)
-            state.setdefault("fs", LyingFS(fs, **kw))
-            return state["fs"], p, jvm
-
-        monkeypatch.setattr(L, "_fs", patched)
-
-    # the live-table delete lies: swap cannot land — raise, change nothing
-    lie(fail_deletes=1, path_match="bands.parquet")
-    with pytest.raises(RuntimeError, match="could not delete"):
-        L.compact_lsh_index(spark, d, files_per_table=1)
-    monkeypatch.setattr(L, "_fs", real_fs)
-    assert _index_rows(spark, d) == before_rows
-
-    # the rename-in lies AFTER a successful delete: raise, but repair the
-    # completed temp back in INLINE (the table must not stay missing)
-    lie(fail_renames=1, path_match=".bands.compact-")
-    with pytest.raises(RuntimeError, match="could not swap"):
-        L.compact_lsh_index(spark, d, files_per_table=1)
-    monkeypatch.setattr(L, "_fs", real_fs)
-    assert (Path(d) / "bands.parquet").exists()
-    assert _index_rows(spark, d) == before_rows
-
-    # an honest run then compacts to the requested layout
-    L.compact_lsh_index(spark, d, files_per_table=1)
-    assert _index_rows(spark, d) == before_rows
-    fs, _, _ = real_fs(spark, d)  # the REAL fs: the lies are over
-    bands_p = spark._jvm.org.apache.hadoop.fs.Path(f"{d}/bands.parquet")
-    assert L._part_file_count(fs, bands_p) <= 1
-
-
-def test_compact_lsh_index_crash_repair(spark, tmp_path):
-    """The compaction swap's two crash states are both repairable and
-    unambiguous (live-table presence is the discriminator):
-
-    * crash BETWEEN delete-live and rename-in: the complete
-      ``_SUCCESS``-marked temp is renamed in (by ``vacuum_lsh_index`` —
-      the one repair entry point), and probes come back bit-identical;
-    * crash BEFORE the delete: the live table is authoritative and the
-      next ``compact_lsh_index`` discards the stray temp;
-    * a missing table with NO complete temp is real corruption and
-      raises instead of guessing."""
-    import shutil
-
-    from etl_bom_radiation_spark.lsh_index import (
-        admit_batch,
-        build_lsh_index,
-        compact_lsh_index,
-        probe_lsh_index,
-        vacuum_lsh_index,
-    )
-
-    seed = _docs_frame(
-        spark,
-        [(i, f"seed doc w{i} about topic t{i % 5} with shared filler words")
-         for i in range(10)],
-    )
-    d = str(tmp_path / "idx")
-    build_lsh_index(spark, seed, d)
-    admit_batch(
-        spark,
-        d,
-        _docs_frame(
-            spark,
-            [(100 + j, f"arrival doc w{100 + j} on fresh topic f{100 + j}")
-             for j in range(3)],
-        ),
-    )
-
-    probe = _docs_frame(spark, [(999, "arrival doc w100 on fresh topic f100")])
-    kp = lambda: sorted(
-        (r.doc_id, r.n_index_cand, r.n_shard_cand, r.best_jaccard, r.decision)
-        for r in probe_lsh_index(spark, d, probe).collect()
-    )
-    before_rows, before_verdict = _index_rows(spark, d), kp()
-
-    # -- crash BETWEEN delete and rename: rewrite landed complete, live gone
-    live = Path(d) / "bands.parquet"
-    spark.read.parquet(str(live)).coalesce(1).write.parquet(
-        f"{d}/.bands.compact-crash1"
-    )
-    assert (Path(d) / ".bands.compact-crash1" / "_SUCCESS").exists()
-    shutil.rmtree(live)
-    with pytest.raises(Exception):  # loud failure, never a torn read
-        kp()
-    assert vacuum_lsh_index(spark, d) == 0  # repair, no orphan rows involved
-    assert live.exists() and not (Path(d) / ".bands.compact-crash1").exists()
-    assert _index_rows(spark, d) == before_rows
-    assert kp() == before_verdict
-
-    # -- crash BEFORE the delete: live authoritative, stray temp discarded
-    spark.read.parquet(f"{d}/hsets.parquet").coalesce(1).write.parquet(
-        f"{d}/.hsets.compact-crash2"
-    )
-    compact_lsh_index(spark, d, files_per_table=64)  # head repair; no rewrite
-    assert not (Path(d) / ".hsets.compact-crash2").exists()
-    assert _index_rows(spark, d) == before_rows
-    assert kp() == before_verdict
-
-    # -- missing table, no complete temp: corruption, not a crashed swap
-    shutil.rmtree(Path(d) / "hsets.parquet")
-    with pytest.raises(RuntimeError, match="restore from a rebuild"):
-        vacuum_lsh_index(spark, d)
-
-
-def test_update_lsh_index_crash_recovery(spark, tmp_path, monkeypatch):
-    """The fold's crash protocol: data files append first, the meta
-    high-water mark publishes LAST (the commit). A crash in between
-    (simulated: _write_meta raises after both appends) must leave probes
-    serving the PRE-crash snapshot bit-for-bit; vacuum_lsh_index removes
-    the uncommitted rows so the batch retry lands exactly once — final
-    tables identical to a clean build over the union."""
-    import etl_bom_radiation_spark.lsh_index as L
-
-    base = _docs_frame(
-        spark,
-        [
-            (1, "seed document about broadcast joins and bucket pruning"),
-            (2, "another seed on watermark state eviction semantics"),
-        ],
-    )
-    batch = _docs_frame(
-        spark, [(10, "an arriving novel document about shingle sketches")]
-    )
-    d, full = str(tmp_path / "idx"), str(tmp_path / "full")
-    L.build_lsh_index(spark, base, d)
-    probe = _docs_frame(spark, [(99, "an arriving novel document about shingle caches")])
-    kp = lambda df: sorted(
-        (r.doc_id, r.n_index_cand, r.n_shard_cand, r.best_jaccard, r.decision)
-        for r in df.collect()
-    )
-    before = kp(L.probe_lsh_index(spark, d, probe))
-
-    real_write = L._write_meta
-
-    def crash(*a, **k):
-        raise RuntimeError("simulated crash before commit")
-
-    monkeypatch.setattr(L, "_write_meta", crash)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        L.update_lsh_index(spark, d, batch)
-    monkeypatch.setattr(L, "_write_meta", real_write)
-
-    # uncommitted leftovers exist on disk but every read hides them
-    raw = spark.read.parquet(f"{d}/bands.parquet")
-    assert raw.filter("doc_id > 2").count() > 0
-    assert kp(L.probe_lsh_index(spark, d, probe)) == before
-
-    # repair is FILE-granular: orphan rows never share a file with
-    # committed ones, so vacuum deletes the crashed append's files and
-    # leaves every committed data file byte-identical in place (at the
-    # module's posture: no 100 TB rewrite to repair a crashed batch)
-    def _files(name):
-        p = Path(d) / f"{name}.parquet"
-        return {
-            f.name: f.stat().st_mtime_ns
-            for f in p.iterdir()
-            if f.name.startswith("part-")
-        }
-
-    pre = {n: _files(n) for n in ("bands", "hsets")}
-    assert L.vacuum_lsh_index(spark, d) > 0
-    assert L.vacuum_lsh_index(spark, d) == 0  # idempotent / healthy
-    for name in ("bands", "hsets"):
-        post = _files(name)
-        assert set(post) < set(pre[name])  # only deletions, no rewrites
-        assert all(pre[name][f] == mt for f, mt in post.items())  # untouched
-    assert L.update_lsh_index(spark, d, batch) == 1
-    L.build_lsh_index(spark, base.unionByName(batch), full)
-    assert _index_rows(spark, d) == _index_rows(spark, full)
-
-
 _EPOCH_SEED = [
     (1, "seed doc about broadcast joins and shuffle pruning"),
     (2, "seed doc about watermark state eviction rules"),
@@ -1433,6 +1149,357 @@ def epoch_index(_epoch_base):
     return copy
 
 
+def test_absorb_policy_bounds_rewrites_and_generations():
+    """Size-tiered compaction's policy (``_absorb_from``), driven without
+    Spark: over 1,000 equal one-doc folds with a compaction after each,
+    the docs rewritten in total stay within N·log2 N, and the live
+    generations stay within ``N.bit_length() + 1`` after every fold and
+    within ``N.bit_length()`` after every compaction."""
+    import math
+
+    from etl_bom_radiation_spark.lsh_index import _absorb_from
+
+    gens, rewritten = [], 0
+    for n in range(1, 1001):
+        gens.append(1)
+        assert len(gens) <= n.bit_length() + 1
+        start = _absorb_from(gens)
+        if start is not None:
+            rewritten += sum(gens[start:])
+            gens[start:] = [sum(gens[start:])]
+        assert len(gens) <= n.bit_length()
+    assert rewritten <= 1000 * math.log2(1000)
+    # within the bound nothing merges, and the newest alone never does
+    assert _absorb_from([8, 4, 2, 1]) is None
+    assert _absorb_from([0]) is None
+    # over it, the merge starts at the oldest generation holding no more
+    # docs than all newer ones together
+    assert _absorb_from([1, 1, 1]) == 0
+    assert _absorb_from([5, 1, 1, 1, 1]) == 1
+
+
+def _gen_dirs(d) -> set:
+    """Labels of the generation directories on disk, in either table."""
+    return {
+        p.name[len("gen="):]
+        for t in ("bands", "hsets")
+        for p in (Path(d) / f"{t}.parquet").glob("gen=*")
+    }
+
+
+def test_compact_lsh_index_layout_only(spark, tmp_path, epoch_index):
+    """Fold-and-compact cycles: seven one-doc folds, a compaction after
+    each.  Each compaction that merges (the third and the seventh here)
+    keeps the probe's verdicts bit-identical — the probe holds copies of
+    folded docs — leaves at most ``N.bit_length()`` live generations and
+    deletes the directories it absorbed; the others write nothing.  At
+    the end the committed rows equal a rebuild over the union, and the
+    probe finds both folded copies."""
+    import etl_bom_radiation_spark.lsh_index as L
+
+    d, full = epoch_index(tmp_path / "idx"), str(tmp_path / "full")
+    folds = [
+        (10 + i, f"fold doc {i} about topic area{i} and subject{i} here")
+        for i in range(7)
+    ]
+    probe = _docs_frame(spark, [(98, folds[0][1]), (99, folds[5][1])])
+    merges = []
+    for doc in folds:
+        L.update_lsh_index(spark, d, _docs_frame(spark, [doc]))
+        gens = L._read_meta(spark, d)["gens"]
+        n = sum(docs for _, docs in gens)
+        assert len(gens) <= n.bit_length() + 1
+        if L._absorb_from([docs for _, docs in gens]) is None:
+            assert L.compact_lsh_index(spark, d) == 0
+            assert _gen_dirs(d) == {g for g, _ in gens}
+            continue
+        before = _kp(L.probe_lsh_index(spark, d, probe))
+        merges.append(L.compact_lsh_index(spark, d))
+        assert _kp(L.probe_lsh_index(spark, d, probe)) == before
+        after = L._read_meta(spark, d)["gens"]
+        assert len(after) <= n.bit_length()
+        assert _gen_dirs(d) == {g for g, _ in after}
+    assert merges == [4, 4]  # [2, 1, 1, 1] -> [5]; [5, 1, 1, 1, 1] -> [5, 4]
+    assert [docs for _, docs in L._read_meta(spark, d)["gens"]] == [5, 4]
+    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED + folds), full)
+    assert index_rows(spark, d) == index_rows(spark, full)
+    assert {r.decision for r in L.probe_lsh_index(spark, d, probe).collect()} == {
+        "drop_index_dup"
+    }
+
+
+class _FailNth:
+    """A Hadoop FileSystem whose ``nth`` mutating call (``create``,
+    ``rename`` or ``delete``, counted from 0) fails — by raising, or by
+    returning false — and which records every mutating call it sees."""
+
+    def __init__(self, fs, nth, mode):
+        self._fs, self._nth, self._mode, self.calls = fs, nth, mode, []
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def _fails(self, op) -> bool:
+        self.calls.append(op)
+        if len(self.calls) - 1 != self._nth:
+            return False
+        if self._mode == "raise":
+            raise OSError(f"injected {op} failure")
+        return True
+
+    def create(self, *a):
+        self._fails("create")  # a create returns no boolean: it only raises
+        return self._fs.create(*a)
+
+    def rename(self, src, dst):
+        return False if self._fails("rename") else self._fs.rename(src, dst)
+
+    def delete(self, path, recursive):
+        return False if self._fails("delete") else self._fs.delete(path, recursive)
+
+
+def test_fs_failures_leave_pre_or_post_state(spark, tmp_path, monkeypatch):
+    """Every mutating FS call (create, rename, delete through ``_fs``) a
+    compaction and a fold make fails in turn, once by raising and once
+    by returning false (a create can only raise).  After each failure,
+    the committed rows and the probe verdicts are those before the call
+    or those after it, never a mix and never a read error; then
+    ``vacuum_lsh_index`` plus a retry of the call reaches the post-call
+    state, with no unnamed generation left on disk.  The index is an
+    empty build plus one fold — two generations, over (1).bit_length(),
+    so the compaction merges both — and an orphan generation of a crashed
+    fold, so the compaction's own vacuum deletes too."""
+    import shutil
+    from contextlib import suppress
+
+    import etl_bom_radiation_spark.lsh_index as L
+
+    base = str(tmp_path / "base")
+    L.build_lsh_index(spark, _docs_frame(spark, []), base)
+    L.update_lsh_index(spark, base, _docs_frame(spark, [(2, "fold doc 2 on raft logs")]))
+    real_write = L._write_meta
+
+    def crash(*a, **k):
+        raise RuntimeError("simulated crash before commit")
+
+    monkeypatch.setattr(L, "_write_meta", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):  # the orphan
+        L.update_lsh_index(spark, base, _docs_frame(spark, [(4, "orphan doc text")]))
+    monkeypatch.setattr(L, "_write_meta", real_write)
+
+    arrival = _docs_frame(spark, [(5, "arrival doc about gossip membership")])
+    hs, _, gated = L._batch_frames(
+        _docs_frame(
+            spark,
+            [(98, "arrival doc about gossip membership"), (99, "fold doc 2 on raft logs")],
+        )
+    )
+
+    def state(d):
+        verdicts = L._probe_frames(*L._index_frames(spark, d), hs, gated)
+        return index_rows(spark, d), _kp(verdicts)
+
+    def run(op, d, nth=-1, mode="raise"):
+        real_fs, shared = L._fs, {}
+
+        def patched(s, p):
+            fs, hp, jvm = real_fs(s, p)
+            shared.setdefault("fs", _FailNth(fs, nth, mode))
+            return shared["fs"], hp, jvm
+
+        monkeypatch.setattr(L, "_fs", patched)
+        try:
+            with suppress(OSError):
+                op(d)
+        finally:
+            monkeypatch.setattr(L, "_fs", real_fs)
+        return shared["fs"].calls
+
+    ops = {
+        # vacuum's two deletes of the orphan, the commit, the prune of the
+        # oldest version, then the deletes of the two absorbed generations
+        "compact": (
+            lambda d: L.compact_lsh_index(spark, d),
+            ["delete"] * 2 + ["create", "rename"] + ["delete"] * 5,
+        ),
+        # the commit and the prune
+        "fold": (
+            lambda d: L.admit_batch(spark, d, arrival, epoch=7).collect(),
+            ["create", "rename", "delete"],
+        ),
+    }
+    pre = state(base)
+    for name, (op, expected) in ops.items():
+        clean = str(tmp_path / f"{name}-clean")
+        shutil.copytree(base, clean)
+        calls = run(op, clean)
+        assert calls == expected, name
+        post = state(clean)
+        post_docs = [docs for _, docs in L._read_meta(spark, clean)["gens"]]
+        assert (post == pre) == (name == "compact")  # compaction moves no row
+        cases = [
+            (k, mode)
+            for k, call in enumerate(calls)
+            for mode in (("raise",) if call == "create" else ("raise", "false"))
+        ]
+        for k, mode in cases:
+            d = str(tmp_path / f"{name}-{k}-{mode}")
+            shutil.copytree(base, d)
+            run(op, d, k, mode)
+            assert state(d) in (pre, post), (name, calls[k], k, mode)
+            L.vacuum_lsh_index(spark, d)
+            op(d)
+            gens = L._read_meta(spark, d)["gens"]
+            assert [docs for _, docs in gens] == post_docs, (name, k, mode)
+            assert index_rows(spark, d) == post[0], (name, k, mode)
+            assert _gen_dirs(d) == {g for g, _ in gens}, (name, k, mode)
+
+
+def test_probes_during_fold_and_compact_cycles(spark, tmp_path, epoch_index):
+    """A reader thread probes while the main thread runs back-to-back
+    fold-and-compact cycles of docs unrelated to the probe: every probe
+    that completes returns the baseline verdicts, and a probe that fails
+    fails only on a missing file or path — a generation a compaction
+    deleted after the reader listed it — never with other verdicts."""
+    import threading
+
+    import etl_bom_radiation_spark.lsh_index as L
+
+    d = epoch_index(tmp_path / "idx")
+    probe = _docs_frame(
+        spark, [(98, _EPOCH_SEED[0][1]), (99, "a probe on vector clocks and skew")]
+    )
+    baseline = _kp(L.probe_lsh_index(spark, d, probe))
+    seen, errors, done = [], [], threading.Event()
+
+    def reader():
+        while not done.is_set():
+            try:
+                seen.append(_kp(L.probe_lsh_index(spark, d, probe)))
+            except Exception as e:  # checked below: missing files only
+                errors.append(str(e))
+
+    t = threading.Thread(target=reader)
+    t.start()
+    merged = 0
+    try:
+        for i in range(4):
+            doc = (10 + i, f"cyc{i}a cyc{i}b cyc{i}c cyc{i}d cyc{i}e cyc{i}f")
+            L.update_lsh_index(spark, d, _docs_frame(spark, [doc]))
+            merged += L.compact_lsh_index(spark, d)
+    finally:
+        done.set()
+        t.join(timeout=120)
+    assert not t.is_alive()
+    assert merged == 4  # the third cycle merges [2, 1, 1, 1] into one
+    assert seen and all(v == baseline for v in seen)
+    missing = ("FILE_NOT_EXIST", "PATH_NOT_FOUND", "FileNotFound", "does not exist")
+    assert all(any(m in e for m in missing) for e in errors), errors[:1]
+    assert _kp(L.probe_lsh_index(spark, d, probe)) == baseline
+
+
+def test_update_lsh_index_crash_recovery(spark, tmp_path, monkeypatch):
+    """A fold that crashes after writing its generation and before its
+    meta commit (``_write_meta`` raises) leaves a generation no version
+    names: probes keep serving the pre-crash snapshot bit-for-bit, and
+    the batch retried WITHOUT a vacuum lands exactly once — tables
+    identical to a clean build over the union.  ``vacuum_lsh_index``
+    then deletes exactly that orphan generation and leaves every named
+    data file in place."""
+    import etl_bom_radiation_spark.lsh_index as L
+
+    base = _docs_frame(
+        spark,
+        [
+            (1, "seed document about broadcast joins and bucket pruning"),
+            (2, "another seed on watermark state eviction semantics"),
+        ],
+    )
+    batch = _docs_frame(
+        spark, [(10, "an arriving novel document about shingle sketches")]
+    )
+    d, full = str(tmp_path / "idx"), str(tmp_path / "full")
+    L.build_lsh_index(spark, base, d)
+    probe = _docs_frame(spark, [(99, "an arriving novel document about shingle caches")])
+    before = _kp(L.probe_lsh_index(spark, d, probe))
+
+    real_write = L._write_meta
+
+    def crash(*a, **k):
+        raise RuntimeError("simulated crash before commit")
+
+    monkeypatch.setattr(L, "_write_meta", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        L.update_lsh_index(spark, d, batch)
+    monkeypatch.setattr(L, "_write_meta", real_write)
+
+    # the crashed fold's generation is on disk, and no read opens it
+    assert len(_gen_dirs(d)) == 2
+    assert _kp(L.probe_lsh_index(spark, d, probe)) == before
+
+    assert L.update_lsh_index(spark, d, batch) == 1  # the retry, no vacuum
+    L.build_lsh_index(spark, base.unionByName(batch), full)
+    assert index_rows(spark, d) == index_rows(spark, full)
+
+    def _files():
+        return {
+            str(f): f.stat().st_mtime_ns
+            for t in ("bands", "hsets")
+            for f in (Path(d) / f"{t}.parquet").glob("gen=*/part-*")
+        }
+
+    pre = _files()
+    assert L.vacuum_lsh_index(spark, d) == 1
+    assert L.vacuum_lsh_index(spark, d) == 0  # idempotent / healthy
+    named = {g for g, _ in L._read_meta(spark, d)["gens"]}
+    assert _gen_dirs(d) == named and len(named) == 2
+    post = _files()
+    assert set(post) < set(pre)  # only deletions, no rewrites
+    assert all(pre[f] == mt for f, mt in post.items())
+    assert index_rows(spark, d) == index_rows(spark, full)
+
+
+def test_vacuum_orphans_in_encodable_path(spark, tmp_path, monkeypatch, epoch_index):
+    """vacuum's listing diff works in an index whose path needs URI
+    encoding (a space): it deletes the crashed fold's generation in both
+    tables, counts it once, and a second vacuum finds nothing — a missed
+    delete would leave the orphan on disk for good."""
+    import etl_bom_radiation_spark.lsh_index as L
+
+    d = epoch_index(tmp_path / "work space" / "idx")
+    monkeypatch.setattr(
+        L,
+        "_write_meta",
+        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("boom")),
+    )
+    with pytest.raises(RuntimeError, match="boom"):
+        L.update_lsh_index(
+            spark, d, _docs_frame(spark, [(10, "novel doc about space curves")])
+        )
+    monkeypatch.undo()
+
+    named = {g for g, _ in L._read_meta(spark, d)["gens"]}
+    assert len(_gen_dirs(d) - named) == 1
+    assert L.vacuum_lsh_index(spark, d) == 1
+    assert _gen_dirs(d) == named
+    assert L.vacuum_lsh_index(spark, d) == 0
+
+
+def test_flat_layout_meta_fails_loudly(spark, tmp_path):
+    """A meta version written before the generation layout (no ``gens``)
+    is refused with a ``ValueError`` that points at the UPGRADE note,
+    through ``_read_meta`` and so through every entry point — never read
+    as an index of no generations."""
+    import etl_bom_radiation_spark.lsh_index as L
+
+    d = tmp_path / "idx"
+    (d / "_meta").mkdir(parents=True)
+    (d / "_meta" / f"{0:020d}.json").write_text('{"max_doc_id": 7, "epoch": null}')
+    for call in (L._read_meta, L.compact_lsh_index, L.vacuum_lsh_index):
+        with pytest.raises(ValueError, match="UPGRADE"):
+            call(spark, str(d))
+
+
 def test_admit_batch_epoch_replay_idempotent(spark, tmp_path, epoch_index):
     """The foreachBatch exactly-once protocol, full-replay case: after a
     COMPLETE admission, re-admitting the same batch with the same epoch
@@ -1449,11 +1516,11 @@ def test_admit_batch_epoch_replay_idempotent(spark, tmp_path, epoch_index):
 
     v1 = _kp(L.admit_batch(spark, d, batch, max_docs=2, epoch=0))
     assert {x[4] for x in v1} == {"keep", "drop_index_dup"}
-    rows1 = _index_rows(spark, d)
+    rows1 = index_rows(spark, d)
 
     v2 = _kp(L.admit_batch(spark, d, batch, max_docs=2, epoch=0))  # replay
     assert v2 == v1
-    assert _index_rows(spark, d) == rows1
+    assert index_rows(spark, d) == rows1
 
     # the stream moves on: a new epoch admits normally...
     nxt = _docs_frame(
@@ -1504,17 +1571,18 @@ def test_admit_batch_epoch_replay_mid_subbatch_crash(
     got = _kp(L.admit_batch(spark, d, batch, max_docs=2, epoch=0))
     assert got == want
     assert len(folds) == 2  # sub-batch 1's committed fold was SKIPPED
-    assert _index_rows(spark, d) == _index_rows(spark, ctrl)
+    assert index_rows(spark, d) == index_rows(spark, ctrl)
 
 
 def test_admit_batch_epoch_replay_mid_append_crash(
     spark, tmp_path, monkeypatch, epoch_index
 ):
-    """Crash INSIDE the fold (data files appended, mark never published):
-    the stored epoch never became this epoch, so the redelivery takes
-    the NORMAL path — but because an epoch was given, admit_batch
-    self-vacuums first, so the retry cannot double-append the orphans.
-    Result equals an uncrashed control run."""
+    """Crash INSIDE the fold (its generation written, no version naming
+    it): the stored epoch never became this epoch, so the redelivery
+    takes the NORMAL path, and it repairs nothing first — no read opens
+    the crashed fold's generation, so the retry cannot double-count it
+    (``vacuum_lsh_index`` is never called).  Result equals an uncrashed
+    control run."""
     import etl_bom_radiation_spark.lsh_index as L
 
     batch = _docs_frame(spark, _EPOCH_BATCH)
@@ -1533,58 +1601,21 @@ def test_admit_batch_epoch_replay_mid_append_crash(
         L.admit_batch(spark, d, batch, epoch=0)
     monkeypatch.setattr(L, "_write_meta", real_write)
 
-    # orphan rows are on disk, uncommitted
-    assert spark.read.parquet(f"{d}/bands.parquet").filter("doc_id > 2").count() > 0
+    # the crashed fold's generation is on disk, named by no version
+    assert _gen_dirs(d) - {g for g, _ in L._read_meta(spark, d)["gens"]}
 
+    def no_vacuum(*a):
+        raise AssertionError("admit_batch vacuumed")
+
+    monkeypatch.setattr(L, "vacuum_lsh_index", no_vacuum)
     got = _kp(L.admit_batch(spark, d, batch, epoch=0))
     assert got == want
-    assert _index_rows(spark, d) == _index_rows(spark, ctrl)
-
-
-def test_admit_batch_vacuum_once_per_process(spark, tmp_path, monkeypatch, epoch_index):
-    """Epoch-mode's repair pass (vacuum: file listing + stats-pruned
-    footer scan over the WHOLE index) is paid once per driver process
-    per index, not per micro-batch — a healthy continuous stream must
-    not rescan a 100 TB index on every arrival — while a failed fold
-    evicts the clean-cache so the next epoch-bearing call repairs."""
-    import etl_bom_radiation_spark.lsh_index as L
-
-    d = str(tmp_path / "idx")
-    epoch_index(d)
-    real_vac, vacs = L.vacuum_lsh_index, []
-    monkeypatch.setattr(
-        L, "vacuum_lsh_index", lambda *a: (vacs.append(1), real_vac(*a))[1]
-    )
-
-    one = lambda i, t: _docs_frame(spark, [(i, t)])
-    L.admit_batch(spark, d, one(10, "doc about shuffle partition sizing"), epoch=0)
-    L.admit_batch(spark, d, one(11, "doc about morton curve file layouts"), epoch=1)
-    assert len(vacs) == 1  # steady state: one repair scan, then cached
-
-    monkeypatch.setattr(
-        L,
-        "_write_meta",
-        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("boom")),
-    )
-    with pytest.raises(RuntimeError, match="boom"):
-        L.admit_batch(spark, d, one(12, "doc about bloom filter bit arrays"), epoch=2)
-    monkeypatch.undo()
-    monkeypatch.setattr(
-        L, "vacuum_lsh_index", lambda *a: (vacs.append(1), real_vac(*a))[1]
-    )
-
-    # orphans from the crashed fold are on disk; the eviction makes the
-    # next call vacuum them away before folding
-    L.admit_batch(spark, d, one(13, "doc about watermark horizon plateaus"), epoch=3)
-    assert len(vacs) == 2
-    assert sorted(
-        r.doc_id for r in spark.read.parquet(f"{d}/hsets.parquet").collect()
-    ) == [1, 2, 10, 11, 13]
+    assert index_rows(spark, d) == index_rows(spark, ctrl)
 
 
 def test_split_batch_distributed_deterministic_contiguous(spark):
-    """admit_batch's over-broadcast splitter (VERDICT r9 #1): the
-    sub-batch tagging must be
+    """admit_batch's over-broadcast splitter: the sub-batch tagging must
+    be
 
     * DISTRIBUTED — no Exchange, no Window, no single-partition stage at
       all (the lint class tests/test_plans.py holds declared queries to;
@@ -1665,7 +1696,7 @@ def test_admit_batch_skewed_ids_resplit_recursively(
     monkeypatch.setattr(L, "_fold_frames", counting_fold)
     v_sub = _kp(L.admit_batch(spark, sub, batch, max_docs=4))
     assert v_sub == v_one
-    assert _index_rows(spark, sub) == _index_rows(spark, one)
+    assert index_rows(spark, sub) == index_rows(spark, one)
     # every leaf fold stayed within the envelope: the 8-doc low cluster
     # re-split instead of folding one-shot
     assert leaf_sizes and max(leaf_sizes) <= 4
@@ -1707,22 +1738,26 @@ def test_meta_stray_temp_ignored(spark, tmp_path):
         (meta / f".{0:020d}.json.tmp").write_text(text)
         with pytest.raises(FileNotFoundError):
             L._read_meta(spark, str(d))
-    L._write_meta(spark, str(d), 3)
+    L._write_meta(spark, str(d), 0, 3, [])
     for text in stray:
         (meta / f".{1:020d}.json.tmp").write_text(text)
-        assert L._read_meta(spark, str(d)) == {"max_doc_id": 3, "epoch": None}
-    L._write_meta(spark, str(d), 4, epoch=1)
-    assert L._read_meta(spark, str(d)) == {"max_doc_id": 4, "epoch": 1}
+        assert L._read_meta(spark, str(d)) == {
+            "version": 0, "max_doc_id": 3, "epoch": None, "gens": []
+        }
+    L._write_meta(spark, str(d), 1, 4, [], epoch=1)
+    assert L._read_meta(spark, str(d)) == {
+        "version": 1, "max_doc_id": 4, "epoch": 1, "gens": []
+    }
     assert not [f for f in meta.iterdir() if f.name.endswith(".tmp")]
 
 
 def test_write_meta_rename_failure_surfaces(spark, tmp_path, monkeypatch, epoch_index):
     """``_write_meta`` checks ``fs.rename``'s boolean: on a store where
     the rename fails WITHOUT throwing, a silent commit loss would leave
-    the appended keeper rows above a stale mark while the caller reports
-    success, and the next vacuum would delete admitted docs.  The failed
-    commit raises, the previous version stays authoritative, and the next
-    commit succeeds."""
+    the keepers' generation unnamed while the caller reports success,
+    and the next vacuum would delete admitted docs.  The failed commit
+    raises, the previous version stays authoritative, and the next
+    commit of the same version succeeds."""
     import etl_bom_radiation_spark.lsh_index as L
     from tests.conftest import LyingFS
 
@@ -1734,14 +1769,18 @@ def test_write_meta_rename_failure_surfaces(spark, tmp_path, monkeypatch, epoch_
         fs, p, jvm = real_fs(s, path)
         return LyingFS(fs, fail_renames=1), p, jvm
 
+    meta = L._read_meta(spark, d)
+    n, gens = meta["version"] + 1, meta["gens"]
     monkeypatch.setattr(L, "_fs", lying)
     with pytest.raises(OSError, match="could not commit"):
-        L._write_meta(spark, d, 99, epoch=5)
+        L._write_meta(spark, d, n, 99, gens, epoch=5)
     monkeypatch.setattr(L, "_fs", real_fs)
-    assert L._read_meta(spark, d) == {"max_doc_id": 2, "epoch": None}
+    assert L._read_meta(spark, d) == meta
 
-    L._write_meta(spark, d, 123, epoch=7)
-    assert L._read_meta(spark, d) == {"max_doc_id": 123, "epoch": 7}
+    L._write_meta(spark, d, n, 123, gens, epoch=7)
+    assert L._read_meta(spark, d) == {
+        "version": n, "max_doc_id": 123, "epoch": 7, "gens": gens
+    }
 
 
 def test_meta_keeps_at_most_two_versions(spark, tmp_path):
@@ -1751,13 +1790,15 @@ def test_meta_keeps_at_most_two_versions(spark, tmp_path):
 
     d = tmp_path / "idx"
     for mark in range(40):
-        L._write_meta(spark, str(d), mark, epoch=mark)
+        L._write_meta(spark, str(d), mark, mark, [], epoch=mark)
         assert len(list((d / "_meta").glob("[0-9]*.json"))) <= 2
     assert sorted(p.name for p in (d / "_meta").glob("[0-9]*.json")) == [
         f"{38:020d}.json",
         f"{39:020d}.json",
     ]
-    assert L._read_meta(spark, str(d)) == {"max_doc_id": 39, "epoch": 39}
+    assert L._read_meta(spark, str(d)) == {
+        "version": 39, "max_doc_id": 39, "epoch": 39, "gens": []
+    }
 
 
 def test_meta_reader_during_commits(spark, tmp_path):
@@ -1770,7 +1811,7 @@ def test_meta_reader_during_commits(spark, tmp_path):
     import etl_bom_radiation_spark.lsh_index as L
 
     d = str(tmp_path / "idx")
-    L._write_meta(spark, d, 0)
+    L._write_meta(spark, d, 0, 0, [])
     seen, errors, done = [], [], threading.Event()
 
     def reader():
@@ -1785,7 +1826,7 @@ def test_meta_reader_during_commits(spark, tmp_path):
     t.start()
     try:
         for mark in range(1, 31):
-            L._write_meta(spark, d, mark)
+            L._write_meta(spark, d, mark, mark, [])
     finally:
         done.set()
         t.join(timeout=60)
@@ -1793,91 +1834,6 @@ def test_meta_reader_during_commits(spark, tmp_path):
     assert not errors, errors
     assert seen and seen == sorted(seen)
     assert L._read_meta(spark, d)["max_doc_id"] == 30
-
-
-def test_compact_missing_live_table_diagnosed(
-    spark, tmp_path, monkeypatch, epoch_index
-):
-    """Hadoop delete returns false for a MISSING path too —
-    a live table that vanishes out-of-band right at the swap must
-    surface as the missing-table diagnosis, not as a misleading
-    'could not delete'."""
-    import etl_bom_radiation_spark.lsh_index as L
-    from tests.conftest import LyingFS
-
-    d = str(tmp_path / "idx")
-    epoch_index(d)
-    for lo in (100, 200):  # fold generations so compaction has work
-        L.admit_batch(
-            spark,
-            d,
-            _docs_frame(
-                spark,
-                [(lo + i, f"novel doc n{lo + i} topic u{i} unique words here")
-                 for i in range(5)],
-            ),
-        )
-    real_fs = L._fs
-
-    class _VanishFS(LyingFS):
-        """delete(live): the dir vanishes (really deleted) but the call
-        reports failure — the 'someone else deleted it' ambiguity."""
-
-        def delete(self, path, recursive):
-            if "bands.parquet" in path.getName():
-                self._fs.delete(path, recursive)
-                return False
-            return self._fs.delete(path, recursive)
-
-    state: dict = {}
-
-    def patched(s, i):
-        fs, p, jvm = real_fs(s, i)
-        state.setdefault("fs", _VanishFS(fs))
-        return state["fs"], p, jvm
-
-    monkeypatch.setattr(L, "_fs", patched)
-    with pytest.raises(RuntimeError, match="vanished at the swap"):
-        L.compact_lsh_index(spark, d, files_per_table=1)
-    # the remediation the message promises holds: an honest re-run
-    # resumes from the completed temp (_repair_compaction promotes it)
-    monkeypatch.setattr(L, "_fs", real_fs)
-    L.compact_lsh_index(spark, d, files_per_table=1)
-    fs, _, _ = real_fs(spark, d)
-    bands_p = spark._jvm.org.apache.hadoop.fs.Path(f"{d}/bands.parquet")
-    assert fs.exists(bands_p)
-
-
-def test_vacuum_orphans_in_encodable_path(spark, tmp_path, monkeypatch, epoch_index):
-    """vacuum's file deletes must survive URI-encodable characters in
-    the index path (ADVICE r9): ``input_file_name()`` yields a
-    percent-ENCODED URI, which fed raw to ``Path(String)`` names a file
-    that does not exist — ``fs.delete`` returns false, the orphan stays,
-    yet ``removed`` counted its rows, so the caller would retry the
-    crashed batch and double-append.  The fix decodes via java.net.URI
-    and raises on a false delete."""
-    import etl_bom_radiation_spark.lsh_index as L
-
-    d = str(tmp_path / "work space" / "idx")  # encodes to work%20space
-    epoch_index(d)
-    monkeypatch.setattr(
-        L,
-        "_write_meta",
-        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("boom")),
-    )
-    with pytest.raises(RuntimeError, match="boom"):
-        L.update_lsh_index(
-            spark, d, _docs_frame(spark, [(10, "novel doc about space curves")])
-        )
-    monkeypatch.undo()
-
-    assert spark.read.parquet(f"{d}/bands.parquet").filter("doc_id > 2").count() > 0
-    assert L.vacuum_lsh_index(spark, d) > 0
-    # the orphan FILES are really gone (the encoded-path bug left them on
-    # disk while reporting their rows as removed)
-    assert spark.read.parquet(f"{d}/bands.parquet").filter("doc_id > 2").count() == 0
-    assert spark.read.parquet(f"{d}/hsets.parquet").filter("doc_id > 2").count() == 0
-    assert L.vacuum_lsh_index(spark, d) == 0
 
 
 @pytest.mark.slow
@@ -1959,7 +1915,7 @@ print("RESULT:" + json.dumps(rows))
     assert lines, f"replay subprocess failed:\n{out.stdout}\n{out.stderr[-2000:]}"
     got = [tuple(r) for r in _json.loads(lines[0][len("RESULT:"):])]
     assert got == want  # verdicts reproduce bit-identically across processes
-    assert _index_rows(spark, d) == _index_rows(spark, ctrl)
+    assert index_rows(spark, d) == index_rows(spark, ctrl)
 
 
 def test_split_batch_refuses_overflowing_id_span(spark, tmp_path):
@@ -1990,7 +1946,7 @@ def test_split_batch_refuses_overflowing_id_span(spark, tmp_path):
 def test_admit_batch_subbatches_share_one_committed_read(
     spark, tmp_path, monkeypatch, epoch_index
 ):
-    """Generation reuse (VERDICT r12 #6): a sub-batched admission reads
+    """Generation reuse: a sub-batched admission reads
     the committed index tables ONCE (the _IndexView pin), not once per
     sub-batch cycle — each later cycle sees base ∪ committed deltas.
     Without the view this admission made one bands+hsets read per probe
@@ -2003,9 +1959,9 @@ def test_admit_batch_subbatches_share_one_committed_read(
     reads = []
     real = L._committed
 
-    def counting(spark_, index_dir_, name, hw):
+    def counting(spark_, index_dir_, name, gens):
         reads.append(name)
-        return real(spark_, index_dir_, name, hw)
+        return real(spark_, index_dir_, name, gens)
 
     monkeypatch.setattr(L, "_committed", counting)
     out = _kp(L.admit_batch(spark, d, _docs_frame(spark, _EPOCH_BATCH), max_docs=2))
@@ -2017,17 +1973,18 @@ def test_index_schema_is_the_declared_constant(spark, tmp_path, epoch_index):
     """Every index read passes ``INDEX_SCHEMAS`` instead of inferring a
     schema from a footer, so the constant must be exactly what the index
     writes — field by field, names and types, in order — in every data
-    file: the build's and a fold's appends."""
+    file: the build's generation and a fold's."""
     import etl_bom_radiation_spark.lsh_index as L
 
     d = epoch_index(tmp_path / "idx")
     L.admit_batch(spark, d, _docs_frame(spark, _EPOCH_BATCH))
+    gens = L._read_meta(spark, d)["gens"]
     for name in L.INDEX_SCHEMAS:
         declared = [
             (f.name, f.dataType.simpleString())
-            for f in L._table(spark, d, name).schema
+            for f in L._committed(spark, d, name, gens).schema
         ]
-        files = sorted((tmp_path / "idx" / f"{name}.parquet").glob("part-*"))
+        files = sorted((tmp_path / "idx" / f"{name}.parquet").glob("gen=*/part-*"))
         assert len(files) > 1  # the build's and the fold's
         for f in files:
             written = spark.read.parquet(str(f)).schema

@@ -508,6 +508,7 @@ def test_stream_lsh_admission_exactly_once_across_restart(spark, tmp_path):
     import pytest
 
     import etl_bom_radiation_spark.lsh_index as L
+    from tests.conftest import index_rows
 
     seed = [
         (1, "seed doc about broadcast joins and shuffle pruning"),
@@ -536,17 +537,6 @@ def test_stream_lsh_admission_exactly_once_across_restart(spark, tmp_path):
         .select("doc_id", "decision")
         .collect()
     )
-
-    def _rows(d):
-        bands = sorted(
-            (r.doc_id, r.band, r.bk)
-            for r in spark.read.parquet(f"{d}/bands.parquet").collect()
-        )
-        hsets = sorted(
-            (r.doc_id, tuple(sorted(r.hs)))
-            for r in spark.read.parquet(f"{d}/hsets.parquet").collect()
-        )
-        return bands, hsets
 
     epochs, log = [], []
     real_fold = L._fold_frames
@@ -606,4 +596,5 @@ def test_stream_lsh_admission_exactly_once_across_restart(spark, tmp_path):
 
     assert epochs == [0, 0]  # redelivered with the SAME epoch id
     assert sorted(log) == want  # verdicts reproduce (crashed run logged none)
-    assert _rows(idx) == _rows(ctrl)  # exactly-once: no skip, no double-fold
+    # exactly-once: no skip, no double-fold
+    assert index_rows(spark, idx) == index_rows(spark, ctrl)

@@ -668,11 +668,11 @@ def probe_main(mult: int) -> int:
 
 
 def split_main(mult: int) -> int:
-    """``--split`` (VERDICT r13 #6): price the ``_IndexView`` at INDEX
-    scale, not just sandbox.  Times ``admit_batch`` k=4 (the bench's
-    ``lsh_admit_split4`` shape) of a fixed batch into a 1x vs Mx
-    committed index, with the shipped view vs a no-cache emulation of
-    the pre-r13 behavior (every sub-batch cycle re-opens and re-scans
+    """``--split``: price the ``_IndexView`` at INDEX scale, not just
+    sandbox.  Times ``admit_batch`` k=4 (the bench's ``lsh_admit_split4``
+    shape) of a fixed batch into a 1x vs Mx committed index, with the
+    shipped view vs a no-cache emulation of the behavior before the
+    view (every sub-batch cycle re-opens and re-scans
     the committed tables via a fresh meta + _committed read — result-
     identical under the single-writer contract, since a committed
     re-read after a fold equals base ∪ deltas).
@@ -688,7 +688,7 @@ def split_main(mult: int) -> int:
     from etl_bom_radiation_spark.session import get_spark
 
     class _NoCacheView:
-        """Pre-r13 emulation: no pinned base, no deltas — ``current()``
+        """The behavior before the view: no pinned base, no deltas — ``current()``
         is a fresh committed read (meta + both parquet opens) each time,
         exactly what every sub-batch cycle paid before the view."""
 
@@ -696,10 +696,10 @@ def split_main(mult: int) -> int:
             self._spark, self._dir = spark, index_dir
 
         def current(self):
-            hw = LI._read_meta(self._spark, self._dir)["max_doc_id"]
+            gens = LI._read_meta(self._spark, self._dir)["gens"]
             return (
-                LI._committed(self._spark, self._dir, "bands", hw),
-                LI._committed(self._spark, self._dir, "hsets", hw),
+                LI._committed(self._spark, self._dir, "bands", gens),
+                LI._committed(self._spark, self._dir, "hsets", gens),
             )
 
         def add_delta(self, bands, hsets):
